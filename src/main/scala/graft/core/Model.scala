@@ -117,9 +117,6 @@ final class Element(
     if (text.isEmpty) text = line.text
     else text = text + " " + line.text
 
-  /** Unconditional space-join — ElementText::append_line, entities.rs:139-142. */
-  def appendLineText(t: String): Unit = text = text + " " + t
-
   override def toString: String =
     s"Element($id, $layoutBlockId, $kind, p$pageId, '$text', $bbox)"
 }

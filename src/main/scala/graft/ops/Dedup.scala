@@ -675,12 +675,11 @@ object Dedup {
     * Iterative dataflow MUST materialize per round: a round references the
     * previous labels more than once, so a lazy unrolled plan re-derives the
     * (expensive) edge join 2^rounds times — measured 419 s vs ~5 s for the
-    * same answer. So: the edge list is persisted once, each round's labels
-    * (and the pre-jump propagation result, which the jump self-join reads
-    * twice) are eagerly localCheckpoint'ed — they hold only the CLUSTERED
-    * docs, a tiny fraction of the corpus — and the edge cache is released
-    * before returning. Superseded round blocks are freed by Spark's
-    * ContextCleaner as they go out of scope.
+    * same answer. So ([[Fixpoint]]): the edge list is checkpointed once,
+    * each round's labels (and the pre-jump propagation result, which the
+    * jump self-join reads twice) are eagerly localCheckpoint'ed — they hold
+    * only the CLUSTERED docs, a tiny fraction of the corpus. Superseded
+    * round blocks are freed by Spark's ContextCleaner once garbage.
     *
     * NON-CONVERGENCE IS AN ERROR: if `maxRounds` rounds pass without a
     * fixpoint this throws IllegalStateException rather than returning
@@ -697,41 +696,35 @@ object Dedup {
     * the convergence-rate specs).
     */
   private[graft] def ccWithRounds(edges: DataFrame, maxRounds: Int,
-      pointerJump: Boolean): (DataFrame, Int) = {
+      pointerJump: Boolean): (DataFrame, Int) =
     // materialize the PAIR LIST once before mirroring it: the two union
     // branches below would otherwise each evaluate the caller's edge feeder
     // (a banded-LSH or ngram-Jaccard subtree costing seconds at any scale)
     // when adj first materializes — measured as a full duplicate feeder run
     // in qd6/qd8/qd10/qd19/qd22 (guide §2.4: reuse one result). The pair
     // list is the small decision table of the dedup pipeline (ids only),
-    // exactly what the guide says to materialize.
-    val e = edges.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    // the pair list is already materialized, so this count is a cheap block
-    // scan — it sizes the rounds' shuffle parallelism (IterTuning: derived
-    // from the measured state, not the session constant; the label tables
-    // hold only the CLUSTERED docs, usually orders of magnitude under the
-    // corpus, so the session's corpus-sized partition count was pure
-    // scheduling latency per round)
-    val eCount = e.count()
-    // coalesce the mirrored adjacency to the state-derived partition count
-    // BEFORE checkpointing: `e` inherits the feeder's layout (qd6's feeder
-    // pins a 32-wide repartition for its verify join, so the union carried
-    // 64 partitions), and every round's join stage would otherwise run one
-    // task per inherited partition regardless of state size (guide §2.2 —
-    // partitioning derived from measured input, not from the feeder's
-    // unrelated layout). coalesce is shuffle-free.
-    val adj = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .coalesce(IterTuning.partitionsFor(e.sparkSession, eCount))
-      .localCheckpoint(true)
-    try {
-      IterTuning.withStateSized(e.sparkSession, eCount) {
-      var labels = adj.select(col("src").as("doc_id"))
+    // exactly what the guide says to materialize. Its count sizes the
+    // rounds' shuffle parallelism: the label tables hold only the CLUSTERED
+    // docs, usually orders of magnitude under the corpus, so the session's
+    // corpus-sized partition count was pure scheduling latency per round.
+    Fixpoint.sized(edges.select(col("doc_a"), col("doc_b"))) { (e, eCount) =>
+      // coalesce the mirrored adjacency to the state-derived partition
+      // count BEFORE checkpointing: `e` inherits the feeder's layout (qd6's
+      // feeder pins a 32-wide repartition for its verify join, so the union
+      // carried 64 partitions), and every round's join stage would
+      // otherwise run one task per inherited partition regardless of state
+      // size (guide §2.2 — partitioning derived from measured input, not
+      // from the feeder's unrelated layout). coalesce is shuffle-free.
+      val adj = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+        .coalesce(Fixpoint.partitionsFor(e.sparkSession, eCount))
+        .localCheckpoint(true)
+      val labels0 = adj.select(col("src").as("doc_id"))
         .distinct().withColumn("label", col("doc_id"))
         .localCheckpoint(true)
-      var converged = false
-      var round = 0
-      while (!converged && round < maxRounds) {
+      val growth = if (pointerJump) "log2(diameter)" else "diameter"
+      Fixpoint.converge(s"connectedComponents (pointerJump=$pointerJump, " +
+          s"rounds grow as $growth; raise maxRounds)", maxRounds, labels0) { labels =>
         val nbrMin = adj.join(labels, adj("dst") === labels("doc_id"))
           .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
         // `prev` rides along so convergence is a filter on the checkpointed
@@ -739,7 +732,7 @@ object Dedup {
         val prop0 = labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
           .select(col("doc_id"), col("label").as("prev"),
             least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-        val labelsOut = if (pointerJump) {
+        val (labelsOut, converged) = if (pointerJump) {
           // materialize before the self-join reads prop twice
           val prop = prop0.localCheckpoint(true)
           // convergence is decidable on the PRE-jump table: labels are
@@ -750,32 +743,22 @@ object Dedup {
           // the jump, but the FINAL round then skips the jump's join +
           // checkpoint jobs entirely (r6 — round latency is the cost unit
           // at small state; results identical at any state).
-          converged = prop.filter(col("label") =!= col("prev")).isEmpty
-          if (converged) prop
+          val converged = prop.filter(col("label") =!= col("prev")).isEmpty
+          if (converged) (prop, true)
           else {
             val links = prop.select(col("doc_id").as("j_id"), col("label").as("j_label"))
-            prop.join(links, prop("label") === links("j_id"), "left")
+            (prop.join(links, prop("label") === links("j_id"), "left")
               .select(col("doc_id"), col("prev"),
                 least(col("label"), coalesce(col("j_label"), col("label"))).as("label"))
-              .localCheckpoint(true)
+              .localCheckpoint(true), false)
           }
         } else {
           val next = prop0.localCheckpoint(true)
-          converged = next.filter(col("label") =!= col("prev")).isEmpty
-          next
+          (next, next.filter(col("label") =!= col("prev")).isEmpty)
         }
-        labels = labelsOut.select(col("doc_id"), col("label"))
-        round += 1
+        (labelsOut.select(col("doc_id"), col("label")), !converged)
       }
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents did not reach a fixpoint in $maxRounds rounds " +
-          "(labels would be silently under-merged); raise maxRounds — with " +
-          s"pointerJump=$pointerJump rounds grow as " +
-          (if (pointerJump) "log2(diameter)" else "diameter"))
-      (labels, round)
-      }
-    } finally adj.unpersist()
-  }
+    }
 
   /** Near-duplicate CLUSTERS: connected components over the near-dup pair
     * graph. Pairs alone both over- and under-remove (near-dup is transitive

@@ -55,67 +55,59 @@ object LinkGraph {
     * dst with map-side partials (a host with 10^8 in-links combines
     * before the shuffle); the node table re-attaches with a left join so
     * in-link-free hosts keep the teleport mass. ITERATIVE DATAFLOW
-    * MATERIALIZES PER ROUND (the qd6 invariant): each round's rank table
-    * is localCheckpoint(true)-ed and its predecessor released, so lineage
-    * stays O(1) and nothing re-derives the base 2^k times. The edge list
-    * (reused every round) is eagerly checkpointed once.
+    * MATERIALIZES PER ROUND (the qd6 invariant, owned by [[Fixpoint]]):
+    * the rank table is localCheckpoint(true)-ed every two rounds, so
+    * lineage stays O(1) and nothing re-derives the base 2^k times. The
+    * edge list (reused every round) is eagerly checkpointed once.
     */
-  def hostPagerank(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val base = lit(150000000000L) // floor(0.15 * 10^12) teleport mass
-    val edges = docs(spark, dir)
+  def hostPagerank(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    Fixpoint.sized(plantedEdges(spark, dir)) { (edges, _) =>
+      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
+        .localCheckpoint(true) // host-sized; outlives the sized scope, so
+      // the final lazy join reads it instead of re-scanning the corpus
+      val nodes = deg.select(col("src").as("node")).localCheckpoint(true)
+      // degree-annotated edge list materialized ONCE (r6): leaving it lazy
+      // re-ran the deg aggregate + join from the checkpointed edges inside
+      // every round's job
+      val withDeg = edges.join(deg, "src").localCheckpoint(true)
+      // the rank table is referenced exactly ONCE per step, so two rounds
+      // chain per materialization (the qd6 invariant guards MULTI-reference
+      // rounds; a single-reference chain only deepens the plan linearly),
+      // halving the per-round job+checkpoint overhead that dominates at
+      // small host counts while keeping lineage O(1)
+      Fixpoint.iterate(nodes.select(col("node"), lit(1000000000000L).as("r")),
+          k, chain = 2)(
+          pagerankStep(withDeg, nodes, lit(150000000000L))) // floor(0.15 * 10^12)
+        .join(deg.withColumnRenamed("src", "node"), "node")
+        .select(col("node").as("host_id"), col("od").as("out_deg"),
+          col("r").as("rank_fp"))
+    }
+
+  /** The planted directed host graph qg1/qg8/qg9/qg11 share (see the object
+    * doc): src = doc_id mod 32, dst = (src*5 + 1 + doc_id mod 3) mod 32,
+    * deduplicated. Lazy — each caller materializes it once.
+    */
+  private def plantedEdges(spark: SparkSession, dir: String): DataFrame =
+    docs(spark, dir)
       .select((col("doc_id") % 32).as("src"),
         ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
       .distinct()
-      .localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager rank rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, eCount) {
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-        .localCheckpoint(true) // host-sized; outlives the finally, so the
-      // final lazy join reads it instead of re-scanning the corpus
-      val nodes = deg.select(col("src").as("node")).localCheckpoint(true)
-      // degree-annotated edge list materialized ONCE (r6): leaving it lazy
-      // re-ran the deg aggregate + join from the persisted edges inside
-      // every round's job
-      val withDeg = edges.join(deg, "src").localCheckpoint(true)
-      // one PageRank update as a lazy transform — the rank table is
-      // referenced exactly ONCE per round, so two rounds may chain between
-      // materializations without any re-derivation blowup (the qd6 invariant
-      // guards MULTI-reference rounds; a single-reference chain only deepens
-      // the plan linearly). Materializing every second round halves the
-      // per-round job+checkpoint overhead that dominates at small host
-      // counts while keeping lineage O(1).
-      def step(r: DataFrame): DataFrame = {
-        val contrib = withDeg
-          .join(r.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst"))
-          .agg(sum(expr("r DIV od")).as("m"))
-        nodes
-          .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-          .select(col("node"),
-            (base + coalesce(expr("85 * m DIV 100"), lit(0L))).as("r"))
-      }
-      // the FINAL round's checkpoint stays pinned because the returned
-      // (lazy) DataFrame reads from it — unpersisting a lineage-truncated
-      // checkpoint before the caller materializes would make the result
-      // unrecomputable, not just slow
-      var ranks = nodes.select(col("node"), lit(1000000000000L).as("r"))
-        .localCheckpoint(true)
-      var done = 0
-      while (done < k) {
-        val take = math.min(2, k - done)
-        val next = (1 to take).foldLeft(ranks)((r, _) => step(r))
-          .localCheckpoint(true)
-        ranks = next
-        done += take
-      }
-      ranks.join(deg.withColumnRenamed("src", "node"), "node")
-        .select(col("node").as("host_id"), col("od").as("out_deg"),
-          col("r").as("rank_fp"))
-      }
-    }
+
+  /** One fixed-point PageRank update (qg1/qg11), lazy: contributions
+    * floor(r/outdeg) summed per dst over `withDeg` (src, dst, od), the node
+    * table re-attached so in-link-free hosts keep `teleport` (a column of
+    * `nodes`' row), and the damped sum added as floor(85 * m / 100).
+    */
+  private def pagerankStep(withDeg: DataFrame, nodes: DataFrame,
+      teleport: Column)(r: DataFrame): DataFrame = {
+    val contrib = withDeg
+      .join(r.withColumnRenamed("node", "src"), "src")
+      .groupBy(col("dst"))
+      .agg(sum(expr("r DIV od")).as("m"))
+    nodes
+      .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
+      .select(col("node"),
+        (teleport + coalesce(expr("85 * m DIV 100"), lit(0L))).as("r"))
   }
 
   /** qg2: connected components over a planted host graph — the
@@ -147,8 +139,8 @@ object LinkGraph {
     * host's neighbor sketches before the shuffle, shipping one m-byte
     * state per key, which is the whole reason HyperBall scales to
     * 10^11-edge webgraphs on one machine in the paper. Per-round
-    * materialization and edge-list persistence follow the qg1/qd6
-    * iterative-dataflow invariant.
+    * materialization and the once-checkpointed edge list follow the
+    * qg1/qd6 iterative-dataflow invariant.
     *
     * Registers are pure integer math on the portable 60-bit md5 lane, so
     * the DuckDB oracle replays the ENTIRE iteration (init + `rounds`
@@ -161,7 +153,20 @@ object LinkGraph {
     * register) with zero registers included (the qt27 shape).
     */
   def hostHyperball(spark: SparkSession, dir: String, rounds: Int = 4,
-      m: Int = 64): DataFrame = {
+      m: Int = 64): DataFrame =
+    hyperballs(spark, dir, rounds, m).last
+      .select(col("node").as("host_id"),
+        posexplode(col("sk")).as(Seq("bucket", "register")))
+      .select(col("host_id"), col("bucket").cast("int").as("bucket"),
+        col("register").cast("int").as("register"))
+
+  /** The qg3/qg4/qg10 register loop over the qg2 chain graph (both
+    * orientations): ball(v, 0) is the sketch of {v}; each round unions a
+    * node's ball with its in-neighbors' balls and merges register-wise.
+    * Returns every round's materialized ball table, ball(., 0) first.
+    */
+  private def hyperballs(spark: SparkSession, dir: String, rounds: Int,
+      m: Int): Vector[DataFrame] = {
     import graft.functions.GraftFunctions
     // e0 derives from the ONE materialized host scan (one row per host, so
     // no distinct before the union — the post-union distinct covers both
@@ -170,35 +175,24 @@ object LinkGraph {
       .select(col("ch").as("a"),
         when(col("ch").isin(8L, 19L, 44L, 63L), col("ch"))
           .otherwise(col("ch") + 1).as("b"))
-    val edges = e0.select(col("a").as("src"), col("b").as("dst"))
+    val e = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .distinct().localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager merge rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, eCount) {
-      // ball(v, 0): the sketch of {v} itself — one single-row group per host
-      var ball = edges.select(col("src").as("node")).distinct()
+      .distinct()
+    Fixpoint.sized(e) { (edges, _) =>
+      val ball0 = edges.select(col("src").as("node")).distinct()
         .groupBy(col("node"))
         .agg(GraftFunctions.hllSketch(col("node").cast("string"), m).as("sk"))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val contrib = ball.union(
+      // chain = 1: each step sees the previous materialized ball, in order
+      val balls = Vector.newBuilder[DataFrame]
+      val last = Fixpoint.iterate(ball0, rounds) { ball =>
+        balls += ball
+        ball.union(
           edges.join(ball.withColumnRenamed("node", "src"), "src")
             .select(col("dst").as("node"), col("sk")))
-        val next = contrib.groupBy(col("node"))
+          .groupBy(col("node"))
           .agg(GraftFunctions.hllMerge(col("sk"), m).as("sk"))
-          .localCheckpoint(true)
-        ball.unpersist() // predecessor released once successor materialized
-        ball = next
       }
-      ball
-        .select(col("node").as("host_id"),
-          posexplode(col("sk")).as(Seq("bucket", "register")))
-        .select(col("host_id"), col("bucket").cast("int").as("bucket"),
-          col("register").cast("int").as("register"))
-      }
+      (balls += last).result()
     }
   }
 
@@ -237,7 +231,6 @@ object LinkGraph {
   private def hyperballRoundEstimates(spark: SparkSession, dir: String,
       rounds: Int, m: Int): DataFrame = {
     require(m == 64, "estimate constants are pinned for m = 64")
-    import graft.functions.GraftFunctions
     val cNum = 0.709 * m * m * math.pow(2.0, 55) // alpha_64 * m^2 * 2^55
     def estOf(ball: DataFrame, r: Int): DataFrame =
       ball.select(col("node"),
@@ -249,39 +242,10 @@ object LinkGraph {
           round(when(col("raw") <= lit(2.5 * m) && col("v") > 0,
             lit(m.toDouble) * log(lit(m.toDouble) / col("v")))
             .otherwise(col("raw")), 9).as(s"e$r"))
-        .localCheckpoint(true) // 64 rows; lets the source ball release
-    // e0 from the ONE materialized host scan (see observedHosts); one row
-    // per host, so the single post-union distinct suffices
-    val e0 = observedHosts(spark, dir, 64, "ch")
-      .select(col("ch").as("a"),
-        when(col("ch").isin(8L, 19L, 44L, 63L), col("ch"))
-          .otherwise(col("ch") + 1).as("b"))
-    val edges = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .distinct().localCheckpoint(true)
-    locally {
-      val eCount = edges.count()
-      IterTuning.withStateSized(spark, eCount) {
-      var ball = edges.select(col("src").as("node")).distinct()
-        .groupBy(col("node"))
-        .agg(GraftFunctions.hllSketch(col("node").cast("string"), m).as("sk"))
-        .localCheckpoint(true)
-      var ests = Vector(estOf(ball, 0))
-      for (r <- 1 to rounds) {
-        val contrib = ball.union(
-          edges.join(ball.withColumnRenamed("node", "src"), "src")
-            .select(col("dst").as("node"), col("sk")))
-        val next = contrib.groupBy(col("node"))
-          .agg(GraftFunctions.hllMerge(col("sk"), m).as("sk"))
-          .localCheckpoint(true)
-        ests = ests :+ estOf(next, r)
-        ball.unpersist()
-        ball = next
-      }
-      ball.unpersist()
-      ests.reduce(_.join(_, Seq("node")))
-      }
-    }
+        .localCheckpoint(true) // 64 rows; the estimate join reads no ball
+    hyperballs(spark, dir, rounds, m).zipWithIndex
+      .map { case (ball, r) => estOf(ball, r) }
+      .reduce(_.join(_, Seq("node")))
   }
 
   /** qg10: the graph-wide NEIGHBORHOOD FUNCTION and effective diameter —
@@ -440,8 +404,8 @@ object LinkGraph {
     * Scale shape (the qg1 iterative-dataflow invariant): the per-round vote
     * is one join of the label table against the edge list ON src (exchange
     * reuse across rounds) + two hash aggregates with map-side partials — a
-    * 10^8-in-degree host combines its votes before the shuffle; per-round
-    * localCheckpoint(true) with predecessor release keeps lineage O(1).
+    * 10^8-in-degree host combines its votes before the shuffle; a
+    * localCheckpoint(true) every two rounds keeps lineage O(1).
     *
     * Output: (host_id, community_id = converged label, community_size).
     */
@@ -451,7 +415,7 @@ object LinkGraph {
     val hosts = observedHosts(spark, dir, 64)
     def intra(off: Int) = hosts.select(col("h").as("src"),
       (col("h") - col("h") % 16 + (col("h") % 16 + off) % 16).as("dst"))
-    val edges = intra(1)
+    val e = intra(1)
       .union(intra(15))
       .union(intra(5))
       .union(hosts.select(col("h").as("src"), col("h").as("dst"))) // self-loop
@@ -462,12 +426,7 @@ object LinkGraph {
       // never produced (the qg1 non-source-contribution discipline), so a
       // partial corpus can't mint phantom vote targets
       .join(hosts.withColumnRenamed("h", "dst"), Seq("dst"), "left_semi")
-      .localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager vote rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, eCount) {
+    Fixpoint.sized(e) { (edges, _) =>
       // one synchronous vote round as a lazy transform; the label table is
       // referenced exactly ONCE per round, so two rounds chain per
       // materialization with zero re-derivation (the qg1 r6 rationale —
@@ -481,21 +440,14 @@ object LinkGraph {
           .as("vk"))
         .select(col("dst").as("node"),
           (lit(1048575L) - (col("vk") % lit(1048576L))).as("label"))
-      var labels = hosts.select(col("h").as("node"), col("h").cast("long").as("label"))
-        .localCheckpoint(true)
-      var done = 0
-      while (done < k) {
-        val take = math.min(2, k - done)
-        labels = (1 to take).foldLeft(labels)((l, _) => vote(l))
-          .localCheckpoint(true)
-        done += take
-      }
+      val labels = Fixpoint.iterate(
+        hosts.select(col("h").as("node"), col("h").cast("long").as("label")),
+        k, chain = 2)(vote)
       val sizes = labels.groupBy(col("label"))
         .agg(count(lit(1)).as("community_size"))
       labels.join(sizes, Seq("label"))
         .select(col("node").as("host_id"), col("label").as("community_id"),
           col("community_size"))
-      }
     }
   }
 
@@ -517,11 +469,11 @@ object LinkGraph {
     * the pendant pair vanishes in wave 1.
     *
     * Scale shape (the qd6/qg1 iterative-dataflow invariant): per round two
-    * left-semi joins of the persisted both-direction edge list against the
+    * left-semi joins of the checkpointed both-direction edge list against the
     * shrinking alive set + one hash aggregate with map-side partials;
-    * per-round localCheckpoint(true) with predecessor release; alive only
-    * shrinks, so count equality IS set equality and the loop THROWS past
-    * `maxRounds` (non-convergence is impossible for peeling — the bound
+    * per-round localCheckpoint(true); alive only shrinks, so count
+    * equality IS set equality and the loop THROWS past `maxRounds`
+    * (non-convergence is impossible for peeling — the bound
     * guards a mis-planted graph). Rounds = peel depth, the same bound the
     * distributed coreness literature accepts.
     *
@@ -558,15 +510,10 @@ object LinkGraph {
       .join(hosts.withColumnRenamed("h", "src"), Seq("src"), "left_semi")
       .join(hosts.withColumnRenamed("h", "dst"), Seq("dst"), "left_semi")
       .select(col("src"), col("dst"))
-    val eb = raw
+    val eb0 = raw
       .union(raw.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager peel waves
-      // (IterTuning — the qg12 rationale)
-      val ebCount = eb.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, ebCount) {
+    Fixpoint.sized(eb0) { (eb, _) =>
       // one synchronous peel wave per materialization. (r6 note: chaining
       // two waves per checkpoint was tried and MEASURED SLOWER — the wave
       // references its input twice, so the batched plan pays a bounded 2x
@@ -577,27 +524,18 @@ object LinkGraph {
         .join(a.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("v")
-      var alive = hosts.select(col("h").as("v")).localCheckpoint(true)
-      var n = alive.count()
-      var converged = false
-      var round = 0
-      while (!converged) {
-        round += 1
-        require(round <= maxRounds,
-          s"k-core peeling did not converge in $maxRounds rounds")
-        val next = wave(alive).localCheckpoint(true)
+      // alive only shrinks, so count equality IS set equality
+      val alive0 = hosts.select(col("h").as("v")).localCheckpoint(true)
+      val ((alive, _), _) = Fixpoint.converge("k-core peeling", maxRounds,
+          (alive0, alive0.count())) { case (a, n) =>
+        val next = wave(a).localCheckpoint(true)
         val m = next.count()
-        alive.unpersist()
-        alive = next
-        converged = m == n
-        n = m
+        ((next, m), m != n)
       }
-      // final core degrees; the last checkpoint stays pinned because the
-      // returned lazy DataFrame reads from it (the qg1 discipline)
+      // final core degrees, lazy over the last checkpoint
       eb.join(alive.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
         .join(alive.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
         .groupBy(col("src").as("host_id")).agg(count(lit(1)).as("core_deg"))
-      }
     }
   }
 
@@ -624,10 +562,12 @@ object LinkGraph {
     * crossJoin against a broadcast 1-row aggregate (the N/V/max_id
     * discipline) — no driver collect in the loop.
     *
-    * Iterative-dataflow invariant (qd6/qg1): per-round
-    * localCheckpoint(true) with predecessor release; the reused edge list
-    * and node table checkpoint once (the final a/h checkpoints stay
-    * pinned — the returned lazy DataFrame reads them).
+    * Iterative-dataflow invariant (qd6/qg1): each half-update
+    * localCheckpoint(true)s its unscaled sums; the reused edge list and node
+    * table checkpoint once. A round is TWO materializations with a lazy
+    * rescale between them, so it runs its own fixed k-round loop inside
+    * [[Fixpoint.sized]] rather than through [[Fixpoint.iterate]] (whose
+    * one checkpoint per step would add a job per round).
     *
     * Output: (host_id, auth_fp, hub_fp) after k rounds.
     */
@@ -635,23 +575,15 @@ object LinkGraph {
     // the ONE corpus scan, materialized: nodes and the semi-join guard below
     // both read it (bounded by the planted pattern — an edge table, not a
     // corpus; the observedHosts rationale)
-    val edges0 = docs(spark, dir)
-      .select((col("doc_id") % 32).as("src"),
-        ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
-      .distinct()
-      .localCheckpoint(true)
+    val edges0 = plantedEdges(spark, dir).localCheckpoint(true)
     val nodes = edges0.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
     // graph over OBSERVED hosts (the qg6 discipline): a partial corpus
     // cannot mint authority targets it never crawled as hosts
-    val edges = edges0
+    val observed = edges0
       .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-      .select(col("src"), col("dst")).localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager half-update rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (tables are already materialized)
-      IterTuning.withStateSized(spark, eCount) {
+      .select(col("src"), col("dst"))
+    Fixpoint.sized(observed) { (edges, _) =>
       // one half-update: sum `prevCol` of `prev` over edges joined on
       // `joinKey`, grouped to `groupKey`, re-attached to the full node
       // table (in-link-free hosts keep 0), then max-rescaled
@@ -677,17 +609,12 @@ object LinkGraph {
         .localCheckpoint(true)
       var auth: DataFrame = null
       for (_ <- 1 to k) {
-        val nextAuth = halfUpdate(hub, "h", "src", "dst", "a")
-        if (auth != null) auth.unpersist()
-        auth = nextAuth
-        val nextHub = halfUpdate(auth, "a", "dst", "src", "h")
-        hub.unpersist()
-        hub = nextHub
+        auth = halfUpdate(hub, "h", "src", "dst", "a")
+        hub = halfUpdate(auth, "a", "dst", "src", "h")
       }
       auth.join(hub, "node")
         .select(col("node").as("host_id"), col("a").as("auth_fp"),
           col("h").as("hub_fp"))
-      }
     }
   }
 
@@ -709,59 +636,29 @@ object LinkGraph {
     * Scale shape is qg1's verbatim: one rank-against-edges join ON src
     * per round (exchange reuse), hash aggregate on dst with map-side
     * partials, node table re-attach so contribution-free hosts keep
-    * their teleport term; per-round localCheckpoint(true) with
-    * predecessor release, reused edge list checkpointed once (the qd6
-    * iterative-dataflow invariant).
+    * their teleport term, and the same [[pagerankStep]] with the seed
+    * teleport column; rank table checkpointed every two rounds, reused
+    * edge list checkpointed once (the qd6 iterative-dataflow invariant).
     *
     * Output: (host_id, is_seed, rank_fp).
     */
-  def hostSeedPagerank(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val edges = docs(spark, dir)
-      .select((col("doc_id") % 32).as("src"),
-        ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
-      .distinct()
-      .localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager rank rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, eCount) {
+  def hostSeedPagerank(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    Fixpoint.sized(plantedEdges(spark, dir)) { (edges, _) =>
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-      // host-sized checkpoint: outlives the finally, so the final lazy join
-      // reads it instead of re-scanning the corpus (the qg1 r6 rationale)
+      // host-sized checkpoint: outlives the sized scope, so the final lazy
+      // join reads it instead of re-scanning the corpus (the qg1 r6 rationale)
       val nodes = deg.select(col("src").as("node"),
         col("src").isin(1L, 9L, 17L).as("is_seed")).localCheckpoint(true)
       // degree-annotated edge list materialized ONCE (r6, the qg1 rationale)
       val withDeg = edges.join(deg, "src").localCheckpoint(true)
       val teleport = when(col("is_seed"), lit(150000000000L)).otherwise(lit(0L))
-      // one update as a lazy transform; the rank table is referenced ONCE
-      // per round, so two rounds chain per materialization (the qg1 r6
-      // rationale: halve the checkpoint-job overhead, lineage stays O(1))
-      def step(r: DataFrame): DataFrame = {
-        val contrib = withDeg
-          .join(r.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst"))
-          .agg(sum(expr("r DIV od")).as("m"))
-        nodes
-          .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-          .select(col("node"),
-            (teleport + coalesce(expr("85 * m DIV 100"), lit(0L))).as("r"))
-      }
-      var ranks = nodes.select(col("node"),
-        when(col("is_seed"), lit(1000000000000L)).otherwise(lit(0L)).as("r"))
-        .localCheckpoint(true)
-      var done = 0
-      while (done < k) {
-        val take = math.min(2, k - done)
-        ranks = (1 to take).foldLeft(ranks)((r, _) => step(r))
-          .localCheckpoint(true)
-        done += take
-      }
-      ranks.join(nodes, "node")
+      // two single-reference steps chain per materialization (qg1)
+      Fixpoint.iterate(nodes.select(col("node"),
+          when(col("is_seed"), lit(1000000000000L)).otherwise(lit(0L)).as("r")),
+          k, chain = 2)(pagerankStep(withDeg, nodes, teleport))
+        .join(nodes, "node")
         .select(col("node").as("host_id"), col("is_seed"), col("r").as("rank_fp"))
-      }
     }
-  }
 
   /** qg9: host-graph MIXING metrics — edge reciprocity and degree
     * assortativity (Newman 2002, PRL 89.208701), the two structural-health
@@ -796,11 +693,7 @@ object LinkGraph {
   def hostMixing(spark: SparkSession, dir: String): DataFrame = {
     // the ONE corpus scan, materialized: nodes, the semi guard, counts and
     // the reciprocity legs all read it (the observedHosts rationale)
-    val e0 = docs(spark, dir)
-      .select((col("doc_id") % 32).as("src"),
-        ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
-      .distinct()
-      .localCheckpoint(true)
+    val e0 = plantedEdges(spark, dir).localCheckpoint(true)
     val nodes = e0.select(col("src").as("node")).distinct()
     val e = e0
       .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
@@ -858,8 +751,8 @@ object LinkGraph {
     * qd6 non-convergence guard); real webgraphs sit at diameter ≈ tens
     * (the qg10 HyperANF evidence) with trim+coloring converging in a few
     * iterations. ITERATIVE DATAFLOW MATERIALIZES PER ROUND (the qd6
-    * invariant): every color/mark table localCheckpoint(true)s and its
-    * predecessor releases; change detection is a 1-row count, never a
+    * invariant): every color/mark table localCheckpoint(true)s;
+    * change detection is a 1-row count, never a
     * collect of node state.
     *
     * The planted graph (doc_id mod 32 indexes a fixed 32-edge pattern —
@@ -884,102 +777,89 @@ object LinkGraph {
     val dsts = Seq[Long](1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 8,
       20, 21, 22, 23, 20, 24, 25, 26, 27, 24, 29, 28, 30, 32, 34, 31)
     val idx = (col("doc_id") % 32).cast("int") + 1
-    val edges = docs(spark, dir).select(
+    val planted = docs(spark, dir).select(
       element_at(typedlit(srcs), idx).as("src"),
       element_at(typedlit(dsts), idx).as("dst"))
-      .distinct().localCheckpoint(true)
-    locally {
-      // the whole peel loop is eager (checkpoint-per-round), so it runs
-      // under state-sized shuffle parallelism (IterTuning: derived from the
-      // measured edge count, not the session constant — guide §2.2); the
-      // final lazy role projection plans under the session conf. Measured:
-      // 325 jobs -> 137 for the planted bow-tie (the AQE per-stage jobs and
-      // 32-way label shuffles were pure scheduling latency at this state
-      // size).
-      val eCount = edges.count()
-      IterTuning.withStateSized(spark, eCount) {
+      .distinct()
+    // the whole peel loop is eager (checkpoint-per-round), so it runs under
+    // state-sized shuffle parallelism (derived from the measured edge count,
+    // not the session constant — guide §2.2); the final lazy role
+    // projection plans under the session conf. Measured: 325 jobs -> 137 for
+    // the planted bow-tie (the AQE per-stage jobs and 32-way label shuffles
+    // were pure scheduling latency at this state size).
+    Fixpoint.sized(planted) { (edges, _) =>
+      // grow `seed` (one node column) by `via`-edge reachability — backward
+      // follows dst -> src — until the set's count stops changing
+      def reachFix(name: String, via: DataFrame, seed: DataFrame,
+          backward: Boolean): DataFrame = {
+        val v = seed.columns.head
+        val (key, out) = if (backward) ("dst", "src") else ("src", "dst")
+        val m0 = seed.localCheckpoint(true)
+        val ((m, _), _) = Fixpoint.converge(name, maxRounds, (m0, m0.count())) {
+          case (m, n0) =>
+            val reached = via.join(m.withColumnRenamed(v, key), key)
+              .select(col(out).as(v))
+            val next = m.union(reached).distinct().localCheckpoint(true)
+            val n = next.count()
+            ((next, n), n != n0)
+        }
+        m
+      }
       val allNodes = edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node"))).distinct()
-      var remaining = allNodes.localCheckpoint(true)
+      val remaining0 = allNodes.localCheckpoint(true)
       // starts empty (schema-typed) so an empty corpus yields an empty
       // result instead of an uninitialized accumulator
-      var assigned: DataFrame = allNodes.limit(0)
+      val assigned0 = allNodes.limit(0)
         .select(col("node").as("host_id"), col("node").as("scc_id"))
-      var iters = 0
-      while (remaining.count() > 0) {
-        iters += 1
-        require(iters <= maxIters,
-          s"SCC peeling did not converge in $maxIters iterations")
-        val live = edges
-          .join(remaining.withColumnRenamed("node", "src"), "src")
-          .join(remaining.withColumnRenamed("node", "dst"), "dst")
-          .select(col("src"), col("dst")).localCheckpoint(true)
-        // (1) forward max-label fixpoint, one propagation step per
-        // materialization. (r6 note: two-step batching was tried and
-        // measured slower here — see the qg7 wave note.)
-        var c = remaining.select(col("node"), col("node").as("c"))
-          .localCheckpoint(true)
-        var rounds = 0
-        var changed = 1L
-        while (changed > 0) {
-          rounds += 1
-          require(rounds <= maxRounds,
-            s"SCC coloring did not converge in $maxRounds rounds")
-          val inMax = live
-            .join(c.withColumnRenamed("node", "src"), "src")
-            .groupBy(col("dst")).agg(max(col("c")).as("cin"))
-          // `prev` rides along (the ccWithRounds discipline) so the change
-          // count is a filter on the checkpointed result, not an extra
-          // per-round join job against the old colors
-          val next = c
-            .join(inMax.withColumnRenamed("dst", "node"), Seq("node"), "left")
-            .select(col("node"), col("c").as("prev"),
-              greatest(col("c"), coalesce(col("cin"), col("c"))).as("c2"))
-            .localCheckpoint(true)
-          changed = next.filter(col("c2") =!= col("prev")).count()
-          c.unpersist()
-          c = next.select(col("node"), col("c2").as("c"))
+      // one peel iteration per round; the change test is "nodes remain"
+      val ((_, assigned), _) =
+        if (remaining0.count() == 0) ((remaining0, assigned0), 0)
+        else Fixpoint.converge("SCC peeling", maxIters, (remaining0, assigned0)) {
+          case (remaining, assigned) =>
+            val live = edges
+              .join(remaining.withColumnRenamed("node", "src"), "src")
+              .join(remaining.withColumnRenamed("node", "dst"), "dst")
+              .select(col("src"), col("dst")).localCheckpoint(true)
+            // (1) forward max-label fixpoint, one propagation step per
+            // materialization. (r6 note: two-step batching was tried and
+            // measured slower here — see the qg7 wave note.)
+            val (c, _) = Fixpoint.converge("SCC coloring", maxRounds,
+                remaining.select(col("node"), col("node").as("c"))
+                  .localCheckpoint(true)) { c =>
+              val inMax = live
+                .join(c.withColumnRenamed("node", "src"), "src")
+                .groupBy(col("dst")).agg(max(col("c")).as("cin"))
+              // `prev` rides along (the ccWithRounds discipline) so the
+              // change count is a filter on the checkpointed result, not an
+              // extra per-round join job against the old colors
+              val next = c
+                .join(inMax.withColumnRenamed("dst", "node"), Seq("node"), "left")
+                .select(col("node"), col("c").as("prev"),
+                  greatest(col("c"), coalesce(col("cin"), col("c"))).as("c2"))
+                .localCheckpoint(true)
+              (next.select(col("node"), col("c2").as("c")),
+                next.filter(col("c2") =!= col("prev")).count() > 0)
+            }
+            // (2) backward mark within color classes, from the pivots
+            val sameColor = live
+              .join(c.select(col("node").as("src"), col("c").as("cs")), "src")
+              .join(c.select(col("node").as("dst"), col("c").as("cd")), "dst")
+              .filter(col("cs") === col("cd"))
+              .select(col("src"), col("dst")).localCheckpoint(true)
+            val marked = reachFix("SCC backward mark", sameColor,
+              c.filter(col("node") === col("c")).select(col("node")),
+              backward = true)
+            // (3) peel: settled nodes get scc_id = min member of their class
+            val members = c.join(marked, Seq("node"))
+            val ids = members.groupBy(col("c")).agg(min(col("node")).as("scc_id"))
+            val assignedThis = members.join(ids, "c")
+              .select(col("node").as("host_id"), col("scc_id"))
+            val grown = assigned.union(assignedThis).localCheckpoint(true)
+            val rest = remaining.join(marked, Seq("node"), "left_anti")
+              .localCheckpoint(true)
+            ((rest, grown), rest.count() > 0)
         }
-        // (2) backward mark within color classes, from the pivots
-        val sameColor = live
-          .join(c.select(col("node").as("src"), col("c").as("cs")), "src")
-          .join(c.select(col("node").as("dst"), col("c").as("cd")), "dst")
-          .filter(col("cs") === col("cd"))
-          .select(col("src"), col("dst")).localCheckpoint(true)
-        var marked = c.filter(col("node") === col("c")).select(col("node"))
-          .localCheckpoint(true)
-        var mCount = marked.count()
-        rounds = 0
-        changed = 1L
-        while (changed > 0) {
-          rounds += 1
-          require(rounds <= maxRounds,
-            s"SCC backward mark did not converge in $maxRounds rounds")
-          val reached = sameColor
-            .join(marked.withColumnRenamed("node", "dst"), "dst")
-            .select(col("src").as("node"))
-          val next = marked.union(reached).distinct().localCheckpoint(true)
-          val n = next.count()
-          changed = n - mCount
-          mCount = n
-          marked.unpersist()
-          marked = next
-        }
-        // (3) peel: settled nodes get scc_id = min member of their class
-        val members = c.join(marked, Seq("node"))
-        val ids = members.groupBy(col("c")).agg(min(col("node")).as("scc_id"))
-        val assignedThis = members.join(ids, "c")
-          .select(col("node").as("host_id"), col("scc_id"))
-        val grown = assigned.union(assignedThis).localCheckpoint(true)
-        assigned.unpersist()
-        assigned = grown
-        val rest = remaining.join(marked, Seq("node"), "left_anti")
-          .localCheckpoint(true)
-        remaining.unpersist()
-        remaining = rest
-        live.unpersist(); sameColor.unpersist(); c.unpersist()
-        marked.unpersist()
-      }
       val sizes = assigned.groupBy(col("scc_id"))
         .agg(count(lit(1)).as("scc_size"))
       val big = sizes.orderBy(col("scc_size").desc, col("scc_id").asc)
@@ -988,31 +868,9 @@ object LinkGraph {
         .filter(col("scc_id") === col("core_scc"))
         .select(col("host_id")).localCheckpoint(true)
       // role reachability: two boolean fixpoints over the FULL edge list
-      def reachFix(seed: DataFrame, backward: Boolean): DataFrame = {
-        val (key, out) = if (backward) ("dst", "src") else ("src", "dst")
-        var m = seed.localCheckpoint(true)
-        var n0 = m.count()
-        var rounds = 0
-        var changed = 1L
-        while (changed > 0) {
-          rounds += 1
-          require(rounds <= maxRounds,
-            s"role reachability did not converge in $maxRounds rounds")
-          val reached = edges
-            .join(m.withColumnRenamed("host_id", key), key)
-            .select(col(out).as("host_id"))
-          val next = m.union(reached).distinct().localCheckpoint(true)
-          val n = next.count()
-          changed = n - n0
-          n0 = n
-          m.unpersist()
-          m = next
-        }
-        m
-      }
-      val toCore = reachFix(coreNodes, backward = true)
+      val toCore = reachFix("role reachability", edges, coreNodes, backward = true)
         .withColumn("to_core", lit(true))
-      val fromCore = reachFix(coreNodes, backward = false)
+      val fromCore = reachFix("role reachability", edges, coreNodes, backward = false)
         .withColumn("from_core", lit(true))
       assigned.join(sizes, "scc_id")
         .crossJoin(broadcast(big))
@@ -1023,7 +881,6 @@ object LinkGraph {
             .when(coalesce(col("to_core"), lit(false)), "in")
             .when(coalesce(col("from_core"), lit(false)), "out")
             .otherwise("other").as("role"))
-      }
     }
   }
 }

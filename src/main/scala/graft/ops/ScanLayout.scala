@@ -23,6 +23,11 @@ private[graft] object ScanLayout {
     * Spark's sort-before-repartition determinism; every caller's
     * downstream is partition-layout-independent (hash aggregates / joins
     * over exact types), so results are unchanged at any width.
+    *
+    * Precondition: `df` is a bare scan (a file read plus narrow
+    * projections/filters, no exchange). The layout probe
+    * `df.rdd.getNumPartitions` builds the physical plan, and on a plan
+    * with exchanges (AQE query stages) that would run jobs at probe time.
     */
   def ensureParallel(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism

@@ -696,29 +696,25 @@ object TextAnalysis {
     * pair-explode + groupBy over the type table, a 1-row argmax collect
     * (the driver-side trainer step, like the IVF quantizer), and a map-only
     * rewrite through the native bpe_merge expression. Iterative-dataflow
-    * invariant applies: the type table localCheckpoints every round.
+    * invariant applies ([[Fixpoint]]): the type table localCheckpoints
+    * every round.
     * The DuckDB oracle UNROLLS the same k rounds (generated CTE chain) with
     * the greedy rewrite as a list_reduce fold — every merge, tie-break and
     * count is replayed exactly.
     */
   def bpeMerges(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
     val norm = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
-    var types = docs(spark, dir)
+    val types0 = docs(spark, dir)
       .select(explode(norm).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .select(split(col("word"), "").as("syms"), col("cnt"))
       .localCheckpoint(true)
     val merges = Vector.newBuilder[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    try {
-      // each round's localCheckpoint(true) pins a block set in executor
-      // storage; release the superseded round as soon as its successor has
-      // materialized (same resource discipline as connectedComponents' edge
-      // cache) — otherwise k+1 checkpointed type tables stay pinned for the
-      // session lifetime
-      while (rank <= k && !exhausted) {
+    // one merge per round, `rank` carried in the state; the loop stops once
+    // the k-th merge is made or no adjacent pair is left
+    if (k > 0) Fixpoint.converge("BPE merging", k, (types0, 1)) {
+      case (types, rank) =>
         val pairs = types
           .select(col("cnt"), posexplode(when(size(col("syms")) >= 2,
             expr("transform(sequence(0, size(syms) - 2), " +
@@ -729,7 +725,7 @@ object TextAnalysis {
           .agg(sum(col("cnt")).as("c"))
         val best = pairs.orderBy(col("c").desc, col("l").asc, col("r").asc)
           .limit(1).collect()
-        if (best.isEmpty) exhausted = true
+        if (best.isEmpty) ((types, rank), false)
         else {
           val (l, r, c) = (best(0).getString(0), best(0).getString(1),
             best(0).getLong(2))
@@ -738,12 +734,9 @@ object TextAnalysis {
             graft.functions.GraftFunctions
               .bpeMerge(col("syms"), lit(l), lit(r)).as("syms"),
             col("cnt")).localCheckpoint(true)
-          types.unpersist()
-          types = next
-          rank += 1
+          ((next, rank + 1), rank < k)
         }
-      }
-    } finally types.unpersist()
+    }
     val ss = spark
     import ss.implicits._
     merges.result().toDF("rank", "sym_l", "sym_r", "pair_count")

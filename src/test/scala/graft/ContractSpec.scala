@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Driver-contract invariants that a typo would otherwise surface only in
   * the (slow, external) correctness gate: every oracle belongs to a real
@@ -18,6 +19,20 @@ class ContractSpec extends AnyFunSuite {
     assert(noOracle == Set("qs3_ann_ivf",
       "qx1_extract_text", "qx2_extract_stats", "qx3_overlay_specs"),
       s"undocumented no-oracle queries: $noOracle")
+  }
+
+  test("only Fixpoint mutates the session conf among the ops modules") {
+    // the loops' shuffle-width/AQE scope is the one audited place that
+    // flips session-wide settings (see Fixpoint's single-query precondition)
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/ops")
+    val files = java.nio.file.Files.list(dir).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+    assert(files.exists(_.endsWith("Fixpoint.scala")), files)
+    val offenders = files.filterNot(_.endsWith("Fixpoint.scala"))
+      .filter(f => new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        .contains("conf.set("))
+      .map(_.getFileName.toString)
+    assert(offenders.isEmpty, s"session conf mutated outside Fixpoint: $offenders")
   }
 
   test("oracle SQL only references the driver-provided tables") {

@@ -394,7 +394,7 @@ class LinkGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("qg7: the maxRounds guard throws instead of looping past the budget") {
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       LinkGraph.hostKcore(spark, dir, k = 2, maxRounds = 3).collect()
     }
     assert(e.getMessage.contains("did not converge"), e.getMessage)
@@ -514,8 +514,17 @@ class LinkGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 35->34->31 peels one node per iteration under max-coloring: a
     // 2-iteration budget must throw, proving the loop is not a single
     // pass in disguise
-    intercept[IllegalArgumentException](
+    val e = intercept[IllegalStateException](
       LinkGraph.hostScc(spark, dir, maxIters = 2))
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+  }
+
+  test("qg12: the inner round guard throws when coloring needs more rounds") {
+    // the first coloring round always changes a color (every edge u->v with
+    // u > v raises c(v)), so a 1-round budget cannot reach the fixpoint
+    val e = intercept[IllegalStateException](
+      LinkGraph.hostScc(spark, dir, maxRounds = 1))
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
   }
 
   test("qg12: re-running produces the identical decomposition") {
