@@ -129,7 +129,7 @@ object Bench {
     // noop sink: forces FULL evaluation of every output column (a count()
     // would let Catalyst prune deterministic projections, timing map-only
     // queries as bare scans); failures are recorded per query, not swallowed
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.registry.sortBy(_.name).map { case SparkEntry.Query(name, fn, _) =>
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }

@@ -7,11 +7,12 @@ import graft.spark.{ExtractJob, PagesTable}
 
 /** Driver contract — see SURVEY.md section 7 and Verify/Bench.
   *
-  * Queries fall into two groups:
+  * [[SparkEntry.registry]] declares every suite query once. Queries fall
+  * into two groups:
   *  - SQL-expressible operators over the sfDir parquet tables, each with a
-  *    DuckDB oracle in [[oracleSql]] (column names aligned on both sides);
+  *    DuckDB oracle (column names aligned on both sides);
   *  - engine-native operators (extraction, LSH variants, custom expressions)
-  *    checked by goldens/specs, exposed here as rows-only entries.
+  *    checked by goldens/specs, registered with no oracle.
   */
 object SparkEntry {
 
@@ -51,309 +52,20 @@ object SparkEntry {
     })
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational core (oracle-checked) ----
-    "q01_agg_pricing" -> (Relational.q01AggPricing _),
-    "q02_filter_pushdown" -> (Relational.q02FilterPushdown _),
-    "q03_broadcast_join" -> (Relational.q03BroadcastJoin _),
-    "q04_shuffle_join" -> (Relational.q04ShuffleJoin _),
-    "q05_multi_join" -> (Relational.q05MultiJoin _),
-    "q06_topk_orders" -> (Relational.q06TopkOrders _),
-    "q07_window_rank" -> (Relational.q07WindowRank _),
-    "q08_distinct_agg" -> (Relational.q08DistinctAgg _),
-    "q09_anti_join" -> (Relational.q09AntiJoin _),
-    "q10_semi_join" -> (Relational.q10SemiJoin _),
-    "q11_set_intersect" -> (Relational.q11SetIntersect _),
-    "q12_events_hourly" -> (Relational.q12EventsHourly _),
-    "q13_rollup" -> (Relational.q13Rollup _),
-    "q14_sessionize" -> (Relational.q14Sessionize _),
-    "q15_exists_subquery" -> (Relational.q15ExistsSubquery _),
-    "q16_cube" -> (Relational.q16Cube _),
-    "q17_asof_join" -> (Relational.q17AsofJoin _),
-    "q18_range_join" -> ((s: SparkSession, d: String) =>
-      Relational.q18RangeJoin(s, d)),
-    "q19_topk_aggregate" -> ((s: SparkSession, d: String) =>
-      Relational.q19TopkAggregate(s, d)),
-    // ---- dedup (oracle where SQL-expressible) ----
-    "qd1_exact_dedup" -> (Dedup.exactDedupStats _),
-    "qd2_minhash_sigs" -> ((s: SparkSession, d: String) => Dedup.minhashPortable(s, d)),
-    "qd3_simhash" -> (Dedup.simhashDocs _),
-    "qd17_simhash_pairs" -> ((s: SparkSession, d: String) =>
-      Dedup.simhashPairs(s, d).select(col("doc_a"), col("doc_b"),
-        col("hamming").cast("long").as("hamming"))),
-    "qd4_ngram_jaccard" -> ((s: SparkSession, d: String) => Dedup.ngramJaccardPairs(s, d)),
-    "qd5_embed_dup" -> ((s: SparkSession, d: String) =>
-      Similarity.embeddingDupPairsLsh(s, d, 0.5)),
-    "qd6_dedup_clusters" -> ((s: SparkSession, d: String) => Dedup.dedupClusters(s, d)),
-    "qd7_minhash_lsh_pairs" -> ((s: SparkSession, d: String) =>
-      Dedup.minhashLshPairsPortable(s, d)),
-    "qd21_minhash_calibration" -> ((s: SparkSession, d: String) =>
-      Dedup.minhashCalibration(s, d)),
-    "qd23_lsh_eval" -> ((s: SparkSession, d: String) =>
-      Dedup.lshEval(s, d)),
-    "qd8_cluster_survivors" -> ((s: SparkSession, d: String) =>
-      Dedup.clusterSurvivors(s, d)),
-    "qd9_incremental_dedup" -> ((s: SparkSession, d: String) =>
-      Dedup.incrementalDedup(s, d)),
-    "qd10_lsh_dedup_closure" -> ((s: SparkSession, d: String) =>
-      Dedup.lshDedupClosure(s, d)),
-    "qd11_ppjoin_pairs" -> ((s: SparkSession, d: String) =>
-      Dedup.ppjoinPairs(s, d)),
-    "qd22_dedup_weights" -> ((s: SparkSession, d: String) =>
-      Dedup.dedupWeights(s, d)),
-    "qd12_passage_dedup" -> ((s: SparkSession, d: String) =>
-      Dedup.passageDedup(s, d)),
-    "qd13_dup_ngrams" -> ((s: SparkSession, d: String) =>
-      Dedup.dupNgramProfile(s, d)),
-    "qd14_exact_substr" -> ((s: SparkSession, d: String) =>
-      Dedup.exactSubstrDedup(s, d)),
-    "qd15_winnow_fps" -> ((s: SparkSession, d: String) =>
-      Dedup.winnowFingerprints(s, d)),
-    "qd16_winnow_containment" -> ((s: SparkSession, d: String) =>
-      Dedup.winnowContainment(s, d)),
-    "qd18_chunk_dup_share" -> ((s: SparkSession, d: String) =>
-      Dedup.chunkDupShare(s, d)),
-    "qd19_cluster_split" -> ((s: SparkSession, d: String) =>
-      Dedup.clusterAwareSplit(s, d)),
-    "qd20_bucket_split" -> ((s: SparkSession, d: String) =>
-      Dedup.bucketSplit(s, d)),
-    "qt24_classifier_gate" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.classifierGate(s, d)),
-    "qt25_domain_mixture" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.domainMixture(s, d)),
-    "qt26_c4_lines" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.c4LineClean(s, d)),
-    "qt27_hll_distinct" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.hllDistinct(s, d)),
-    "qt29_gopher_repetition" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.gopherRepetition(s, d)),
-    // ---- URL-level curation ----
-    "qu1_domain_cap" -> ((s: SparkSession, d: String) =>
-      UrlCuration.domainCap(s, d)),
-    "qu2_url_dedup" -> ((s: SparkSession, d: String) =>
-      UrlCuration.urlDedup(s, d)),
-    "qu3_snapshot_dedup" -> ((s: SparkSession, d: String) =>
-      UrlCuration.snapshotDedup(s, d)),
-    "qu4_url_features" -> ((s: SparkSession, d: String) =>
-      UrlCuration.urlFeatures(s, d)),
-    "qu5_frontier_schedule" -> ((s: SparkSession, d: String) =>
-      UrlCuration.frontierSchedule(s, d)),
-    // ---- composed per-document admission verdict + release manifest ----
-    "qp1_curation_verdict" -> ((s: SparkSession, d: String) =>
-      Curation.curationVerdict(s, d)),
-    "qp2_release_manifest" -> ((s: SparkSession, d: String) =>
-      Curation.releaseManifest(s, d)),
-    "qp3_health_report" -> ((s: SparkSession, d: String) =>
-      Curation.healthReport(s, d)),
-    // ---- link-graph centrality ----
-    "qg1_host_pagerank" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostPagerank(s, d)),
-    "qg2_host_components" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostComponents(s, d)),
-    "qg3_host_hyperball" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostHyperball(s, d)),
-    "qg4_host_harmonic" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostHarmonic(s, d)),
-    "qg10_neighborhood" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostNeighborhood(s, d)),
-    "qg5_host_triangles" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostTriangles(s, d)),
-    "qg7_host_kcore" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostKcore(s, d)),
-    "qg8_host_hits" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostHits(s, d)),
-    "qg9_host_mixing" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostMixing(s, d)),
-    "qg6_host_communities" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostCommunities(s, d)),
-    "qg11_seed_pagerank" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostSeedPagerank(s, d)),
-    "qg12_host_scc" -> ((s: SparkSession, d: String) =>
-      LinkGraph.hostScc(s, d)),
-    "q20_zorder_layout" -> ((s: SparkSession, d: String) =>
-      Relational.q20ZorderLayout(s, d)),
-    // ---- similarity search ----
-    "qs1_ann_brute" -> ((s: SparkSession, d: String) => Similarity.annBruteForce(s, d)),
-    "qs2_ann_lsh" -> ((s: SparkSession, d: String) => Similarity.annLsh(s, d)),
-    "qs9_mips" -> ((s: SparkSession, d: String) => Similarity.mipsTopK(s, d)),
-    "qs10_recall_eval" -> ((s: SparkSession, d: String) =>
-      Similarity.annRecallEval(s, d)),
-    "qs11_filtered_ann" -> ((s: SparkSession, d: String) =>
-      Similarity.filteredAnn(s, d)),
-    "qs12_range_search" -> ((s: SparkSession, d: String) =>
-      Similarity.rangeSearch(s, d)),
-    // honestly approximate: IVF coarse quantization cannot guarantee exact
-    // top-k on the synthetic corpus (near-uniform random vectors, the worst
-    // case for coarse quantization) without probing every cell, so qs3 stays
-    // spec-verified instead of carrying a brute-force oracle it can't match.
-    // Measured recall at nprobe=12/16 cells: 0.98 / 0.94 / 1.00 at
-    // sf0.001/0.01/0.1; OpsSpec floors it at 0.9 and separately asserts
-    // EXACT brute-force parity at nprobe=k
-    "qs3_ann_ivf" -> ((s: SparkSession, d: String) =>
-      Similarity.annIvf(s, d, nprobe = 12)),
-    // ---- text analysis (oracle-checked) ----
-    "qt1_token_count" -> (TextAnalysis.tokenCounts _),
-    "qt2_quality" -> (TextAnalysis.qualityScores _),
-    "qt3_langid" -> (TextAnalysis.langId _),
-    // md5 half only: oracle-checkable; the simhash half is qd3's (spec +
-    // golden verified — FNV-1a isn't portably expressible in the oracle)
-    "qt4_fingerprint" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.fingerprints(s, d).select(col("doc_id"), col("md5_fp"))),
-    "qt5_bigram_freq" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.bigramFreq(s, d)),
-    "qt6_cms_bigrams" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.cmsBigrams(s, d)),
-    "qt7_hash_sample" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.hashSample(s, d)),
-    "qt8_contamination" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.contamination(s, d)),
-    "qt9_tfidf" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.tfidfTopTerms(s, d)),
-    "qt10_repetition" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.repetitionSignals(s, d)),
-    "qt11_novelty" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.noveltyScores(s, d)),
-    "qt12_kmv_distinct" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.kmvDistinct(s, d)),
-    "qt13_bloom_contamination" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.bloomContamination(s, d)),
-    "qt14_df_prune" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.dfPrune(s, d)),
-    "qt15_stratified_sample" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.stratifiedSample(s, d)),
-    "qt16_lm_score" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.lmScore(s, d)),
-    "qt17_quantile_hist" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.quantileHist(s, d)),
-    "qt30_kn_lm_score" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.knLmScore(s, d)),
-    "qt31_char_entropy" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.charEntropyProfile(s, d)),
-    "qt32_shard_manifest" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.shardManifest(s, d)),
-    "qt33_chunk_windows" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.chunkWindows(s, d)),
-    "qt35_pmi" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.pmiCollocations(s, d)),
-    "qt39_jsd_drift" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.jsdDrift(s, d)),
-    "qt40_readability" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.readability(s, d)),
-    "qt41_near_contamination" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.nearContamination(s, d)),
-    "qt43_token_budget" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.tokenBudget(s, d)),
-    "qt44_bm25" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.bm25Retrieval(s, d)),
-    "qt45_heaps_curve" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.heapsCurve(s, d)),
-    "qt46_zipf_curve" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.zipfCurve(s, d)),
-    "qt47_source_overlap" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.sourceOverlap(s, d)),
-    "qt48_blocklist" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.blocklistScan(s, d)),
-    "qt49_fertility" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.tokenizerFertility(s, d)),
-    "qt50_heavy_hitters" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.heavyHitters(s, d)),
-    "qt51_sketched_overlap" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.sketchedOverlap(s, d)),
-    "qt42_source_profile" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.sourceProfile(s, d)),
-    "qt36_kmv_setops" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.kmvSetOps(s, d)),
-    "qt37_script_profile" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.scriptProfile(s, d)),
-    "qt38_decontam_rewrite" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.decontaminationRewrite(s, d)),
-    "qt34_weighted_sample" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.weightedSample(s, d)),
-    "qt28_ccnet_buckets" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.ccnetBuckets(s, d)),
-    "qt18_pack_bins" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.packBins(s, d)),
-    "qt19_bpe_merges" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.bpeMerges(s, d)),
-    "qs4_int8_quant" -> ((s: SparkSession, d: String) =>
-      Similarity.int8QuantStats(s, d)),
-    "qs5_ann_int8" -> ((s: SparkSession, d: String) =>
-      Similarity.annInt8(s, d)),
-    "qs6_ann_pq" -> ((s: SparkSession, d: String) =>
-      Similarity.annPq(s, d)),
-    "qs7_ann_ivfpq" -> ((s: SparkSession, d: String) =>
-      Similarity.annIvfPq(s, d)),
-    "qs8_ann_rerank" -> ((s: SparkSession, d: String) =>
-      Similarity.annRerank(s, d)),
-    "qt20_gopher_rules" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.gopherRules(s, d)),
-    "qt21_dsir_weights" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.dsirWeights(s, d)),
-    "qt22_pii_redact" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.piiRedact(s, d)),
-    "qt23_bpe_encode" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.bpeEncode(s, d)),
-    // ---- embedding-space clustering / semantic dedup ----
-    "qc1_kmeans" -> ((s: SparkSession, d: String) =>
-      Clustering.kmeansAssign(s, d)),
-    "qc2_semdedup" -> ((s: SparkSession, d: String) =>
-      Clustering.semDedup(s, d)),
-    "qc3_prototype_prune" -> ((s: SparkSession, d: String) =>
-      Clustering.prototypePrune(s, d)),
-    "qc4_kmeans_parallel" -> ((s: SparkSession, d: String) =>
-      Clustering.kmeansParallel(s, d)),
-    "qc5_kcenter_coreset" -> ((s: SparkSession, d: String) =>
-      Clustering.kcenterCoreset(s, d)),
-    "qc6_cluster_quality" -> ((s: SparkSession, d: String) =>
-      Clustering.clusterQuality(s, d)),
-    "qc7_silhouette" -> ((s: SparkSession, d: String) =>
-      Clustering.silhouette(s, d)),
-    // ---- multimodal plumbing ----
-    "qm1_binary_meta" -> (Multimodal.mediaMetaSql _),
-    "qm2_decode_meta" -> ((s: SparkSession, d: String) => Multimodal.decodeMeta(s, d).toDF()),
-    "qm3_frame_sample" -> (Multimodal.sampleFrames _),
-    "qm4_letterbox" -> ((s: SparkSession, d: String) => Multimodal.letterboxSpecs(s, d)),
-    "qm5_audio_meta" -> ((s: SparkSession, d: String) =>
-      Multimodal.audioMeta(s, d).toDF()),
-    "qm6_video_meta" -> ((s: SparkSession, d: String) =>
-      Multimodal.videoMeta(s, d).toDF()),
-    "qm8_image_dhash" -> ((s: SparkSession, d: String) =>
-      Multimodal.imageDhash(s, d)),
-    "qm9_image_neardup" -> ((s: SparkSession, d: String) =>
-      Multimodal.imageNearDupPairs(s, d)),
-    "qm10_audio_fingerprint" -> ((s: SparkSession, d: String) =>
-      Multimodal.audioFingerprint(s, d)),
-    "qm7_png_pixels" -> ((s: SparkSession, d: String) =>
-      Multimodal.pngPixelStats(s, d)),
-    "qm11_scene_cuts" -> ((s: SparkSession, d: String) =>
-      Multimodal.sceneCuts(s, d)),
-    // ---- extraction engine (goldens are the oracle; rows-only here) ----
-    "qx1_extract_text" -> ((s: SparkSession, _: String) =>
-      extractedCorpus(s).select(col("url"), col("extracted_text"), col("n_blocks"))),
-    // S7 debug-overlay sink as spec rows (draw_blocks geometry; golden-pinned
-    // upstream, no DuckDB-expressible oracle for a generated corpus)
-    "qx3_overlay_specs" -> ((s: SparkSession, _: String) =>
-      ExtractJob.overlaySpecs(extractedCorpus(s))),
-    // the overlay/crop geometry EXPRESSIONS under the DuckDB gate (qx3's
-    // blocks_json inputs are golden-pinned; this closes the chain)
-    "qx4_overlay_math" -> ((s: SparkSession, d: String) =>
-      spark.ExtractJob.overlayMathTable(s, d)),
-    "qx2_extract_stats" -> ((s: SparkSession, _: String) =>
-      extractedCorpus(s)
-        .withColumn("family", element_at(split(col("url"), "/"), 4))
-        .groupBy(col("family"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_blocks")).as("n_blocks"),
-          sum(col("need_ocr_pages")).as("ocr_pages"),
-          sum(when(col("parse_status") === "ok", 1).otherwise(0)).as("ok_docs")))
-  )
+  /** One suite query: its Spark builder and, where the result is
+    * SQL-expressible, the DuckDB oracle that must hash-match it. */
+  final case class Query(name: String,
+      run: (SparkSession, String) => DataFrame, oracle: Option[String])
 
-  /** qt19's oracle, generated: the BPE trainer's k rounds UNROLLED as a CTE
-    * chain — per round, a weighted adjacent-pair count over the word-type
-    * symbol lists, the (count DESC, l ASC, r ASC) argmax, and the greedy
-    * left-to-right merge as a list_reduce fold (an in-pass merged token
-    * never re-merges because l||r != l, same as the native expression).
-    */
+  /** Name → Spark builder, derived from [[registry]]. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+
+  /** Name → DuckDB oracle SQL (the oracle_sql.json payload), derived from
+    * [[registry]]. */
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
   /** The BPE training chain (qt19's oracle scaffolding), generated: word
     * types from the corpus, then k unrolled merge rounds — each round picks
     * the global argmax pair (ties lexicographic) and rewrites every type's
@@ -390,6 +102,7 @@ object SparkEntry {
     head + rounds
   }
 
+  /** qt19's oracle: the training chain's argmax pair, one row per round. */
   private def bpeOracleSql(k: Int): String = {
     val unions = (1 to k).map(i =>
       s"SELECT $i AS rank, l AS sym_l, r AS sym_r, CAST(c AS BIGINT) AS pair_count FROM b$i")
@@ -1847,9 +1560,603 @@ object SparkEntry {
                * 1000 // capacity AS rate_milli
            FROM fin)"""
 
-  /** DuckDB-runnable oracles, column-aligned with the Spark results. */
-  def oracleSql: Map[String, String] = Map(
-    "qd13_dup_ngrams" ->
+  /** q07's per-nation top-3 window (q19 reuses it). */
+  private val windowRankOracle: String =
+    """SELECT c_nationkey AS nationkey, c_custkey AS custkey,
+         CAST(c_acctbal AS DOUBLE) AS acctbal, rnk FROM (
+           SELECT c_nationkey, c_custkey, c_acctbal,
+             ROW_NUMBER() OVER (PARTITION BY c_nationkey
+               ORDER BY c_acctbal DESC, c_custkey ASC) AS rnk
+           FROM customer) WHERE rnk <= 3"""
+
+  /** qt8's exact contamination pass (qt13 reuses it). */
+  private val contaminationOracle: String =
+    """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+3], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-3, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         ev AS (SELECT doc_id AS eval_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 = 0),
+         co AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 <> 0)
+         SELECT co.doc_id, ev.eval_id, COUNT(*) AS n_shared_grams
+         FROM co JOIN ev USING (g)
+         GROUP BY 1, 2"""
+
+  /** qs1's brute-force cosine top-10 (qs2 reuses it). */
+  private val annCosineOracle: String =
+    """SELECT query_id, neighbor_id, rnk, cosine FROM (
+           SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+             ROW_NUMBER() OVER (PARTITION BY q.vec_id
+               ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+                 CAST(e.embedding AS DOUBLE[])) DESC, e.vec_id ASC) AS rnk,
+             ROUND(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+               CAST(e.embedding AS DOUBLE[])), 6) AS cosine
+           FROM embeddings q, embeddings e
+           WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id)
+         WHERE rnk <= 10"""
+
+  /** Every suite query, once: its builder and its oracle side by side.
+    * Lazy so that no entry reads a helper val (urlOracleCte, curationChain,
+    * ...) before the object has initialized it — a strict val placed above
+    * one of them would splice the text "null" into the SQL. */
+  lazy val registry: Vector[Query] = Vector(
+    // ---- relational core (oracle-checked) ----
+    Query("q01_agg_pricing", Relational.q01AggPricing, Some(
+      """SELECT l_returnflag, l_linestatus,
+         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+         COUNT(*) AS count_order
+         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+         GROUP BY l_returnflag, l_linestatus""")),
+    Query("q02_filter_pushdown", Relational.q02FilterPushdown, Some(
+      """SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+         COUNT(*) AS n_items
+         FROM lineitem
+         WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
+           AND l_discount >= 0.05
+         GROUP BY 1""")),
+    Query("q03_broadcast_join", Relational.q03BroadcastJoin, Some(
+      """SELECT c_mktsegment,
+         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
+         COUNT(*) AS n_orders
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         GROUP BY c_mktsegment""")),
+    Query("q04_shuffle_join", Relational.q04ShuffleJoin, Some(
+      """SELECT o_orderpriority, COUNT(*) AS n_lines,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         GROUP BY o_orderpriority""")),
+    Query("q05_multi_join", Relational.q05MultiJoin, Some(
+      """SELECT r_name, COUNT(*) AS n_customers,
+         CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
+         FROM customer JOIN nation ON c_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         GROUP BY r_name""")),
+    Query("q06_topk_orders", Relational.q06TopkOrders, Some(
+      """SELECT o_orderkey, o_totalprice AS total_price FROM orders
+         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""")),
+    Query("q07_window_rank", Relational.q07WindowRank, Some(windowRankOracle)),
+    Query("q08_distinct_agg", Relational.q08DistinctAgg, Some(
+      """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_customers,
+         COUNT(*) AS n_orders FROM orders GROUP BY o_orderstatus""")),
+    Query("q09_anti_join", Relational.q09AntiJoin, Some(
+      """SELECT c_nationkey AS nationkey, COUNT(*) AS n_idle_customers
+         FROM customer WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
+         GROUP BY c_nationkey""")),
+    Query("q10_semi_join", Relational.q10SemiJoin, Some(
+      """SELECT p_brand, COUNT(*) AS n_parts FROM part
+         WHERE p_partkey IN (SELECT l_partkey FROM lineitem)
+         GROUP BY p_brand""")),
+    Query("q11_set_intersect", Relational.q11SetIntersect, Some(
+      """SELECT COUNT(*) AS n_both FROM (
+           SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+           INTERSECT
+           SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW')""")),
+    Query("q12_events_hourly", Relational.q12EventsHourly, Some(
+      """SELECT date_trunc('hour', ts) AS hour, event_type,
+         COUNT(*) AS n_events,
+         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY 1, 2""")),
+    Query("q13_rollup", Relational.q13Rollup, Some(
+      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
+         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""")),
+    Query("q14_sessionize", Relational.q14Sessionize, Some(
+      """WITH g AS (
+           SELECT user_id, ts, event_id,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800 THEN 1 ELSE 0 END AS new_session
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         s AS (
+           SELECT user_id, ts,
+             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS UNBOUNDED PRECEDING) AS session_id
+           FROM g),
+         per_session AS (
+           SELECT user_id, session_id, COUNT(*) AS n_events,
+             CAST(floor(epoch(MAX(ts))) AS BIGINT) - CAST(floor(epoch(MIN(ts))) AS BIGINT) AS duration_s
+           FROM s GROUP BY user_id, session_id)
+         SELECT user_id, COUNT(*) AS n_sessions,
+           CAST(SUM(n_events) AS BIGINT) AS n_events,
+           MAX(duration_s) AS max_session_s
+         FROM per_session GROUP BY user_id""")),
+    Query("q15_exists_subquery", Relational.q15ExistsSubquery, Some(
+      """SELECT c_mktsegment, COUNT(*) AS n_customers FROM customer
+         WHERE EXISTS (SELECT 1 FROM orders
+           WHERE o_custkey = c_custkey AND o_totalprice > 200000.0)
+         GROUP BY c_mktsegment""")),
+    Query("q16_cube", Relational.q16Cube, Some(
+      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
+         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+         FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""")),
+    // as-of semantics spelled out (join + rank) — fine at oracle scale; the
+    // Spark side uses the union+carry-window form, same deterministic result
+    Query("q17_asof_join", Relational.q17AsofJoin, Some(
+      """WITH m AS (
+           SELECT e.event_id, e.user_id, o.o_orderkey, o.o_totalprice,
+             ROW_NUMBER() OVER (PARTITION BY e.event_id
+               ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
+           FROM events e JOIN orders o
+             ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)
+         SELECT event_id, user_id, o_orderkey AS asof_orderkey,
+           o_totalprice AS asof_totalprice
+         FROM m WHERE rn = 1""")),
+    // range join: the oracle runs the direct inequality predicate; the
+    // Spark side runs the binned equi-join — equality IS the claim
+    Query("q18_range_join", Relational.q18RangeJoin(_, _), Some(
+      """WITH e AS (
+           SELECT event_id, event_type,
+             CAST(floor(epoch(ts)) AS BIGINT) AS sec
+           FROM events)
+         SELECT a.event_type, COUNT(*) AS n_pairs,
+           MIN(abs(a.sec - b.sec)) AS min_gap_s,
+           MAX(abs(a.sec - b.sec)) AS max_gap_s
+         FROM e a JOIN e b
+           ON a.event_type = b.event_type AND a.event_id < b.event_id
+           AND abs(a.sec - b.sec) <= 120
+         GROUP BY a.event_type""")),
+    // the SAME window SQL as q07: the Spark side runs the bounded top_k_rank
+    // aggregate; equality with the single-window form IS the claim
+    Query("q19_topk_aggregate", Relational.q19TopkAggregate(_, _), Some(windowRankOracle)),
+    // ---- dedup (oracle where SQL-expressible) ----
+    Query("qd1_exact_dedup", Dedup.exactDedupStats, Some(
+      """SELECT n_docs AS group_size, COUNT(*) AS n_groups FROM (
+           SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
+             COUNT(*) AS n_docs
+           FROM documents GROUP BY 1)
+         GROUP BY 1""")),
+    Query("qd2_minhash_sigs", Dedup.minhashPortable(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+2], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-2, 1)+1)], x -> x <> '')) AS sh
+           FROM w)
+         SELECT doc_id, len(sh) AS n_shingles,
+           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+             + 0 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_0,
+           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+             + 1 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_1,
+           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+             + 2 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_2,
+           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+             + 3 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_3
+         FROM sh""")),
+    // FNV-1a + bit-vote SimHash replayed exactly in HUGEINT arithmetic
+    // (the byte fold is a list_reduce seeded with the FNV offset basis)
+    Query("qd3_simhash", Dedup.simhashDocs, Some(simhashCte +
+      """
+         SELECT doc_id, simhash, prefix16 FROM sg""")),
+    // simhash near-dup pairs: the oracle is BRUTE FORCE over the replayed
+    // fingerprints (all pairs, bit_count(xor) <= 8) — fully independent of
+    // the Manku two-block blocking, so hash equality IS the losslessness
+    // proof for the blocking scheme at this threshold
+    Query("qd17_simhash_pairs", (s, d) =>
+      Dedup.simhashPairs(s, d).select(col("doc_a"), col("doc_b"),
+        col("hamming").cast("long").as("hamming")),
+      Some(simhashCte +
+      """
+         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+         FROM sg a JOIN sg b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.simhash, b.simhash)) <= 8""")),
+    Query("qd4_ngram_jaccard", Dedup.ngramJaccardPairs(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id, lang,
+             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh0 AS (
+           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         bs AS (
+           SELECT lang, len_bucket, COUNT(*) AS n_in_block
+           FROM sh0 GROUP BY 1, 2),
+         sh AS (
+           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
+           WHERE bs.n_in_block <= 4096)
+         SELECT doc_a, doc_b, ROUND(jaccard, 6) AS jaccard FROM (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             len(list_intersect(a.sh, b.sh))
+               / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
+           FROM sh a JOIN sh b
+             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
+             AND a.doc_id < b.doc_id)
+         WHERE jaccard >= 0.06""")),
+    Query("qd5_embed_dup", Similarity.embeddingDupPairsLsh(_, _, 0.5), Some(
+      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+           CAST(b.embedding AS DOUBLE[])), 6) AS cosine
+         FROM embeddings a, embeddings b
+         WHERE a.vec_id < b.vec_id
+           AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+             CAST(b.embedding AS DOUBLE[])) > 0.5""")),
+    // connected components over the near-dup pair graph, replayed as a
+    // recursive reachability CTE (cluster id = min reachable doc id)
+    Query("qd6_dedup_clusters", Dedup.dedupClusters(_, _), Some(
+      """WITH RECURSIVE w AS (
+           SELECT doc_id, lang,
+             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh0 AS (
+           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         bs AS (
+           SELECT lang, len_bucket, COUNT(*) AS n_in_block
+           FROM sh0 GROUP BY 1, 2),
+         sh AS (
+           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
+           WHERE bs.n_in_block <= 4096),
+         pairs AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM sh a JOIN sh b
+             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
+             AND a.doc_id < b.doc_id
+           WHERE len(list_intersect(a.sh, b.sh))
+             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.1),
+         edges AS (
+           SELECT doc_a AS src, doc_b AS dst FROM pairs
+           UNION ALL SELECT doc_b, doc_a FROM pairs),
+         reach(doc_id, r) AS (
+           SELECT src, src FROM edges
+           UNION
+           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.doc_id),
+         comp AS (
+           SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
+         sizes AS (
+           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id)
+         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
+           comp.doc_id = comp.cluster_id AS keep
+         FROM comp JOIN sizes USING (cluster_id)""")),
+    // banded portable-minhash LSH: the oracle replays the SAME md5-affine
+    // lane signatures (qd2's family), the SAME 4x2 band-collision predicate,
+    // and the exact-Jaccard verify — so recall curve aside, every emitted
+    // pair and jaccard value must match bit-for-bit
+    Query("qd7_minhash_lsh_pairs", Dedup.minhashLshPairsPortable(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         sigs AS (
+           SELECT doc_id, sh,
+             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
+               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
+           FROM sh WHERE len(sh) > 0)
+         SELECT doc_a, doc_b, ROUND(j, 6) AS jaccard FROM (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             len(list_intersect(a.sh, b.sh))
+               / len(list_distinct(list_concat(a.sh, b.sh))) AS j
+           FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
+             (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
+             (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
+             (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
+             (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])))
+         WHERE j >= 0.2""")),
+    // qd21: qd7's sigs + band predicate, NO threshold, plus the lane-match
+    // estimator — matches/8 is a dyadic rational (exact f64), the exact
+    // Jaccard rounds 6, and the error is one IEEE subtraction (round 6)
+    Query("qd21_minhash_calibration", Dedup.minhashCalibration(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         sigs AS (
+           SELECT doc_id, sh,
+             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
+               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
+           FROM sh WHERE len(sh) > 0)
+         SELECT doc_a, doc_b, matches,
+           CAST(matches AS DOUBLE) / 8.0 AS est_jaccard,
+           ROUND(j, 6) AS jaccard,
+           ROUND(CAST(matches AS DOUBLE) / 8.0 - ROUND(j, 6), 6) AS err
+         FROM (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
+               FOR i IN range(1, 9)]) AS BIGINT) AS matches,
+             len(list_intersect(a.sh, b.sh))
+               / len(list_distinct(list_concat(a.sh, b.sh))) AS j
+           FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
+             (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
+             (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
+             (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
+             (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])))""")),
+    // qd23: the band stage as a retrieval system — deterministic 256-doc
+    // hash sample, all pairs with exact Jaccard + the qd7 band predicate,
+    // one row of integer counts and milli rates
+    Query("qd23_lsh_eval", Dedup.lshEval(_, _), Some(
+      """WITH hsel AS (
+           SELECT doc_id, text FROM documents
+           ORDER BY CAST('0x' || substr(md5('lsheval:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT), doc_id
+           LIMIT 256),
+         w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM hsel),
+         sh AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         sigs AS (
+           SELECT doc_id, sh,
+             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
+               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
+           FROM sh WHERE len(sh) > 0),
+         p AS (
+           SELECT
+             len(list_intersect(a.sh, b.sh))
+               / len(list_distinct(list_concat(a.sh, b.sh))) AS j,
+             CASE WHEN (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
+                       (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
+                       (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
+                       (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])
+               THEN 1 ELSE 0 END AS hit
+           FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id),
+         s AS (
+           SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+             CAST(SUM(CASE WHEN j >= 0.2 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_true,
+             CAST(SUM(hit) AS BIGINT) AS n_candidates,
+             CAST(SUM(CASE WHEN hit = 1 AND j >= 0.2 THEN 1 ELSE 0 END)
+               AS BIGINT) AS tp
+           FROM p),
+         ns AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_sample FROM sigs)
+         SELECT ns.n_sample, s.n_pairs, s.n_true, s.n_candidates, s.tp,
+           s.n_candidates - s.tp AS fp, s.n_true - s.tp AS fn,
+           CASE WHEN s.n_candidates > 0
+             THEN s.tp * 1000 // s.n_candidates END AS precision_milli,
+           CASE WHEN s.n_true > 0
+             THEN s.tp * 1000 // s.n_true END AS recall_milli
+         FROM s, ns""")),
+    // qd6's component CTE + qt2's quality score (rounded to 6 dp BEFORE the
+    // rank so ordering is bit-stable), survivor = rank 1 per cluster
+    Query("qd8_cluster_survivors", Dedup.clusterSurvivors(_, _), Some(
+      """WITH RECURSIVE w AS (
+           SELECT doc_id, lang,
+             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh0 AS (
+           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         bs AS (
+           SELECT lang, len_bucket, COUNT(*) AS n_in_block
+           FROM sh0 GROUP BY 1, 2),
+         sh AS (
+           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
+           WHERE bs.n_in_block <= 4096),
+         pairs AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM sh a JOIN sh b
+             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
+             AND a.doc_id < b.doc_id
+           WHERE len(list_intersect(a.sh, b.sh))
+             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.1),
+         edges AS (
+           SELECT doc_a AS src, doc_b AS dst FROM pairs
+           UNION ALL SELECT doc_b, doc_a FROM pairs),
+         reach(doc_id, r) AS (
+           SELECT src, src FROM edges
+           UNION
+           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.doc_id),
+         comp AS (
+           SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
+         sizes AS (
+           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id),
+         q AS (
+           SELECT doc_id,
+             ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
+               * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]'))
+                  / CAST(length(text) AS DOUBLE)), 6) AS quality_score
+           FROM documents)
+         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
+           q.quality_score,
+           ROW_NUMBER() OVER (PARTITION BY comp.cluster_id
+             ORDER BY q.quality_score DESC, comp.doc_id ASC) = 1 AS survivor
+         FROM comp JOIN sizes USING (cluster_id) JOIN q USING (doc_id)""")),
+    // incremental dedup: batch split, fingerprint check, qd7's band
+    // predicate + Jaccard verify — all replayed asymmetrically
+    Query("qd9_incremental_dedup", Dedup.incrementalDedup(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         sigs AS (
+           SELECT doc_id, sh,
+             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
+               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
+           FROM sh WHERE len(sh) > 0),
+         fp AS (
+           SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+           FROM documents),
+         exact AS (
+           SELECT DISTINCT b.doc_id FROM fp b
+           WHERE b.doc_id % 7 = 0 AND EXISTS (
+             SELECT 1 FROM fp c WHERE c.doc_id % 7 <> 0 AND c.fp = b.fp)),
+         near AS (
+           SELECT b.doc_id AS batch_id, COUNT(*) AS n_near,
+             ROUND(MAX(len(list_intersect(b.sh, c.sh))
+               / len(list_distinct(list_concat(b.sh, c.sh)))), 6) AS best_jaccard
+           FROM sigs b JOIN sigs c ON b.doc_id % 7 = 0 AND c.doc_id % 7 <> 0 AND (
+             (b.sig[1] = c.sig[1] AND b.sig[2] = c.sig[2]) OR
+             (b.sig[3] = c.sig[3] AND b.sig[4] = c.sig[4]) OR
+             (b.sig[5] = c.sig[5] AND b.sig[6] = c.sig[6]) OR
+             (b.sig[7] = c.sig[7] AND b.sig[8] = c.sig[8]))
+           WHERE len(list_intersect(b.sh, c.sh))
+               / len(list_distinct(list_concat(b.sh, c.sh))) >= 0.2
+           GROUP BY b.doc_id)
+         SELECT d.doc_id,
+           CASE WHEN e.doc_id IS NOT NULL THEN 1 ELSE 0 END AS exact_dup,
+           CAST(COALESCE(n.n_near, 0) AS BIGINT) AS n_near,
+           n.best_jaccard
+         FROM (SELECT doc_id FROM documents WHERE doc_id % 7 = 0) d
+         LEFT JOIN exact e ON e.doc_id = d.doc_id
+         LEFT JOIN near n ON n.batch_id = d.doc_id""")),
+    // the scale-path dedup composition under one oracle: qd7's band-predicate
+    // pairs (md5-affine lanes, 4x2 bands, exact-Jaccard verify) -> qd6's
+    // recursive reachability -> qd8's quality-rank survivorship
+    Query("qd10_lsh_dedup_closure", Dedup.lshDedupClosure(_, _), Some(lshCompCte + """,
+         sizes AS (
+           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id),
+         q AS (
+           SELECT doc_id,
+             ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
+               * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]'))
+                  / CAST(length(text) AS DOUBLE)), 6) AS quality_score
+           FROM documents)
+         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
+           q.quality_score,
+           ROW_NUMBER() OVER (PARTITION BY comp.cluster_id
+             ORDER BY q.quality_score DESC, comp.doc_id ASC) = 1 AS survivor
+         FROM comp JOIN sizes USING (cluster_id) JOIN q USING (doc_id)""")),
+    // AllPairs/PPJoin exact similarity join: df-ordered prefixes, length +
+    // positional filters, the 4096 token cap, and the exact-Jaccard verify —
+    // all replayed. DOUBLE casts matter: DuckDB parses 0.8 as DECIMAL, whose
+    // exact products diverge from Spark's f64 at the ceil/compare boundaries.
+    Query("qd11_ppjoin_pairs", Dedup.ppjoinPairs(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh0 AS (
+           SELECT doc_id, list_sort(list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> ''))) AS sh
+           FROM w),
+         shn AS (SELECT doc_id, sh, len(sh) AS n FROM sh0 WHERE len(sh) > 0),
+         tok AS (SELECT doc_id, n, unnest(sh) AS tok FROM shn),
+         dfreq AS (SELECT tok, COUNT(*) AS df FROM tok GROUP BY tok),
+         ordd AS (
+           SELECT t.doc_id, t.n,
+             [x.tok FOR x IN list_sort(list({'df': d.df, 'tok': t.tok}))] AS toks
+           FROM tok t JOIN dfreq d USING (tok)
+           GROUP BY t.doc_id, t.n),
+         pref AS (
+           SELECT doc_id, n, CAST(i AS INT) AS pos, toks[CAST(i AS INT)] AS ptok
+           FROM ordd CROSS JOIN UNNEST(range(1,
+             CAST(n - ceil(CAST(0.8 AS DOUBLE) * n) + 1 AS INT) + 1)) AS u(i)),
+         cap AS (SELECT ptok FROM pref GROUP BY ptok HAVING COUNT(*) <= 4096),
+         adm AS (SELECT p.* FROM pref p JOIN cap USING (ptok)),
+         cand AS (
+           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM adm a JOIN adm b
+             ON a.ptok = b.ptok AND a.doc_id < b.doc_id
+            AND b.n >= CAST(0.8 AS DOUBLE) * a.n
+            AND a.n >= CAST(0.8 AS DOUBLE) * b.n
+            AND 1 + LEAST(a.n - a.pos, b.n - b.pos) >=
+                CEIL(CAST(0.8 AS DOUBLE) / CAST(1.8 AS DOUBLE) * (a.n + b.n)))
+         SELECT c.doc_a, c.doc_b,
+           round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
+                 len(list_distinct(sa.sh || sb.sh)), 6) AS jaccard
+         FROM cand c JOIN shn sa ON c.doc_a = sa.doc_id
+                     JOIN shn sb ON c.doc_b = sb.doc_id
+         WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
+               len(list_distinct(sa.sh || sb.sh)) >= CAST(0.8 AS DOUBLE)""")),
+    // soft-dedup sampling weights: the qd10 component chain, singletons
+    // represent themselves (the qd19 spine), weight = 1/|cluster| as exact
+    // integer milli-weights plus one pinned double division
+    Query("qd22_dedup_weights", Dedup.dedupWeights(_, _), Some(lshCompCte + """,
+         spine AS (SELECT doc_id FROM documents),
+         rep AS (
+           SELECT spine.doc_id,
+             COALESCE(comp.cluster_id, spine.doc_id) AS cluster_rep
+           FROM spine LEFT JOIN comp USING (doc_id)),
+         sizes AS (
+           SELECT cluster_rep, COUNT(*) AS cluster_size FROM rep GROUP BY 1)
+         SELECT rep.doc_id, rep.cluster_rep,
+           CAST(sizes.cluster_size AS BIGINT) AS cluster_size,
+           CAST(1000 // sizes.cluster_size AS BIGINT) AS weight_milli,
+           ROUND(CAST(1.0 AS DOUBLE) / CAST(sizes.cluster_size AS DOUBLE), 6)
+             AS weight
+         FROM rep JOIN sizes USING (cluster_rep)""")),
+    // passage-level keep-first dedup: the oracle recomputes the 10-word
+    // windows, picks the global first occurrence per passage with a
+    // row_number window (the Spark side uses the equivalent min-struct
+    // AGGREGATE — (doc_id, pidx) is unique, so rn=1 == min), and rebuilds
+    // the text the same way (kept passages in pidx order + word tail)
+    Query("qd12_passage_dedup", Dedup.passageDedup(_, _), Some(
+      """WITH base AS (
+           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+         sized AS (
+           SELECT doc_id, w, len(w) AS nwords, len(w) // 10 AS npass FROM base),
+         p AS (
+           SELECT doc_id, i AS pidx,
+             array_to_string(w[(i*10+1):(i*10+10)], ' ') AS passage
+           FROM (SELECT doc_id, w,
+                   unnest(generate_series(0, CAST(npass - 1 AS INT))) AS i
+                 FROM sized WHERE npass >= 1)),
+         keep AS (
+           SELECT doc_id, pidx, passage,
+             row_number() OVER (PARTITION BY passage ORDER BY doc_id, pidx) AS rn
+           FROM p),
+         rebuilt AS (
+           SELECT doc_id, COUNT(*) AS n_kept,
+             string_agg(passage, ' ' ORDER BY pidx) AS kept_text
+           FROM keep WHERE rn = 1 GROUP BY doc_id)
+         SELECT s.doc_id,
+           CAST(s.npass AS BIGINT) AS n_passages,
+           CAST(COALESCE(r.n_kept, 0) AS BIGINT) AS n_kept,
+           CAST(s.npass - COALESCE(r.n_kept, 0) AS BIGINT) AS n_dropped,
+           concat_ws(' ',
+             nullif(COALESCE(r.kept_text, ''), ''),
+             nullif(array_to_string(s.w[(CAST(s.npass AS INT)*10+1):CAST(s.nwords AS INT)], ' '), '')) AS clean_text
+         FROM sized s LEFT JOIN rebuilt r USING (doc_id)""")),
+    Query("qd13_dup_ngrams", Dedup.dupNgramProfile(_, _), Some(
       """WITH w AS (
            SELECT doc_id,
              string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
@@ -1867,13 +2174,13 @@ object SparkEntry {
            round(CAST(SUM(CASE WHEN dup.gram IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
              / COUNT(*), 6) AS dup_frac
          FROM g LEFT JOIN dup ON g.gram = dup.gram
-         GROUP BY g.doc_id""",
+         GROUP BY g.doc_id""")),
     // ExactSubstr span removal replayed end to end: positional 5-grams on
     // portable 60-bit md5 keys, distinct-doc df >= 2, gaps-and-islands span
     // merge (adjacency = gap <= w), spans >= 8 tokens cut, text rebuilt
     // from surviving token indexes. lag's NULL first row falls to ELSE 1 on
     // both engines (Spark's otherwise() and SQL CASE agree on NULL).
-    "qd14_exact_substr" ->
+    Query("qd14_exact_substr", Dedup.exactSubstrDedup(_, _), Some(
       """WITH base AS (
            SELECT doc_id, string_split(text, ' ') AS w,
              len(string_split(text, ' ')) AS n
@@ -1929,17 +2236,17 @@ object SparkEntry {
            COALESCE(r.clean_text, '') AS clean_text
          FROM base b
          LEFT JOIN agg a USING (doc_id)
-         LEFT JOIN rebuilt r USING (doc_id)""",
+         LEFT JOIN rebuilt r USING (doc_id)""")),
     // winnowing SELECTION replayed exactly (shared CTE with qd16)
-    "qd15_winnow_fps" -> (winnowCte +
+    Query("qd15_winnow_fps", Dedup.winnowFingerprints(_, _), Some(winnowCte +
       """
          SELECT doc_id, CAST(p AS BIGINT) AS pos, h[CAST(p + 1 AS INT)] AS fp
-         FROM sel, unnest(sel.sel) AS t(p)"""),
+         FROM sel, unnest(sel.sel) AS t(p)""")),
     // MOSS containment over the SAME winnowing selection: hot-fp cap (>1024
     // carriers dropped both sides), shared-count self-join on fp, ratio
     // against the capped per-doc fingerprint count, threshold applied to
     // the UNROUNDED ratio (the qd7 jaccard discipline)
-    "qd16_winnow_containment" -> (winnowCte +
+    Query("qd16_winnow_containment", Dedup.winnowContainment(_, _), Some(winnowCte +
       """,
          fps AS (
            SELECT DISTINCT doc_id, h[CAST(p + 1 AS INT)] AS fp
@@ -1959,1375 +2266,28 @@ object SparkEntry {
          FROM pairs p
          JOIN nfp na ON na.doc_id = p.doc_a
          JOIN nfp nb ON nb.doc_id = p.doc_b
-         WHERE p.shared / LEAST(na.n_fp, nb.n_fp) >= 0.2"""),
-    // the within-host rank window here REPLAYS the top_k_rank aggregate
-    // (q19's oracle discipline: window form == heap-aggregate form)
-    "qu1_domain_cap" -> (urlOracleCte +
-      """,
-         d AS (SELECT doc_id, n_chars,
-             regexp_extract(lower(raw_url), '://([^/?#]*)', 1) AS domain FROM u),
-         r AS (SELECT doc_id, domain,
-             ROW_NUMBER() OVER (PARTITION BY domain
-               ORDER BY n_chars DESC, doc_id ASC) AS rn,
-             COUNT(*) OVER (PARTITION BY domain) AS nd FROM d)
-         SELECT doc_id, domain, CAST(nd AS BIGINT) AS domain_docs,
-           CAST(CASE WHEN rn <= 8 THEN rn ELSE 0 END AS INT) AS domain_rank,
-           CAST(domain LIKE '%.spam.example' AS INTEGER) AS blocked,
-           CAST(rn <= 8 AND NOT (domain LIKE '%.spam.example') AS INTEGER) AS kept
-         FROM r"""),
-    // canonicalization replayed step by step (RE2 flavor; 'g' where Spark's
-    // always-global regexp_replace can fire more than once)
-    "qu2_url_dedup" -> (urlOracleCte + urlCanonCte +
-      """
-         SELECT doc_id, raw_url, canon_url,
-           MIN(doc_id) OVER (PARTITION BY canon_url) AS keeper_id,
-           CAST(doc_id <> MIN(doc_id) OVER (PARTITION BY canon_url) AS INTEGER) AS is_dup
-         FROM cz"""),
-    // qu4: the planted raw URL replayed, then every feature as a Java∩RE2
-    // regex or plain length math — no canonicalization (classifiers see the
-    // frontier's raw form); types CAST to match Spark (length diffs INT,
-    // n_params/url_len BIGINT)
-    "qu4_url_features" -> (urlOracleCte +
-      """,
-         f AS (
-           SELECT doc_id, raw_url,
-             lower(regexp_extract(raw_url, '^[A-Za-z]+://([^/?#]+)', 1)) AS host,
-             regexp_extract(raw_url, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1) AS path_s,
-             regexp_extract(raw_url, '\?([^#]*)', 1) AS query_s
-           FROM u)
-         SELECT doc_id, host,
-           CAST(length(host) - length(replace(host, '.', '')) AS INTEGER)
-             AS subdomain_depth,
-           CASE WHEN host LIKE '%.spam.example' THEN 1 ELSE 0 END AS is_spam_tld,
-           CAST(len(regexp_extract_all(host, '[0-9]')) AS INTEGER) AS host_digits,
-           CAST(len(regexp_extract_all(path_s, '/')) AS INTEGER) AS path_depth,
-           CASE WHEN query_s = '' THEN CAST(0 AS BIGINT)
-                ELSE CAST(len(regexp_extract_all(query_s, '&')) + 1 AS BIGINT)
-           END AS n_params,
-           CAST(len(regexp_extract_all(query_s, '(^|&)(utm_[A-Za-z]+|ref)='))
-             AS INTEGER) AS n_tracking_params,
-           CAST(length(raw_url) AS BIGINT) AS url_len
-         FROM f"""),
-    // keeper key replayed arithmetically: shiftleft(epoch,20)+doc_id ==
-    // epoch*1048576+doc_id; shiftright == //; both engines stay in int64
-    "qu3_snapshot_dedup" -> (urlOracleCte + urlCanonCte +
-      """,
-         w AS (SELECT doc_id, canon_url,
-             CAST(1704067200 AS BIGINT) + (doc_id % 97) * 86400
-               + (doc_id % 13) * 3600 AS warc_epoch
-           FROM cz),
-         kk AS (SELECT canon_url, MAX(warc_epoch * 1048576 + doc_id) AS kk
-           FROM w GROUP BY canon_url)
-         SELECT w.doc_id, w.canon_url, CAST(w.warc_epoch AS BIGINT) AS warc_epoch,
-           CAST(kk.kk % 1048576 AS BIGINT) AS keeper_id,
-           CAST(kk.kk // 1048576 AS BIGINT) AS keeper_epoch,
-           CAST(w.doc_id <> kk.kk % 1048576 AS INTEGER) AS is_stale
-         FROM w JOIN kk USING (canon_url)"""),
-    // qu5: per-host frontier budget over the deduped canonical URLs —
-    // all integer math (ceil division as (a + S - 1) // S)
-    "qu5_frontier_schedule" -> (urlOracleCte + urlCanonCte +
-      """,
-         cu AS (SELECT DISTINCT canon_url FROM cz),
-         hh AS (
-           SELECT regexp_extract(canon_url, '^[a-z]+://([^/?#]+)', 1) AS host,
-             CAST(COUNT(*) AS BIGINT) AS n_urls
-           FROM cu GROUP BY 1),
-         tt AS (SELECT CAST(SUM(n_urls) AS BIGINT) AS total_urls,
-             CAST(MAX(n_urls) * 1000 AS BIGINT) AS max_serial_ms
-           FROM hh)
-         SELECT hh.host, hh.n_urls, tt.total_urls,
-           hh.n_urls * 1000 AS serial_ms,
-           (tt.total_urls * 1000 + 63) // 64 AS fleet_floor_ms,
-           hh.n_urls * 1000 // tt.total_urls AS share_milli,
-           CASE WHEN hh.n_urls * 1000 > (tt.total_urls * 1000 + 63) // 64
-             THEN 'politeness' ELSE 'capacity' END AS binding,
-           GREATEST(tt.max_serial_ms, (tt.total_urls * 1000 + 63) // 64)
-             AS makespan_ms
-         FROM hh CROSS JOIN tt"""),
-    "qg1_host_pagerank" -> pagerankOracleSql(5),
-    // triangles: the planted edge set, the deg*100+id orientation, the
-    // wedge join and its closure — all integer math, replayed verbatim;
-    // the coefficient is one pinned division rounded to 6
-    "qg5_host_triangles" ->
-      """WITH hosts AS (SELECT DISTINCT doc_id % 64 AS h FROM documents),
-         raw AS (
-           SELECT h AS a, (h + 1) % 64 AS b FROM hosts
-           UNION ALL SELECT h, (h + 2) % 64 FROM hosts
-           UNION ALL SELECT h, (h + 4) % 64 FROM hosts WHERE h % 8 = 0),
-         und AS (
-           SELECT DISTINCT LEAST(a, b) AS a, GREATEST(a, b) AS b FROM raw),
-         deg AS (
-           SELECT n, COUNT(*) AS d FROM (
-             SELECT a AS n FROM und UNION ALL SELECT b FROM und)
-           GROUP BY n),
-         ord AS (
-           SELECT CASE WHEN da.d * 100 + e.a < db.d * 100 + e.b
-                       THEN e.a ELSE e.b END AS u,
-             CASE WHEN da.d * 100 + e.a < db.d * 100 + e.b
-                  THEN e.b ELSE e.a END AS v,
-             GREATEST(da.d * 100 + e.a, db.d * 100 + e.b) AS kv
-           FROM und e
-             JOIN deg da ON da.n = e.a JOIN deg db ON db.n = e.b),
-         tri AS (
-           SELECT e1.u AS h0, e1.v AS h1, e2.v AS h2
-           FROM ord e1 JOIN ord e2 ON e1.u = e2.u AND e1.kv < e2.kv
-             JOIN ord e3 ON e3.u = e1.v AND e3.v = e2.v),
-         cnt AS (
-           SELECT n, COUNT(*) AS c FROM (
-             SELECT unnest([h0, h1, h2]) AS n FROM tri)
-           GROUP BY n)
-         SELECT deg.n AS host_id, CAST(deg.d AS BIGINT) AS degree,
-           CAST(COALESCE(cnt.c, 0) AS BIGINT) AS triangles,
-           ROUND(CASE WHEN deg.d >= 2
-             THEN 2.0 * COALESCE(cnt.c, 0) / (deg.d * (deg.d - 1))
-             ELSE 0.0 END, 6) AS clustering_coeff
-         FROM deg LEFT JOIN cnt ON cnt.n = deg.n""",
-    "qg3_host_hyperball" -> hyperballOracleSql(4),
-    // label propagation: k unrolled synchronous rounds of the pinned
-    // frequency-then-min vote; block convergence is the spec's claim
-    "qg6_host_communities" -> lpaOracleSql(8),
-    // k-core: the peel waves unrolled (idempotent past the fixpoint, so a
-    // fixed unroll length replays the convergence-based Spark loop exactly;
-    // the planted path needs ~15 waves, 18 gives margin)
-    "qg7_host_kcore" -> kcoreOracleSql(2, 18),
-    "qg8_host_hits" -> hitsOracleSql(4),
-    // qg9: the qg1 planted graph, exact int64 count/sum aggregates (CAST
-    // out of HUGEINT), one pinned IEEE division per metric, NULL guards on
-    // both engines for the zero-variance / all-self-loop edge cases
-    "qg9_host_mixing" ->
-      """WITH e0 AS (
-           SELECT DISTINCT doc_id % 32 AS src,
-             ((doc_id % 32) * 5 + 1 + doc_id % 3) % 32 AS dst
-           FROM documents),
-         nodes AS (SELECT DISTINCT src AS v FROM e0),
-         e AS (SELECT src, dst FROM e0 WHERE dst IN (SELECT v FROM nodes)),
-         ns AS (SELECT src, dst FROM e WHERE src <> dst),
-         eb AS (
-           SELECT DISTINCT src, dst FROM (
-             SELECT src, dst FROM ns UNION ALL SELECT dst, src FROM ns)),
-         dg AS (SELECT src AS v, CAST(COUNT(*) AS BIGINT) AS d FROM eb GROUP BY 1),
-         wd AS (
-           SELECT a.d AS dx, b.d AS dy
-           FROM eb JOIN dg a ON eb.src = a.v JOIN dg b ON eb.dst = b.v),
-         sm AS (
-           SELECT CAST(COUNT(*) AS BIGINT) AS m, CAST(SUM(dx) AS BIGINT) AS sx,
-             CAST(SUM(dx*dy) AS BIGINT) AS sxy, CAST(SUM(dx*dx) AS BIGINT) AS sxx
-           FROM wd),
-         cn AS (
-           SELECT
-             (SELECT CAST(COUNT(*) AS BIGINT) FROM nodes) AS n_hosts,
-             (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_edges,
-             (SELECT CAST(COUNT(*) AS BIGINT) FROM e WHERE src = dst) AS n_self_loops,
-             (SELECT CAST(COUNT(*) AS BIGINT) FROM ns a
-              WHERE EXISTS (SELECT 1 FROM ns b
-                            WHERE b.src = a.dst AND b.dst = a.src)) AS n_reciprocal)
-         SELECT n_hosts, n_edges, n_self_loops, n_reciprocal,
-           CASE WHEN n_edges - n_self_loops <> 0 THEN
-             round(CAST(n_reciprocal AS DOUBLE)
-               / CAST(n_edges - n_self_loops AS DOUBLE), 6) END AS reciprocity,
-           CASE WHEN (m*sxx - sx*sx) <> 0 THEN
-             round(CAST(m*sxy - sx*sx AS DOUBLE)
-               / CAST(m*sxx - sx*sx AS DOUBLE), 6) END AS assortativity
-         FROM cn, sm""",
-    // harmonic centrality: the qg3 register chain + per-round HLL estimates
-    // (exact int64 register sums, pinned f64 constants, 9-digit rounds) +
-    // the ascending-radius harmonic fold — hash-matched end to end
-    "qg4_host_harmonic" -> harmonicOracleSql(4),
-    // HyperANF neighborhood function + interpolated effective diameter:
-    // the same register chain, per-round global sums folded in sorted
-    // order (the qt16 pinned-f64 discipline), one pinned division for the
-    // q-crossing interpolation — NF, fractions, and diameter hash-match
-    "qg10_neighborhood" -> neighborhoodOracleSql(4, 0.9),
-    // personalized PageRank: the qg1 integer fixed-point chain with the
-    // teleport restricted to seeds {1,9,17} — unrolled, bit-for-bit
-    "qg11_seed_pagerank" -> seedPagerankOracleSql(5),
-    // Morton/z-order layout: the 32-term bit interleave, radix file split,
-    // and per-file min/max envelopes — all integer math, replayed exactly
-    "q20_zorder_layout" -> zorderOracleSql(5),
-    // reachability recomputed with a recursive CTE (min reachable label) —
-    // independent of the pointer-jumping CC implementation (qd6 discipline)
-    "qg2_host_components" ->
-      """WITH RECURSIVE hosts AS (
-           SELECT DISTINCT doc_id % 64 AS ch FROM documents),
-         e0 AS (
-           SELECT ch AS a,
-             CASE WHEN ch IN (8, 19, 44, 63) THEN ch ELSE ch + 1 END AS b
-           FROM hosts),
-         edges AS (
-           SELECT a AS src, b AS dst FROM e0
-           UNION SELECT b, a FROM e0),
-         reach(hid, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.hid),
-         comp AS (
-           SELECT hid AS host_id, MIN(r) AS component_id FROM reach GROUP BY hid),
-         sizes AS (
-           SELECT component_id, COUNT(*) AS component_size
-           FROM comp GROUP BY component_id)
-         SELECT comp.host_id, comp.component_id,
-           CAST(sizes.component_size AS BIGINT) AS component_size,
-           comp.host_id = comp.component_id AS is_root
-         FROM comp JOIN sizes USING (component_id)""",
-    "qt19_bpe_merges" -> bpeOracleSql(8),
-    "qt23_bpe_encode" -> bpeEncodeOracleSql(8),
-    "qt49_fertility" -> fertilityOracleSql(8),
-    // SCC bow-tie: ground-truth mutual reachability via a recursive CTE,
-    // fully independent of the Spark side's FW-BW coloring (qg2 style);
-    // scc_id = min mutual-reach partner, roles from the same closure
-    "qg12_host_scc" ->
-      """WITH RECURSIVE e AS (
-           SELECT DISTINCT
-             [0,1,2,3,4,5,6,7,8,9,10,11,12,13,14,15,
-              15,20,21,22,23,23,24,25,26,15,28,29,30,33,35,34]
-               [1 + doc_id % 32] AS src,
-             [1,2,3,4,5,6,7,8,9,10,11,12,13,14,15,8,
-              20,21,22,23,20,24,25,26,27,24,29,28,30,32,34,31]
-               [1 + doc_id % 32] AS dst
-           FROM documents),
-         n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         reach(a, b) AS (
-           SELECT src, dst FROM e
-           UNION
-           SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
-         mutual AS (
-           SELECT r1.a AS v, r1.b AS u
-           FROM reach r1 JOIN reach r2 ON r1.a = r2.b AND r1.b = r2.a),
-         scc AS (
-           SELECT CAST(n.node AS BIGINT) AS host_id,
-             CAST(LEAST(n.node, COALESCE(MIN(m.u), n.node)) AS BIGINT)
-               AS scc_id
-           FROM n LEFT JOIN mutual m ON m.v = n.node
-           GROUP BY n.node),
-         sizes AS (
-           SELECT scc_id, CAST(COUNT(*) AS BIGINT) AS scc_size
-           FROM scc GROUP BY 1),
-         big AS (
-           SELECT scc_id AS core_scc FROM sizes
-           ORDER BY scc_size DESC, scc_id ASC LIMIT 1),
-         core AS (
-           SELECT host_id FROM scc JOIN big ON scc.scc_id = big.core_scc),
-         tc AS (
-           SELECT DISTINCT r.a AS host_id
-           FROM reach r JOIN core c ON r.b = c.host_id),
-         fc AS (
-           SELECT DISTINCT r.b AS host_id
-           FROM reach r JOIN core c ON r.a = c.host_id)
-         SELECT s.host_id, s.scc_id, z.scc_size,
-           CASE WHEN s.scc_id = big.core_scc THEN 'core'
-                WHEN tc.host_id IS NOT NULL THEN 'in'
-                WHEN fc.host_id IS NOT NULL THEN 'out'
-                ELSE 'other' END AS role
-         FROM scc s JOIN sizes z USING (scc_id) CROSS JOIN big
-         LEFT JOIN tc ON s.host_id = tc.host_id
-         LEFT JOIN fc ON s.host_id = fc.host_id""",
-    "qt22_pii_redact" ->
-      """WITH d AS (
-           SELECT doc_id,
-             text ||
-             CASE WHEN doc_id % 2 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR)
-               || '@ex' || CAST(doc_id % 7 AS VARCHAR) || '.com' ELSE '' END ||
-             CASE WHEN doc_id % 3 = 0 THEN ' call 555-'
-               || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-'
-               || lpad(CAST((doc_id * 3) % 10000 AS VARCHAR), 4, '0') ELSE '' END ||
-             CASE WHEN doc_id % 5 = 0 THEN ' from ' || CAST(doc_id % 256 AS VARCHAR)
-               || '.' || CAST((doc_id * 3) % 256 AS VARCHAR)
-               || '.' || CAST((doc_id * 5) % 256 AS VARCHAR)
-               || '.' || CAST((doc_id * 7) % 256 AS VARCHAR) ELSE '' END AS dirty
-           FROM documents)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(dirty, '\b\d{3}-\d{3}-\d{4}\b')) AS BIGINT) AS n_phones,
-           CAST(len(regexp_extract_all(dirty, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
-           regexp_replace(regexp_replace(regexp_replace(dirty,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g'),
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS redacted,
-           CAST(len(regexp_extract_all(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-             + CAST(len(regexp_extract_all(dirty, '\b\d{3}-\d{3}-\d{4}\b')) AS BIGINT)
-             + CAST(len(regexp_extract_all(dirty, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS pii_total
-         FROM d""",
-    "qc1_kmeans" -> kmeansOracleSql(8, 4),
-    "qc6_cluster_quality" -> clusterQualityOracleSql(8, 4),
-    "qc7_silhouette" -> silhouetteOracleSql(8, 4),
-    "qc4_kmeans_parallel" -> kmeansParOracleSql(8, 16, 3),
-    // k-center greedy coreset: the k-1 farthest-point picks unrolled, then
-    // the final assignment — exact int64 L2, every pick replayed
-    "qc5_kcenter_coreset" -> kcenterOracleSql(8),
-    // KMV set-operation estimates across the doc_id-parity shards, with
-    // exact ground truth riding along (the qs10 harness pattern)
-    "qt36_kmv_setops" -> kmvSetOpsOracleSql(256),
-    "qt51_sketched_overlap" -> sketchedOverlapOracleSql(256),
-    // qt40: integer counts via len(regexp_extract_all) (no regexp_count in
-    // DuckDB 1.0), formulas on CAST-to-DOUBLE constants (decimal literals
-    // would otherwise compute in DECIMAL), pinned parenthesization, round 6
-    "qt40_readability" ->
-      """WITH c AS (
-           SELECT doc_id,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_words,
-             GREATEST(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT), 1) AS n_sentences,
-             CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS n_syllables
-           FROM documents),
-         r AS (
-           SELECT doc_id, n_words, n_sentences, n_syllables,
-             CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE) AS wps_raw,
-             CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE) AS spw_raw
-           FROM c)
-         SELECT doc_id, n_words, n_sentences, n_syllables,
-           round(wps_raw, 6) AS wps,
-           round(spw_raw, 6) AS spw,
-           round(CAST(206.835 AS DOUBLE) - CAST(1.015 AS DOUBLE) * wps_raw
-             - CAST(84.6 AS DOUBLE) * spw_raw, 6) AS flesch,
-           round(CAST(0.39 AS DOUBLE) * wps_raw + CAST(11.8 AS DOUBLE) * spw_raw
-             - CAST(15.59 AS DOUBLE), 6) AS fk_grade
-         FROM r""",
-    // qt39: the shard token distributions, bucket spine, smoothing and the
-    // per-bucket JSD term replayed with the PINNED parenthesization
-    // (TextAnalysis.jsdDrift) — p/q/m are single IEEE divisions of
-    // exactly-converted int64s, one ln per operand, round 9
-    "qt39_jsd_drift" ->
-      """WITH w AS (
-           SELECT doc_id % 2 AS half,
-             unnest(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS w
-           FROM documents),
-         wf AS (SELECT half, w FROM w WHERE w <> ''),
-         c AS (
-           SELECT half, CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) % 256 AS bucket,
-             CAST(COUNT(*) AS BIGINT) AS c
-           FROM wf GROUP BY 1, 2),
-         sp AS (SELECT unnest(range(256)) AS bucket),
-         n AS (SELECT
-           CAST(SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-           CAST(SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-           FROM wf),
-         j AS (
-           SELECT sp.bucket,
-             COALESCE(a.c, 0) AS cnt_a, COALESCE(b.c, 0) AS cnt_b
-           FROM sp
-           LEFT JOIN (SELECT bucket, c FROM c WHERE half = 0) a ON sp.bucket = a.bucket
-           LEFT JOIN (SELECT bucket, c FROM c WHERE half = 1) b ON sp.bucket = b.bucket),
-         t AS (
-           SELECT bucket, cnt_a, cnt_b,
-             CAST(cnt_a + 1 AS DOUBLE) / CAST(n.n_a + 256 AS DOUBLE) AS p,
-             CAST(cnt_b + 1 AS DOUBLE) / CAST(n.n_b + 256 AS DOUBLE) AS q
-           FROM j, n)
-        SELECT bucket, cnt_a, cnt_b,
-          round((p * ln(p / ((p + q) / 2.0)) + q * ln(q / ((p + q) / 2.0))) * 0.5, 9) AS jsd_term
-        FROM t""",
-    // decontamination rewrite: qd14's span replay pointed at the eval-gram
-    // set — islands chain at gap <= 4, spans >= 6 tokens, rebuild included
-    "qt38_decontam_rewrite" ->
-      """WITH base AS (
-           SELECT doc_id, string_split(text, ' ') AS w,
-             len(string_split(text, ' ')) AS n
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS pos,
-             CAST('0x' || substr(md5(array_to_string(w[(i+1):(i+4)], ' ')),
-               1, 15) AS BIGINT) AS gh
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(0, CAST(n - 4 AS INT))) AS i
-                 FROM base WHERE n >= 4)),
-         ev AS (SELECT DISTINCT gh FROM g WHERE doc_id % 29 = 0),
-         h AS (
-           SELECT doc_id, pos FROM g JOIN ev USING (gh)
-           WHERE doc_id % 29 <> 0),
-         br AS (
-           SELECT doc_id, pos,
-             CASE WHEN pos - lag(pos) OVER
-                 (PARTITION BY doc_id ORDER BY pos) <= 4
-               THEN 0 ELSE 1 END AS brk
-           FROM h),
-         isl AS (
-           SELECT doc_id, pos,
-             SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-           FROM br),
-         sp AS (
-           SELECT doc_id, MIN(pos) AS s, MAX(pos) + 4 AS e
-           FROM isl GROUP BY doc_id, grp
-           HAVING MAX(pos) + 4 - MIN(pos) >= 6),
-         agg AS (
-           SELECT doc_id, COUNT(*) AS n_spans, SUM(e - s) AS removed
-           FROM sp GROUP BY doc_id),
-         rem AS (
-           SELECT doc_id,
-             unnest(generate_series(CAST(s AS INT), CAST(e - 1 AS INT))) AS idx
-           FROM sp),
-         tok AS (
-           SELECT doc_id, i - 1 AS idx, w[i] AS tok
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(1, CAST(n AS INT))) AS i
-                 FROM base WHERE doc_id % 29 <> 0)),
-         kept AS (
-           SELECT t.doc_id, t.idx, t.tok
-           FROM tok t LEFT JOIN rem r
-             ON t.doc_id = r.doc_id AND t.idx = r.idx
-           WHERE r.idx IS NULL),
-         rebuilt AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS clean_text
-           FROM kept GROUP BY doc_id)
-         SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
-           CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans,
-           CAST(COALESCE(a.removed, 0) AS BIGINT) AS removed_tokens,
-           COALESCE(r.clean_text, '') AS clean_text
-         FROM base b
-         LEFT JOIN agg a USING (doc_id)
-         LEFT JOIN rebuilt r USING (doc_id)
-         WHERE b.doc_id % 29 <> 0""",
-    // script profile: every bucket replayed from unicode(ch) BETWEEN tests
-    // (ranges documented at GraftImpl.scriptProfile), dominant = the same
-    // fixed-priority first-maximal CASE, confidence the same single
-    // rounded f64 division
-    "qt37_script_profile" ->
-      """WITH c AS (
-           SELECT doc_id, lang,
-             [unicode(substr(text, i, 1)) FOR i IN range(1, length(text) + 1)] AS cps
-           FROM documents),
-         e AS (SELECT doc_id, lang, unnest(cps) AS cp FROM c),
-         b AS (
-           SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_cp,
-             CAST(SUM(CASE WHEN (cp BETWEEN 65 AND 90) OR (cp BETWEEN 97 AND 122)
-               OR (cp BETWEEN 192 AND 591) THEN 1 ELSE 0 END) AS BIGINT) AS latin,
-             CAST(SUM(CASE WHEN cp BETWEEN 1024 AND 1279 THEN 1 ELSE 0 END) AS BIGINT) AS cyrillic,
-             CAST(SUM(CASE WHEN cp BETWEEN 880 AND 1023 THEN 1 ELSE 0 END) AS BIGINT) AS greek,
-             CAST(SUM(CASE WHEN cp BETWEEN 1536 AND 1791 THEN 1 ELSE 0 END) AS BIGINT) AS arabic,
-             CAST(SUM(CASE WHEN cp BETWEEN 1424 AND 1535 THEN 1 ELSE 0 END) AS BIGINT) AS hebrew,
-             CAST(SUM(CASE WHEN (cp BETWEEN 19968 AND 40959) OR (cp BETWEEN 13312 AND 19903)
-               OR (cp BETWEEN 12352 AND 12543) THEN 1 ELSE 0 END) AS BIGINT) AS cjk,
-             CAST(SUM(CASE WHEN cp BETWEEN 44032 AND 55215 THEN 1 ELSE 0 END) AS BIGINT) AS hangul,
-             CAST(SUM(CASE WHEN cp BETWEEN 48 AND 57 THEN 1 ELSE 0 END) AS BIGINT) AS digit,
-             CAST(SUM(CASE WHEN cp = 32 OR cp BETWEEN 9 AND 13 THEN 1 ELSE 0 END) AS BIGINT) AS space
-           FROM e GROUP BY 1, 2)
-         SELECT doc_id, lang, n_cp, latin, cyrillic, greek, arabic, hebrew,
-           cjk, hangul, digit, space,
-           n_cp - latin - cyrillic - greek - arabic - hebrew - cjk - hangul
-             - digit - space AS other,
-           latin + cyrillic + greek + arabic + hebrew + cjk + hangul AS letter_cp,
-           CASE
-             WHEN latin + cyrillic + greek + arabic + hebrew + cjk + hangul = 0 THEN 'none'
-             WHEN latin >= GREATEST(cyrillic, greek, arabic, hebrew, cjk, hangul) THEN 'latin'
-             WHEN cyrillic >= GREATEST(greek, arabic, hebrew, cjk, hangul) THEN 'cyrillic'
-             WHEN greek >= GREATEST(arabic, hebrew, cjk, hangul) THEN 'greek'
-             WHEN arabic >= GREATEST(hebrew, cjk, hangul) THEN 'arabic'
-             WHEN hebrew >= GREATEST(cjk, hangul) THEN 'hebrew'
-             WHEN cjk >= hangul THEN 'cjk'
-             ELSE 'hangul' END AS dominant_script,
-           CASE
-             WHEN latin + cyrillic + greek + arabic + hebrew + cjk + hangul = 0 THEN 0.0
-             ELSE ROUND(
-               CAST(GREATEST(latin, cyrillic, greek, arabic, hebrew, cjk, hangul) AS DOUBLE)
-               / (latin + cyrillic + greek + arabic + hebrew + cjk + hangul), 6) END
-             AS script_frac
-         FROM b""",
-    // PQ/ADC ANN: codebook training, encoding, asymmetric distances, and
-    // ranking all in exact int64 fixed-point — the whole approximate result
-    // hash-matches (defaults of Similarity.annPq: m=4, ks=8, rounds=2,
-    // sampleCap=4096, nQueries=5, k=10)
-    "qs6_ann_pq" -> pqOracleSql(4, 8, 2, 4096, 5, 10),
-    // recall@k harness: the ENTIRE evaluation of the PQ approximation is
-    // itself oracled — the approx side nests qs6's full replay (training,
-    // assignment, ADC, ranking) as a CTE; the exact side recomputes integer
-    // L2 on the same fixed-point vectors; recall = |approx ∩ exact| / k
-    "qs10_recall_eval" ->
-      s"""WITH approx AS (${pqOracleSql(4, 8, 2, 4096, 5, 10)}),
-         fx AS (
-           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
-                           FOR i IN range(1, len(embedding)+1)] AS qv
-           FROM embeddings),
-         ex AS (
-           SELECT query_id, neighbor_id FROM (
-             SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-                 list_sum([(a.qv[i]-b.qv[i])*(a.qv[i]-b.qv[i])
-                           FOR i IN range(1, len(a.qv)+1)]) ASC,
-                 b.vec_id ASC) AS rnk
-             FROM fx a JOIN fx b ON a.vec_id < 5 AND b.vec_id <> a.vec_id)
-           WHERE rnk <= 10),
-         hits AS (
-           SELECT a.query_id, CAST(COUNT(*) AS BIGINT) AS n_hits
-           FROM approx a JOIN ex ON ex.query_id = a.query_id
-             AND ex.neighbor_id = a.neighbor_id
-           GROUP BY a.query_id),
-         qids AS (SELECT DISTINCT query_id FROM approx)
-         SELECT qids.query_id,
-           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           ROUND(COALESCE(h.n_hits, 0) / 10.0, 6) AS recall_at_k
-         FROM qids LEFT JOIN hits h USING (query_id)""",
-    // IVF-PQ: coarse training, cells, residuals, PQ training, encoding,
-    // probes, ADC, and ranking all exact int64 — the whole two-level
-    // approximate result hash-matches (defaults of Similarity.annIvfPq:
-    // kc=8, nprobe=4, m=4, ks=8, rounds=2, sampleCap=4096, 5 queries, k=10)
-    "qs7_ann_ivfpq" -> ivfpqOracleSql(8, 4, 4, 8, 2, 4096, 5, 10),
-    // the two-stage production query: the full IVF-PQ chain at shortlist
-    // width 100, then exact-cosine re-rank (list_cosine_similarity ==
-    // cosine_ff, the qs1-proven equivalence) — training to final ranking
-    // replayed end to end
-    "qs8_ann_rerank" ->
-      (ivfpqCteSql(8, 4, 4, 8, 2, 4096, 5, 100, "shortl") +
-        """,
-         qvv AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
-         sc AS (
-           SELECT s.query_id, s.neighbor_id,
-             list_cosine_similarity(CAST(qvv.embedding AS DOUBLE[]),
-               CAST(nv.embedding AS DOUBLE[])) AS cos
-           FROM shortl s
-           JOIN qvv ON qvv.vec_id = s.query_id
-           JOIN embeddings nv ON nv.vec_id = s.neighbor_id)
-         SELECT query_id, neighbor_id, rnk, cosine FROM (
-           SELECT query_id, neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cos DESC, neighbor_id ASC) AS rnk,
-             ROUND(cos, 6) AS cosine
-           FROM sc) WHERE rnk <= 10"""),
-    "qt21_dsir_weights" ->
-      """WITH w AS (
-           SELECT doc_id, lang,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         f AS (
-           SELECT doc_id, lang, unnest(
-             ['u:' || x FOR x IN words] ||
-             ['b:' || words[i] || ' ' || words[i+1]
-              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS f
-           FROM w),
-         fb AS (
-           SELECT doc_id, lang,
-             CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 1024 AS bucket
-           FROM f),
-         cnt AS (
-           SELECT bucket, COUNT(*) AS n_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
-           FROM fb GROUP BY bucket),
+         WHERE p.shared / LEAST(na.n_fp, nb.n_fp) >= 0.2""")),
+    // duplicate-chunk share: a fingerprint is duplicated iff it occurs in
+    // >= 2 DISTINCT docs; per-doc share over the same chunk set
+    Query("qd18_chunk_dup_share", Dedup.chunkDupShare(_, _), Some(chunkCte + """,
+         c AS (SELECT doc_id, chunk_fp FROM ch),
+         dup AS (
+           SELECT chunk_fp FROM c GROUP BY chunk_fp
+           HAVING COUNT(DISTINCT doc_id) >= 2),
+         nd AS (
+           SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup
+           FROM c JOIN dup USING (chunk_fp) GROUP BY c.doc_id),
          tot AS (
-           SELECT COUNT(*) AS t_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_tgt
-           FROM fb),
-         spine AS (SELECT unnest(range(0, 1024)) AS bucket),
-         lam AS (
-           SELECT spine.bucket,
-             ROUND(ln((COALESCE(n_tgt, 0) + 1.0) / (t_tgt + 1024.0)) -
-                   ln((COALESCE(n_raw, 0) + 1.0) / (t_raw + 1024.0)), 9) AS lam
-           FROM spine LEFT JOIN cnt ON spine.bucket = cnt.bucket CROSS JOIN tot)
-         SELECT doc_id, COUNT(*) AS n_feats,
-           ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_sort(list(lam))),
-             (a, b) -> a + b), 6) AS log_weight
-         FROM fb JOIN lam USING (bucket)
-         GROUP BY doc_id""",
-    // qt21's fitted model, SQ8-quantized (round-half-away, scale=127/max|w|);
-    // the logit sum and keep flag are pure integers — the whole decision is
-    // hash-verified, not epsilon-compared
-    "qt24_classifier_gate" ->
-      """WITH w AS (
-           SELECT doc_id, lang,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         f AS (
-           SELECT doc_id, lang, unnest(
-             ['u:' || x FOR x IN words] ||
-             ['b:' || words[i] || ' ' || words[i+1]
-              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS f
-           FROM w),
-         fb AS (
-           SELECT doc_id, lang,
-             CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 1024 AS bucket
-           FROM f),
-         cnt AS (
-           SELECT bucket, COUNT(*) AS n_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
-           FROM fb GROUP BY bucket),
-         tot AS (
-           SELECT COUNT(*) AS t_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_tgt
-           FROM fb),
-         spine AS (SELECT unnest(range(0, 1024)) AS bucket),
-         lam AS (
-           SELECT spine.bucket,
-             ROUND(ln((COALESCE(n_tgt, 0) + 1.0) / (t_tgt + 1024.0)) -
-                   ln((COALESCE(n_raw, 0) + 1.0) / (t_raw + 1024.0)), 9) AS lam
-           FROM spine LEFT JOIN cnt ON spine.bucket = cnt.bucket CROSS JOIN tot),
-         mx AS (SELECT MAX(abs(lam)) AS max_abs FROM lam),
-         qm AS (
-           SELECT bucket,
-             CASE WHEN max_abs = 0 THEN 0
-               ELSE CAST(ROUND(lam * 127.0 / max_abs) AS BIGINT) END AS qw
-           FROM lam, mx)
-         SELECT doc_id, COUNT(*) AS n_feats, CAST(SUM(qw) AS BIGINT) AS logit_q,
-           CAST(SUM(qw) > 0 AS INTEGER) AS kept
-         FROM fb JOIN qm USING (bucket)
-         GROUP BY doc_id""",
-    // alpha = 0.5 temperature mixing: sqrt is IEEE-correctly-rounded on
-    // both engines, so floor(k*sqrt(n_min)/sqrt(n_d)) agrees bit-for-bit
-    "qt25_domain_mixture" ->
-      """WITH c AS (
-           SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
-         m AS (SELECT MIN(n_docs) AS n_min FROM c),
-         r AS (
-           SELECT source, n_docs,
-             CAST(FLOOR(1000000.0 * sqrt(CAST(n_min AS DOUBLE)) /
-               sqrt(CAST(n_docs AS DOUBLE))) AS BIGINT) AS keep_per_k
-           FROM c, m),
-         d AS (
-           SELECT doc_id, source,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#mix'),
-               1, 15) AS BIGINT) % 1000000 AS h
-           FROM documents)
-         SELECT d.doc_id, d.source, r.n_docs AS domain_docs, r.keep_per_k,
-           CAST(d.h < r.keep_per_k AS INTEGER) AS kept
-         FROM d JOIN r USING (source)""",
-    // C4 line-level battery: the deterministic md5 segmentation, both
-    // per-line rules, the keep-first dedup (list_position == 1-based lambda
-    // index), and the >=3-lines doc gate are all replayed in list math
-    "qt26_c4_lines" ->
-      """WITH base AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         seg AS (
-           SELECT doc_id, w, len(w) AS n,
-             [i FOR i IN range(0, len(w))
-              IF (CAST('0x' || substr(md5(doc_id || ':' || i), 1, 15)
-                  AS BIGINT)) % 5 = 0] AS brk
-           FROM base),
-         lined AS (
-           SELECT doc_id,
-             list_filter(
-               [array_to_string(
-                  w[(list_prepend(0, [b + 1 FOR b IN brk])[k] + 1)
-                    :(list_append(brk, n - 1)[k] + 1)], ' ')
-                FOR k IN range(1, len(brk) + 2)],
-               x -> x <> '') AS lines_all
-           FROM seg),
-         ruled AS (
-           SELECT doc_id, lines_all,
-             list_filter(lines_all, l ->
-               len(string_split(l, ' ')) >= 4 AND
-               NOT list_contains(string_split(l, ' '), 'dup')) AS lr
-           FROM lined),
-         kept AS (
-           SELECT doc_id, lines_all, lr,
-             list_filter(lr, (l, i) -> list_position(lr, l) = i) AS lk
-           FROM ruled)
-         SELECT doc_id,
-           CAST(len(lines_all) AS BIGINT) AS n_lines,
-           CAST(len(lines_all) - len(lr) AS BIGINT) AS n_rule_dropped,
-           CAST(len(lr) - len(lk) AS BIGINT) AS n_dup_dropped,
-           CAST(len(lk) AS BIGINT) AS n_kept,
-           CAST(len(lk) >= 3 AS INTEGER) AS kept,
-           COALESCE(array_to_string(lk, ' '), '') AS clean_text
-         FROM kept""",
-    // Gopher repetition battery: md5 segmentation, dup segment stats,
-    // top/dup n-gram char fractions, and the A1 pass flag, all replayed
-    "qt29_gopher_repetition" -> gopherRepOracleSql(Seq(2, 3, 4), 5 to 10,
-      Seq("dup_line_frac" -> 0.30, "dup_line_char_frac" -> 0.20,
-        "dup_para_frac" -> 0.30, "dup_para_char_frac" -> 0.20,
-        "top2_char_frac" -> 0.20, "top3_char_frac" -> 0.18,
-        "top4_char_frac" -> 0.16, "dup5_char_frac" -> 0.15,
-        "dup6_char_frac" -> 0.14, "dup7_char_frac" -> 0.13,
-        "dup8_char_frac" -> 0.12, "dup9_char_frac" -> 0.11,
-        "dup10_char_frac" -> 0.10)),
-    // HLL registers replayed exactly: same bigram + 60-bit md5-half hash
-    // stream as qt12, bucket = h % 64, rank = 55 - bitlength(h // 64)
-    // (bitlength via bin() string math — integer-exact, no log2 rounding
-    // risk), max per bucket, zero registers pinned by the range left join
-    "qt27_hll_distinct" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         e AS (SELECT unnest(sh) AS g FROM sh),
-         h AS (SELECT DISTINCT CAST('0x' || substr(md5(g),1,15) AS BIGINT) AS h FROM e),
-         r AS (SELECT h % 64 AS bucket,
-                 CASE WHEN h // 64 = 0 THEN 55
-                   ELSE 55 - length(ltrim(bin(h // 64), '0')) END AS rank
-               FROM h),
-         regs AS (SELECT bucket, MAX(rank) AS register FROM r GROUP BY bucket)
-         SELECT CAST(b.bucket AS INT) AS bucket,
-           CAST(COALESCE(regs.register, 0) AS INT) AS register
-         FROM (SELECT unnest(range(0, 64)) AS bucket) b
-         LEFT JOIN regs USING (bucket)""",
-    "qc2_semdedup" -> semdedupOracleSql(8, 4, 2025L),
-    "qc3_prototype_prune" -> prototypePruneOracleSql(8, 4),
-    "qt20_gopher_rules" ->
-      """SELECT doc_id, word_count, mean_word_len, symbol_word_ratio,
-           bullet_line_ratio, ellipsis_line_ratio, alpha_word_ratio,
-           stop_distinct,
-           CAST(word_count BETWEEN 50 AND 100000
-             AND mean_word_len BETWEEN 3 AND 10
-             AND symbol_word_ratio <= 0.1
-             AND bullet_line_ratio < 0.9
-             AND ellipsis_line_ratio < 0.3
-             AND alpha_word_ratio >= 0.8
-             AND stop_distinct >= 2 AS INTEGER) AS passes_gopher
-         FROM (
-           SELECT doc_id,
-             CAST(len(words) AS BIGINT) AS word_count,
-             round(CAST(list_sum([length(w) FOR w IN words]) AS DOUBLE) / len(words), 4) AS mean_word_len,
-             round(len(regexp_extract_all(text, '#|\.\.\.|…')) / CAST(len(words) AS DOUBLE), 6) AS symbol_word_ratio,
-             round(len([l FOR l IN lines IF regexp_matches(l, '^\s*[-*•]')]) / CAST(len(lines) AS DOUBLE), 6) AS bullet_line_ratio,
-             round(len([l FOR l IN lines IF regexp_matches(l, '(\.\.\.|…)\s*$')]) / CAST(len(lines) AS DOUBLE), 6) AS ellipsis_line_ratio,
-             round(len([w FOR w IN words IF regexp_matches(w, '[A-Za-z]')]) / CAST(len(words) AS DOUBLE), 6) AS alpha_word_ratio,
-             CAST(regexp_matches(lower(text), '\bthe\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bbe\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bto\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bof\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\band\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bthat\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bhave\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bwith\b') AS BIGINT) AS stop_distinct
-           FROM (
-             SELECT doc_id, text,
-               string_split_regex(trim(text), '\s+') AS words,
-               string_split(text, chr(10)) AS lines
-             FROM documents))""",
-    "q01_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-         COUNT(*) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q02_filter_pushdown" ->
-      """SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-         COUNT(*) AS n_items
-         FROM lineitem
-         WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-           AND l_discount >= 0.05
-         GROUP BY 1""",
-    "q03_broadcast_join" ->
-      """SELECT c_mktsegment,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-         COUNT(*) AS n_orders
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment""",
-    "q04_shuffle_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_lines,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority""",
-    "q05_multi_join" ->
-      """SELECT r_name, COUNT(*) AS n_customers,
-         CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name""",
-    "q06_topk_orders" ->
-      """SELECT o_orderkey, o_totalprice AS total_price FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-    "q07_window_rank" ->
-      """SELECT c_nationkey AS nationkey, c_custkey AS custkey,
-         CAST(c_acctbal AS DOUBLE) AS acctbal, rnk FROM (
-           SELECT c_nationkey, c_custkey, c_acctbal,
-             ROW_NUMBER() OVER (PARTITION BY c_nationkey
-               ORDER BY c_acctbal DESC, c_custkey ASC) AS rnk
-           FROM customer) WHERE rnk <= 3""",
-    // the SAME window SQL as q07: the Spark side runs the bounded top_k_rank
-    // aggregate; equality with the single-window form IS the claim
-    "q19_topk_aggregate" ->
-      """SELECT c_nationkey AS nationkey, c_custkey AS custkey,
-         CAST(c_acctbal AS DOUBLE) AS acctbal, rnk FROM (
-           SELECT c_nationkey, c_custkey, c_acctbal,
-             ROW_NUMBER() OVER (PARTITION BY c_nationkey
-               ORDER BY c_acctbal DESC, c_custkey ASC) AS rnk
-           FROM customer) WHERE rnk <= 3""",
-    "q08_distinct_agg" ->
-      """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_customers,
-         COUNT(*) AS n_orders FROM orders GROUP BY o_orderstatus""",
-    "q09_anti_join" ->
-      """SELECT c_nationkey AS nationkey, COUNT(*) AS n_idle_customers
-         FROM customer WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-         GROUP BY c_nationkey""",
-    "q10_semi_join" ->
-      """SELECT p_brand, COUNT(*) AS n_parts FROM part
-         WHERE p_partkey IN (SELECT l_partkey FROM lineitem)
-         GROUP BY p_brand""",
-    "q11_set_intersect" ->
-      """SELECT COUNT(*) AS n_both FROM (
-           SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-           INTERSECT
-           SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW')""",
-    "q12_events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-         COUNT(*) AS n_events,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2""",
-    "q13_rollup" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "q14_sessionize" ->
-      """WITH g AS (
-           SELECT user_id, ts, event_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800 THEN 1 ELSE 0 END AS new_session
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (
-           SELECT user_id, ts,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS session_id
-           FROM g),
-         per_session AS (
-           SELECT user_id, session_id, COUNT(*) AS n_events,
-             CAST(floor(epoch(MAX(ts))) AS BIGINT) - CAST(floor(epoch(MIN(ts))) AS BIGINT) AS duration_s
-           FROM s GROUP BY user_id, session_id)
-         SELECT user_id, COUNT(*) AS n_sessions,
-           CAST(SUM(n_events) AS BIGINT) AS n_events,
-           MAX(duration_s) AS max_session_s
-         FROM per_session GROUP BY user_id""",
-    "q15_exists_subquery" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_customers FROM customer
-         WHERE EXISTS (SELECT 1 FROM orders
-           WHERE o_custkey = c_custkey AND o_totalprice > 200000.0)
-         GROUP BY c_mktsegment""",
-    "q16_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-         FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""",
-    // as-of semantics spelled out (join + rank) — fine at oracle scale; the
-    // Spark side uses the union+carry-window form, same deterministic result
-    "q17_asof_join" ->
-      """WITH m AS (
-           SELECT e.event_id, e.user_id, o.o_orderkey, o.o_totalprice,
-             ROW_NUMBER() OVER (PARTITION BY e.event_id
-               ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-           FROM events e JOIN orders o
-             ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)
-         SELECT event_id, user_id, o_orderkey AS asof_orderkey,
-           o_totalprice AS asof_totalprice
-         FROM m WHERE rn = 1""",
-    // range join: the oracle runs the direct inequality predicate; the
-    // Spark side runs the binned equi-join — equality IS the claim
-    "q18_range_join" ->
-      """WITH e AS (
-           SELECT event_id, event_type,
-             CAST(floor(epoch(ts)) AS BIGINT) AS sec
-           FROM events)
-         SELECT a.event_type, COUNT(*) AS n_pairs,
-           MIN(abs(a.sec - b.sec)) AS min_gap_s,
-           MAX(abs(a.sec - b.sec)) AS max_gap_s
-         FROM e a JOIN e b
-           ON a.event_type = b.event_type AND a.event_id < b.event_id
-           AND abs(a.sec - b.sec) <= 120
-         GROUP BY a.event_type""",
-    "qt5_bigram_freq" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         b AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS bigrams
-           FROM w),
-         e AS (SELECT unnest(bigrams) AS bigram FROM b)
-         SELECT bigram, COUNT(*) AS n_docs FROM e
-         GROUP BY bigram HAVING COUNT(*) >= 10""",
-    // Count-Min Sketch cells replayed exactly: same md5-affine lane hashes
-    // as qd2, every (d, w) cell of the 4x64 grid incl. zeros
-    "qt6_cms_bigrams" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         b AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         e AS (SELECT unnest(sh) AS item FROM b),
-         h AS (
-           SELECT CAST('0x' || substr(md5(item),1,15) AS BIGINT) AS a,
-                  CAST('0x' || substr(md5(item),16,15) AS BIGINT) AS bb
-           FROM e),
-         cells AS (
-           SELECT d.d, CAST(((a + d.d * bb) % 2305843009213693951) % 64 AS INT) AS w,
-                  COUNT(*) AS n
-           FROM h CROSS JOIN (SELECT unnest(range(0, 4)) AS d) d
-           GROUP BY 1, 2),
-         grid AS (
-           SELECT CAST(dd.d AS INT) AS d, CAST(ww.w AS INT) AS w
-           FROM (SELECT unnest(range(0, 4)) AS d) dd
-           CROSS JOIN (SELECT unnest(range(0, 64)) AS w) ww)
-         SELECT grid.d, grid.w, COALESCE(cells.n, 0) AS n
-         FROM grid LEFT JOIN cells ON grid.d = cells.d AND grid.w = cells.w""",
-    "qt7_hash_sample" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-         WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#graft'), 1, 15) AS BIGINT) % 1000 < 100""",
-    // Heavy hitters: the CMS runtime filter is exact-output-preserving
-    // (over-count-only => no false negatives; false positives die on the
-    // exact count filter), so the oracle is the PLAIN exact HAVING query
-    // over the same bigram stream — the qt13 shared-oracle argument
-    "qt50_heavy_hitters" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         b AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         e AS (SELECT unnest(sh) AS item FROM b),
-         t AS (SELECT GREATEST(CAST(COUNT(*) AS BIGINT) // 1000, 1) AS th
-               FROM e)
-         SELECT item, CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM e GROUP BY item
-         HAVING COUNT(*) >= (SELECT th FROM t)""",
-    "qt8_contamination" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+3], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-3, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         ev AS (SELECT doc_id AS eval_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 = 0),
-         co AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 <> 0)
-         SELECT co.doc_id, ev.eval_id, COUNT(*) AS n_shared_grams
-         FROM co JOIN ev USING (g)
-         GROUP BY 1, 2""",
-    "qt9_tfidf" ->
-      """WITH wds AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM wds GROUP BY 1, 2),
-         dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
-         nn AS (SELECT COUNT(*) AS n FROM documents),
-         s AS (
-           SELECT doc_id, term, tf * ln(n / df) AS score,
-             ROW_NUMBER() OVER (PARTITION BY doc_id
-               ORDER BY tf * ln(n / df) DESC, term ASC) AS rnk
-           FROM tf JOIN dfreq USING (term) CROSS JOIN nn)
-         SELECT doc_id, term, ROUND(score, 6) AS tfidf, rnk
-         FROM s WHERE rnk <= 3""",
-    // Gopher-style repetition filters: non-distinct bigram slot counts, ties
-    // on the top bigram resolve lexicographically in both engines
-    "qt10_repetition" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         b AS (
-           SELECT doc_id, words,
-             CASE WHEN len(words) >= 2 THEN
-               [list_aggregate(words[i:i+1], 'string_agg', ' ')
-                FOR i IN range(1, len(words))]
-             ELSE [] END AS bg
-           FROM w),
-         c AS (
-           SELECT doc_id, bigram, COUNT(*) AS cnt
-           FROM (SELECT doc_id, unnest(bg) AS bigram FROM b) GROUP BY 1, 2),
-         m AS (
-           SELECT doc_id, MAX(cnt) AS top_count,
-             CAST(SUM(cnt) AS BIGINT) AS n_bigrams
-           FROM c GROUP BY 1),
-         tb AS (
-           SELECT c.doc_id, MIN(c.bigram) AS top_bigram
-           FROM c JOIN m ON c.doc_id = m.doc_id AND c.cnt = m.top_count
-           GROUP BY 1),
-         wm AS (
-           SELECT doc_id, CAST(len(words) AS BIGINT) AS n_words,
-             ROUND(1 - len(list_distinct(words)) / CAST(len(words) AS DOUBLE), 6)
-               AS dup_word_frac
-           FROM w)
-         SELECT wm.doc_id, wm.n_words, wm.dup_word_frac, tb.top_bigram,
-           m.top_count, ROUND(m.top_count / CAST(m.n_bigrams AS DOUBLE), 6)
-             AS top_bigram_frac
-         FROM wm JOIN m ON wm.doc_id = m.doc_id
-         JOIN tb ON wm.doc_id = tb.doc_id""",
-    "qd1_exact_dedup" ->
-      """SELECT n_docs AS group_size, COUNT(*) AS n_groups FROM (
-           SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-             COUNT(*) AS n_docs
-           FROM documents GROUP BY 1)
-         GROUP BY 1""",
-    "qd5_embed_dup" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-           CAST(b.embedding AS DOUBLE[])), 6) AS cosine
-         FROM embeddings a, embeddings b
-         WHERE a.vec_id < b.vec_id
-           AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-             CAST(b.embedding AS DOUBLE[])) > 0.5""",
-    "qd2_minhash_sigs" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+2], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-2, 1)+1)], x -> x <> '')) AS sh
-           FROM w)
-         SELECT doc_id, len(sh) AS n_shingles,
-           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-             + 0 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_0,
-           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-             + 1 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_1,
-           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-             + 2 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_2,
-           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-             + 3 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_3
-         FROM sh""",
-    // FNV-1a + bit-vote SimHash replayed exactly in HUGEINT arithmetic
-    // (the byte fold is a list_reduce seeded with the FNV offset basis)
-    "qd3_simhash" -> (simhashCte +
-      """
-         SELECT doc_id, simhash, prefix16 FROM sg"""),
-    // simhash near-dup pairs: the oracle is BRUTE FORCE over the replayed
-    // fingerprints (all pairs, bit_count(xor) <= 8) — fully independent of
-    // the Manku two-block blocking, so hash equality IS the losslessness
-    // proof for the blocking scheme at this threshold
-    "qd17_simhash_pairs" -> (simhashCte +
-      """
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         FROM sg a JOIN sg b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.simhash, b.simhash)) <= 8"""),
-    "qd4_ngram_jaccard" ->
-      """WITH w AS (
-           SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh0 AS (
-           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         bs AS (
-           SELECT lang, len_bucket, COUNT(*) AS n_in_block
-           FROM sh0 GROUP BY 1, 2),
-         sh AS (
-           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
-           WHERE bs.n_in_block <= 4096)
-         SELECT doc_a, doc_b, ROUND(jaccard, 6) AS jaccard FROM (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.sh, b.sh))
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-           FROM sh a JOIN sh b
-             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-             AND a.doc_id < b.doc_id)
-         WHERE jaccard >= 0.06""",
-    // connected components over the near-dup pair graph, replayed as a
-    // recursive reachability CTE (cluster id = min reachable doc id)
-    "qd6_dedup_clusters" ->
-      """WITH RECURSIVE w AS (
-           SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh0 AS (
-           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         bs AS (
-           SELECT lang, len_bucket, COUNT(*) AS n_in_block
-           FROM sh0 GROUP BY 1, 2),
-         sh AS (
-           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
-           WHERE bs.n_in_block <= 4096),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM sh a JOIN sh b
-             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-             AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.sh, b.sh))
-             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.1),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL SELECT doc_b, doc_a FROM pairs),
-         reach(doc_id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.doc_id),
-         comp AS (
-           SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
-         sizes AS (
-           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id)
-         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
-           comp.doc_id = comp.cluster_id AS keep
-         FROM comp JOIN sizes USING (cluster_id)""",
-    // banded portable-minhash LSH: the oracle replays the SAME md5-affine
-    // lane signatures (qd2's family), the SAME 4x2 band-collision predicate,
-    // and the exact-Jaccard verify — so recall curve aside, every emitted
-    // pair and jaccard value must match bit-for-bit
-    "qd7_minhash_lsh_pairs" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0)
-         SELECT doc_a, doc_b, ROUND(j, 6) AS jaccard FROM (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.sh, b.sh))
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS j
-           FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
-             (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
-             (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
-             (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
-             (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])))
-         WHERE j >= 0.2""",
-    // qd21: qd7's sigs + band predicate, NO threshold, plus the lane-match
-    // estimator — matches/8 is a dyadic rational (exact f64), the exact
-    // Jaccard rounds 6, and the error is one IEEE subtraction (round 6)
-    "qd21_minhash_calibration" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0)
-         SELECT doc_a, doc_b, matches,
-           CAST(matches AS DOUBLE) / 8.0 AS est_jaccard,
-           ROUND(j, 6) AS jaccard,
-           ROUND(CAST(matches AS DOUBLE) / 8.0 - ROUND(j, 6), 6) AS err
-         FROM (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-               FOR i IN range(1, 9)]) AS BIGINT) AS matches,
-             len(list_intersect(a.sh, b.sh))
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS j
-           FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
-             (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
-             (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
-             (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
-             (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])))""",
-    // qd23: the band stage as a retrieval system — deterministic 256-doc
-    // hash sample, all pairs with exact Jaccard + the qd7 band predicate,
-    // one row of integer counts and milli rates
-    "qd23_lsh_eval" ->
-      """WITH hsel AS (
-           SELECT doc_id, text FROM documents
-           ORDER BY CAST('0x' || substr(md5('lsheval:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT), doc_id
-           LIMIT 256),
-         w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM hsel),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0),
-         p AS (
-           SELECT
-             len(list_intersect(a.sh, b.sh))
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS j,
-             CASE WHEN (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
-                       (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
-                       (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
-                       (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])
-               THEN 1 ELSE 0 END AS hit
-           FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id),
-         s AS (
-           SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-             CAST(SUM(CASE WHEN j >= 0.2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_true,
-             CAST(SUM(hit) AS BIGINT) AS n_candidates,
-             CAST(SUM(CASE WHEN hit = 1 AND j >= 0.2 THEN 1 ELSE 0 END)
-               AS BIGINT) AS tp
-           FROM p),
-         ns AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_sample FROM sigs)
-         SELECT ns.n_sample, s.n_pairs, s.n_true, s.n_candidates, s.tp,
-           s.n_candidates - s.tp AS fp, s.n_true - s.tp AS fn,
-           CASE WHEN s.n_candidates > 0
-             THEN s.tp * 1000 // s.n_candidates END AS precision_milli,
-           CASE WHEN s.n_true > 0
-             THEN s.tp * 1000 // s.n_true END AS recall_milli
-         FROM s, ns""",
-    // qt41: qd7's sigs + band predicate run ASYMMETRICALLY train x eval
-    // (the qt8 doc_id % 29 eval slice), exact-Jaccard verify at 0.2; cap
-    // warn-only like qd7 (buckets far under 4096 at the suite SFs)
-    "qt41_near_contamination" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0),
-         tr AS (SELECT * FROM sigs WHERE doc_id % 29 <> 0),
-         ev AS (SELECT * FROM sigs WHERE doc_id % 29 = 0)
-         SELECT doc_id, eval_id, ROUND(j, 6) AS jaccard FROM (
-           SELECT t.doc_id, e.doc_id AS eval_id,
-             len(list_intersect(t.sh, e.sh))
-               / len(list_distinct(list_concat(t.sh, e.sh))) AS j
-           FROM tr t JOIN ev e ON (
-             (t.sig[1] = e.sig[1] AND t.sig[2] = e.sig[2]) OR
-             (t.sig[3] = e.sig[3] AND t.sig[4] = e.sig[4]) OR
-             (t.sig[5] = e.sig[5] AND t.sig[6] = e.sig[6]) OR
-             (t.sig[7] = e.sig[7] AND t.sig[8] = e.sig[8])))
-         WHERE j >= 0.2""",
-    // qd6's component CTE + qt2's quality score (rounded to 6 dp BEFORE the
-    // rank so ordering is bit-stable), survivor = rank 1 per cluster
-    "qd8_cluster_survivors" ->
-      """WITH RECURSIVE w AS (
-           SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh0 AS (
-           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         bs AS (
-           SELECT lang, len_bucket, COUNT(*) AS n_in_block
-           FROM sh0 GROUP BY 1, 2),
-         sh AS (
-           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
-           WHERE bs.n_in_block <= 4096),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM sh a JOIN sh b
-             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-             AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.sh, b.sh))
-             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.1),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL SELECT doc_b, doc_a FROM pairs),
-         reach(doc_id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.doc_id),
-         comp AS (
-           SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
-         sizes AS (
-           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id),
-         q AS (
-           SELECT doc_id,
-             ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
-               * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]'))
-                  / CAST(length(text) AS DOUBLE)), 6) AS quality_score
-           FROM documents)
-         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
-           q.quality_score,
-           ROW_NUMBER() OVER (PARTITION BY comp.cluster_id
-             ORDER BY q.quality_score DESC, comp.doc_id ASC) = 1 AS survivor
-         FROM comp JOIN sizes USING (cluster_id) JOIN q USING (doc_id)""",
-    // incremental dedup: batch split, fingerprint check, qd7's band
-    // predicate + Jaccard verify — all replayed asymmetrically
-    "qd9_incremental_dedup" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0),
-         fp AS (
-           SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-           FROM documents),
-         exact AS (
-           SELECT DISTINCT b.doc_id FROM fp b
-           WHERE b.doc_id % 7 = 0 AND EXISTS (
-             SELECT 1 FROM fp c WHERE c.doc_id % 7 <> 0 AND c.fp = b.fp)),
-         near AS (
-           SELECT b.doc_id AS batch_id, COUNT(*) AS n_near,
-             ROUND(MAX(len(list_intersect(b.sh, c.sh))
-               / len(list_distinct(list_concat(b.sh, c.sh)))), 6) AS best_jaccard
-           FROM sigs b JOIN sigs c ON b.doc_id % 7 = 0 AND c.doc_id % 7 <> 0 AND (
-             (b.sig[1] = c.sig[1] AND b.sig[2] = c.sig[2]) OR
-             (b.sig[3] = c.sig[3] AND b.sig[4] = c.sig[4]) OR
-             (b.sig[5] = c.sig[5] AND b.sig[6] = c.sig[6]) OR
-             (b.sig[7] = c.sig[7] AND b.sig[8] = c.sig[8]))
-           WHERE len(list_intersect(b.sh, c.sh))
-               / len(list_distinct(list_concat(b.sh, c.sh))) >= 0.2
-           GROUP BY b.doc_id)
-         SELECT d.doc_id,
-           CASE WHEN e.doc_id IS NOT NULL THEN 1 ELSE 0 END AS exact_dup,
-           CAST(COALESCE(n.n_near, 0) AS BIGINT) AS n_near,
-           n.best_jaccard
-         FROM (SELECT doc_id FROM documents WHERE doc_id % 7 = 0) d
-         LEFT JOIN exact e ON e.doc_id = d.doc_id
-         LEFT JOIN near n ON n.batch_id = d.doc_id""",
-    // the scale-path dedup composition under one oracle: qd7's band-predicate
-    // pairs (md5-affine lanes, 4x2 bands, exact-Jaccard verify) -> qd6's
-    // recursive reachability -> qd8's quality-rank survivorship
-    "qd10_lsh_dedup_closure" -> (lshCompCte + """,
-         sizes AS (
-           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id),
-         q AS (
-           SELECT doc_id,
-             ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
-               * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]'))
-                  / CAST(length(text) AS DOUBLE)), 6) AS quality_score
-           FROM documents)
-         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
-           q.quality_score,
-           ROW_NUMBER() OVER (PARTITION BY comp.cluster_id
-             ORDER BY q.quality_score DESC, comp.doc_id ASC) = 1 AS survivor
-         FROM comp JOIN sizes USING (cluster_id) JOIN q USING (doc_id)"""),
-    // soft-dedup sampling weights: the qd10 component chain, singletons
-    // represent themselves (the qd19 spine), weight = 1/|cluster| as exact
-    // integer milli-weights plus one pinned double division
-    "qd22_dedup_weights" -> (lshCompCte + """,
-         spine AS (SELECT doc_id FROM documents),
-         rep AS (
-           SELECT spine.doc_id,
-             COALESCE(comp.cluster_id, spine.doc_id) AS cluster_rep
-           FROM spine LEFT JOIN comp USING (doc_id)),
-         sizes AS (
-           SELECT cluster_rep, COUNT(*) AS cluster_size FROM rep GROUP BY 1)
-         SELECT rep.doc_id, rep.cluster_rep,
-           CAST(sizes.cluster_size AS BIGINT) AS cluster_size,
-           CAST(1000 // sizes.cluster_size AS BIGINT) AS weight_milli,
-           ROUND(CAST(1.0 AS DOUBLE) / CAST(sizes.cluster_size AS DOUBLE), 6)
-             AS weight
-         FROM rep JOIN sizes USING (cluster_rep)"""),
+           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks
+           FROM c GROUP BY doc_id)
+         SELECT tot.doc_id, tot.n_chunks,
+           CAST(COALESCE(nd.n_dup, 0) AS BIGINT) AS n_dup,
+           ROUND(COALESCE(nd.n_dup, 0) / CAST(tot.n_chunks AS DOUBLE), 6)
+             AS dup_share
+         FROM tot LEFT JOIN nd USING (doc_id)""")),
     // leakage-free split: the qd10 component chain, then the split hash on
     // the cluster representative (singletons represent themselves)
-    "qd19_cluster_split" -> (lshCompCte + """,
+    Query("qd19_cluster_split", Dedup.clusterAwareSplit(_, _), Some(lshCompCte + """,
          spine AS (SELECT doc_id FROM documents),
          rep AS (
            SELECT spine.doc_id,
@@ -3342,13 +2302,13 @@ object SparkEntry {
            CASE WHEN bucket < 80 THEN 'train'
                 WHEN bucket < 90 THEN 'val'
                 ELSE 'test' END AS split
-         FROM b"""),
+         FROM b""")),
     // verify-free split guard: CC over the band-bucket STAR graph (members
     // edge to each admitted bucket's min doc) at the percolation-safe 2x4
     // banding — the per-lane replay of the bkey string groups, the 4096
     // cap, star edges, recursive reachability, and the split hash, all
     // recomputed independently
-    "qd20_bucket_split" -> (minhashSigsCte + """,
+    Query("qd20_bucket_split", Dedup.bucketSplit(_, _), Some(minhashSigsCte + """,
          bk AS (
            SELECT doc_id, b, sig[4*b+1] AS s1, sig[4*b+2] AS s2,
              sig[4*b+3] AS s3, sig[4*b+4] AS s4
@@ -3386,85 +2346,112 @@ object SparkEntry {
            CASE WHEN bucket < 80 THEN 'train'
                 WHEN bucket < 90 THEN 'val'
                 ELSE 'test' END AS split
-         FROM bq"""),
-    // AllPairs/PPJoin exact similarity join: df-ordered prefixes, length +
-    // positional filters, the 4096 token cap, and the exact-Jaccard verify —
-    // all replayed. DOUBLE casts matter: DuckDB parses 0.8 as DECIMAL, whose
-    // exact products diverge from Spark's f64 at the ceil/compare boundaries.
-    "qd11_ppjoin_pairs" ->
+         FROM bq""")),
+    // qt21's fitted model, SQ8-quantized (round-half-away, scale=127/max|w|);
+    // the logit sum and keep flag are pure integers — the whole decision is
+    // hash-verified, not epsilon-compared
+    Query("qt24_classifier_gate", TextAnalysis.classifierGate(_, _), Some(
       """WITH w AS (
-           SELECT doc_id,
+           SELECT doc_id, lang,
              string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
            FROM documents),
-         sh0 AS (
-           SELECT doc_id, list_sort(list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> ''))) AS sh
+         f AS (
+           SELECT doc_id, lang, unnest(
+             ['u:' || x FOR x IN words] ||
+             ['b:' || words[i] || ' ' || words[i+1]
+              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS f
            FROM w),
-         shn AS (SELECT doc_id, sh, len(sh) AS n FROM sh0 WHERE len(sh) > 0),
-         tok AS (SELECT doc_id, n, unnest(sh) AS tok FROM shn),
-         dfreq AS (SELECT tok, COUNT(*) AS df FROM tok GROUP BY tok),
-         ordd AS (
-           SELECT t.doc_id, t.n,
-             [x.tok FOR x IN list_sort(list({'df': d.df, 'tok': t.tok}))] AS toks
-           FROM tok t JOIN dfreq d USING (tok)
-           GROUP BY t.doc_id, t.n),
-         pref AS (
-           SELECT doc_id, n, CAST(i AS INT) AS pos, toks[CAST(i AS INT)] AS ptok
-           FROM ordd CROSS JOIN UNNEST(range(1,
-             CAST(n - ceil(CAST(0.8 AS DOUBLE) * n) + 1 AS INT) + 1)) AS u(i)),
-         cap AS (SELECT ptok FROM pref GROUP BY ptok HAVING COUNT(*) <= 4096),
-         adm AS (SELECT p.* FROM pref p JOIN cap USING (ptok)),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM adm a JOIN adm b
-             ON a.ptok = b.ptok AND a.doc_id < b.doc_id
-            AND b.n >= CAST(0.8 AS DOUBLE) * a.n
-            AND a.n >= CAST(0.8 AS DOUBLE) * b.n
-            AND 1 + LEAST(a.n - a.pos, b.n - b.pos) >=
-                CEIL(CAST(0.8 AS DOUBLE) / CAST(1.8 AS DOUBLE) * (a.n + b.n)))
-         SELECT c.doc_a, c.doc_b,
-           round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-                 len(list_distinct(sa.sh || sb.sh)), 6) AS jaccard
-         FROM cand c JOIN shn sa ON c.doc_a = sa.doc_id
-                     JOIN shn sb ON c.doc_b = sb.doc_id
-         WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-               len(list_distinct(sa.sh || sb.sh)) >= CAST(0.8 AS DOUBLE)""",
-    // passage-level keep-first dedup: the oracle recomputes the 10-word
-    // windows, picks the global first occurrence per passage with a
-    // row_number window (the Spark side uses the equivalent min-struct
-    // AGGREGATE — (doc_id, pidx) is unique, so rn=1 == min), and rebuilds
-    // the text the same way (kept passages in pidx order + word tail)
-    "qd12_passage_dedup" ->
+         fb AS (
+           SELECT doc_id, lang,
+             CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 1024 AS bucket
+           FROM f),
+         cnt AS (
+           SELECT bucket, COUNT(*) AS n_raw,
+             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
+           FROM fb GROUP BY bucket),
+         tot AS (
+           SELECT COUNT(*) AS t_raw,
+             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_tgt
+           FROM fb),
+         spine AS (SELECT unnest(range(0, 1024)) AS bucket),
+         lam AS (
+           SELECT spine.bucket,
+             ROUND(ln((COALESCE(n_tgt, 0) + 1.0) / (t_tgt + 1024.0)) -
+                   ln((COALESCE(n_raw, 0) + 1.0) / (t_raw + 1024.0)), 9) AS lam
+           FROM spine LEFT JOIN cnt ON spine.bucket = cnt.bucket CROSS JOIN tot),
+         mx AS (SELECT MAX(abs(lam)) AS max_abs FROM lam),
+         qm AS (
+           SELECT bucket,
+             CASE WHEN max_abs = 0 THEN 0
+               ELSE CAST(ROUND(lam * 127.0 / max_abs) AS BIGINT) END AS qw
+           FROM lam, mx)
+         SELECT doc_id, COUNT(*) AS n_feats, CAST(SUM(qw) AS BIGINT) AS logit_q,
+           CAST(SUM(qw) > 0 AS INTEGER) AS kept
+         FROM fb JOIN qm USING (bucket)
+         GROUP BY doc_id""")),
+    // alpha = 0.5 temperature mixing: sqrt is IEEE-correctly-rounded on
+    // both engines, so floor(k*sqrt(n_min)/sqrt(n_d)) agrees bit-for-bit
+    Query("qt25_domain_mixture", TextAnalysis.domainMixture(_, _), Some(
+      """WITH c AS (
+           SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
+         m AS (SELECT MIN(n_docs) AS n_min FROM c),
+         r AS (
+           SELECT source, n_docs,
+             CAST(FLOOR(1000000.0 * sqrt(CAST(n_min AS DOUBLE)) /
+               sqrt(CAST(n_docs AS DOUBLE))) AS BIGINT) AS keep_per_k
+           FROM c, m),
+         d AS (
+           SELECT doc_id, source,
+             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#mix'),
+               1, 15) AS BIGINT) % 1000000 AS h
+           FROM documents)
+         SELECT d.doc_id, d.source, r.n_docs AS domain_docs, r.keep_per_k,
+           CAST(d.h < r.keep_per_k AS INTEGER) AS kept
+         FROM d JOIN r USING (source)""")),
+    // C4 line-level battery: the deterministic md5 segmentation, both
+    // per-line rules, the keep-first dedup (list_position == 1-based lambda
+    // index), and the >=3-lines doc gate are all replayed in list math
+    Query("qt26_c4_lines", TextAnalysis.c4LineClean(_, _), Some(
       """WITH base AS (
            SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sized AS (
-           SELECT doc_id, w, len(w) AS nwords, len(w) // 10 AS npass FROM base),
-         p AS (
-           SELECT doc_id, i AS pidx,
-             array_to_string(w[(i*10+1):(i*10+10)], ' ') AS passage
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(0, CAST(npass - 1 AS INT))) AS i
-                 FROM sized WHERE npass >= 1)),
-         keep AS (
-           SELECT doc_id, pidx, passage,
-             row_number() OVER (PARTITION BY passage ORDER BY doc_id, pidx) AS rn
-           FROM p),
-         rebuilt AS (
-           SELECT doc_id, COUNT(*) AS n_kept,
-             string_agg(passage, ' ' ORDER BY pidx) AS kept_text
-           FROM keep WHERE rn = 1 GROUP BY doc_id)
-         SELECT s.doc_id,
-           CAST(s.npass AS BIGINT) AS n_passages,
-           CAST(COALESCE(r.n_kept, 0) AS BIGINT) AS n_kept,
-           CAST(s.npass - COALESCE(r.n_kept, 0) AS BIGINT) AS n_dropped,
-           concat_ws(' ',
-             nullif(COALESCE(r.kept_text, ''), ''),
-             nullif(array_to_string(s.w[(CAST(s.npass AS INT)*10+1):CAST(s.nwords AS INT)], ' '), '')) AS clean_text
-         FROM sized s LEFT JOIN rebuilt r USING (doc_id)""",
-    // KMV sketch content replayed exactly: the k smallest distinct 60-bit
-    // md5-half hashes of the bigram vocabulary, ascending
-    "qt12_kmv_distinct" ->
+         seg AS (
+           SELECT doc_id, w, len(w) AS n,
+             [i FOR i IN range(0, len(w))
+              IF (CAST('0x' || substr(md5(doc_id || ':' || i), 1, 15)
+                  AS BIGINT)) % 5 = 0] AS brk
+           FROM base),
+         lined AS (
+           SELECT doc_id,
+             list_filter(
+               [array_to_string(
+                  w[(list_prepend(0, [b + 1 FOR b IN brk])[k] + 1)
+                    :(list_append(brk, n - 1)[k] + 1)], ' ')
+                FOR k IN range(1, len(brk) + 2)],
+               x -> x <> '') AS lines_all
+           FROM seg),
+         ruled AS (
+           SELECT doc_id, lines_all,
+             list_filter(lines_all, l ->
+               len(string_split(l, ' ')) >= 4 AND
+               NOT list_contains(string_split(l, ' '), 'dup')) AS lr
+           FROM lined),
+         kept AS (
+           SELECT doc_id, lines_all, lr,
+             list_filter(lr, (l, i) -> list_position(lr, l) = i) AS lk
+           FROM ruled)
+         SELECT doc_id,
+           CAST(len(lines_all) AS BIGINT) AS n_lines,
+           CAST(len(lines_all) - len(lr) AS BIGINT) AS n_rule_dropped,
+           CAST(len(lr) - len(lk) AS BIGINT) AS n_dup_dropped,
+           CAST(len(lk) AS BIGINT) AS n_kept,
+           CAST(len(lk) >= 3 AS INTEGER) AS kept,
+           COALESCE(array_to_string(lk, ' '), '') AS clean_text
+         FROM kept""")),
+    // HLL registers replayed exactly: same bigram + 60-bit md5-half hash
+    // stream as qt12, bucket = h % 64, rank = 55 - bitlength(h // 64)
+    // (bitlength via bin() string math — integer-exact, no log2 rounding
+    // risk), max per bucket, zero registers pinned by the range left join
+    Query("qt27_hll_distinct", TextAnalysis.hllDistinct(_, _), Some(
       """WITH w AS (
            SELECT doc_id,
              string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
@@ -3476,457 +2463,117 @@ object SparkEntry {
            FROM w),
          e AS (SELECT unnest(sh) AS g FROM sh),
          h AS (SELECT DISTINCT CAST('0x' || substr(md5(g),1,15) AS BIGINT) AS h FROM e),
-         topk AS (SELECT h FROM h ORDER BY h LIMIT 256)
-         SELECT CAST(ROW_NUMBER() OVER (ORDER BY h) AS INT) AS rank, h FROM topk""",
-    // identical to qt8's oracle: the bloom prefilter has no false negatives
-    // and the exact verify join removes false positives, so the result is
-    // bit-for-bit the same as the unfiltered contamination pass
-    "qt13_bloom_contamination" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+3], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-3, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         ev AS (SELECT doc_id AS eval_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 = 0),
-         co AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 <> 0)
-         SELECT co.doc_id, ev.eval_id, COUNT(*) AS n_shared_grams
-         FROM co JOIN ev USING (g)
-         GROUP BY 1, 2""",
-    // rare-gram novelty: integer counts + one division, exactly replayable
-    "qt11_novelty" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         e AS (SELECT doc_id, unnest(sh) AS g FROM sh),
-         d AS (SELECT g, COUNT(*) AS df FROM e GROUP BY 1)
-         SELECT doc_id, COUNT(*) AS n_grams,
-           CAST(SUM(CASE WHEN df < 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare,
-           MIN(df) AS min_df, MAX(df) AS max_df,
-           ROUND(SUM(CASE WHEN df < 3 THEN 1 ELSE 0 END)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS rare_frac
-         FROM e JOIN d USING (g) GROUP BY doc_id""",
-    // boilerplate strip: integer keep predicate (df*100 <= N*pct) and an
-    // ORDER BY-pos string_agg replaying the order-preserving reconstruction
-    "qt14_df_prune" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         pw AS (
-           SELECT doc_id, unnest(words) AS word,
-             unnest(range(1, len(words)+1)) AS pos
-           FROM w),
-         d AS (SELECT word, COUNT(DISTINCT doc_id) AS df FROM pw GROUP BY word),
-         n AS (SELECT COUNT(*) AS n FROM documents)
-         SELECT doc_id,
-           CAST(SUM(CASE WHEN d.df*100 <= n.n*78 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           CAST(SUM(CASE WHEN d.df*100 <= n.n*78 THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
-           COALESCE(string_agg(CASE WHEN d.df*100 <= n.n*78 THEN word END,
-             ' ' ORDER BY pos), '') AS pruned_text
-         FROM pw JOIN d USING (word) CROSS JOIN n
-         GROUP BY doc_id""",
-    // char entropy: code-point frequency table, per-term -(c/n)*ln(c/n)
-    // rounded to 9, sorted in-order f64 fold (the qt16 discipline), final
-    // fractions rounded to 6 — hash-matches the native one-pass expression
-    "qt31_char_entropy" ->
-      """WITH c AS (
-           SELECT doc_id,
-             [substr(text, i, 1) FOR i IN range(1, length(text) + 1)] AS cs
-           FROM documents),
-         f AS (
-           SELECT doc_id, ch, COUNT(*) AS c
-           FROM (SELECT doc_id, unnest(cs) AS ch FROM c) GROUP BY 1, 2),
-         n AS (
-           SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
-             CAST(COUNT(*) AS BIGINT) AS nd, MAX(c) AS mx
-           FROM f GROUP BY 1),
-         t AS (
-           SELECT f.doc_id,
-             ROUND(-(CAST(f.c AS DOUBLE) / n.n)
-               * ln(CAST(f.c AS DOUBLE) / n.n), 9) AS term
-           FROM f JOIN n USING (doc_id)),
-         e AS (
-           SELECT doc_id,
-             ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               list_sort(list(term))), (a, b) -> a + b), 6) AS ent
-           FROM t GROUP BY doc_id)
-         SELECT n.doc_id, n.n AS n_chars, n.nd AS n_distinct,
-           ROUND(CAST(n.mx AS DOUBLE) / n.n, 6) AS max_char_frac,
-           e.ent AS entropy_nats
-         FROM n JOIN e USING (doc_id)""",
-    // shard manifest: md5-lane shard assignment + per-shard counts and an
-    // order-independent mod-2^61-1 fingerprint sum (HUGEINT == DECIMAL)
-    "qt32_shard_manifest" ->
-      """WITH d AS (
-           SELECT
-             CAST('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)),
-               1, 15) AS BIGINT) % 16 AS shard_id,
-             len(string_split_regex(trim(text), '\s+')) AS toks,
-             length(text) AS chars,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-               || CAST(length(text) AS VARCHAR)), 1, 15) AS BIGINT)
-               % 2305843009213693951 AS fp
-           FROM documents)
-         SELECT shard_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(toks) AS BIGINT) AS token_sum,
-           CAST(SUM(chars) AS BIGINT) AS char_sum,
-           CAST(SUM(CAST(fp AS HUGEINT)) % 2305843009213693951 AS BIGINT)
-             AS content_fp
-         FROM d GROUP BY shard_id""",
-    // sliding-window chunking: starts 0,48,96,... < n_tokens; chunk text
-    // fingerprinted by the portable 60-bit md5 lane (list slice == Spark
-    // slice, both clamp at the tail)
-    "qt33_chunk_windows" -> (chunkCte + """
-         SELECT doc_id, chunk_id, start_tok, n_toks, chunk_fp FROM ch"""),
-    // PMI collocations: occurrence-count bigram/unigram tables, one ln of
-    // the exact integer rational with pinned f64 association, round 9
-    "qt35_pmi" ->
-      """WITH w AS (
-           SELECT string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-           FROM documents),
-         uni AS (SELECT unnest(w) AS word FROM w),
-         cu AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS c FROM uni GROUP BY word),
-         nw AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM uni),
-         bg AS (
-           SELECT [w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))] AS bs
-           FROM w WHERE len(w) >= 2),
-         bigr AS (SELECT unnest(bs) AS bigram FROM bg),
-         cb AS (
-           SELECT bigram, CAST(COUNT(*) AS BIGINT) AS c_ab
-           FROM bigr GROUP BY bigram HAVING COUNT(*) >= 5),
-         nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM bigr)
-         SELECT cb.bigram, cb.c_ab, ca.c AS c_a, cbb.c AS c_b,
-           ROUND(ln(CAST(cb.c_ab AS DOUBLE) * nw.n * nw.n /
-             (CAST(ca.c AS DOUBLE) * cbb.c * nb.n)), 9) AS pmi
-         FROM cb
-         JOIN cu ca ON ca.word = string_split(cb.bigram, ' ')[1]
-         JOIN cu cbb ON cbb.word = string_split(cb.bigram, ' ')[2]
-         CROSS JOIN nw CROSS JOIN nb
-         ORDER BY pmi DESC, cb.bigram ASC
-         LIMIT 50""",
-    // duplicate-chunk share: a fingerprint is duplicated iff it occurs in
-    // >= 2 DISTINCT docs; per-doc share over the same chunk set
-    "qd18_chunk_dup_share" -> (chunkCte + """,
-         c AS (SELECT doc_id, chunk_fp FROM ch),
-         dup AS (
-           SELECT chunk_fp FROM c GROUP BY chunk_fp
-           HAVING COUNT(DISTINCT doc_id) >= 2),
-         nd AS (
-           SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup
-           FROM c JOIN dup USING (chunk_fp) GROUP BY c.doc_id),
-         tot AS (
-           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks
-           FROM c GROUP BY doc_id)
-         SELECT tot.doc_id, tot.n_chunks,
-           CAST(COALESCE(nd.n_dup, 0) AS BIGINT) AS n_dup,
-           ROUND(COALESCE(nd.n_dup, 0) / CAST(tot.n_chunks AS DOUBLE), 6)
-             AS dup_share
-         FROM tot LEFT JOIN nd USING (doc_id)"""),
-    // Efraimidis-Spirakis A-ES: u from the md5 lane, key = ln(u)/w with the
-    // qt16 round-to-9 discipline on both sides of the division; global
-    // top-50 by key with doc_id tie-break
-    "qt34_weighted_sample" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(1 + n_chars % 64 AS BIGINT) AS weight,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':wsamp'),
-               1, 15) AS BIGINT) AS h
-           FROM documents)
-         SELECT doc_id, weight,
-           ROUND(ROUND(ln((CAST(h AS DOUBLE) + 1.0)
-             / 1152921504606846976.0), 9) / weight, 9) AS es_key
-         FROM d
-         ORDER BY es_key DESC, doc_id ASC
-         LIMIT 50""",
-    // bigram-LM score: integer counts -> exact rational -> ln rounded to 9
-    // digits -> SORTED in-order f64 fold — order-pinned float aggregation
-    "qt16_lm_score" -> (lmScoreCte +
-      """
-         SELECT doc_id, n_bigrams, avg_logp FROM lmsc"""),
-    // interpolated Kneser-Ney bigram LM: every quantity from one bigram
-    // count table, the probability in the identical pinned f64 tree
-    // (doubles forced via 0.75e0 / CASTs), logs order-pinned like qt16
-    "qt30_kn_lm_score" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         bi AS (
-           SELECT doc_id, unnest(
-             [words[i] || ' ' || words[i+1]
-              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS bg
-           FROM w),
-         inst AS (
-           SELECT doc_id, bg, string_split(bg, ' ')[1] AS w1,
-             string_split(bg, ' ')[2] AS w2
-           FROM bi),
-         cb AS (SELECT bg, COUNT(*) AS cb FROM bi GROUP BY bg),
-         cbs AS (
-           SELECT bg, cb, string_split(bg, ' ')[1] AS w1,
-             string_split(bg, ' ')[2] AS w2
-           FROM cb),
-         ls AS (SELECT w1, CAST(SUM(cb) AS BIGINT) AS cu, COUNT(*) AS n1l
-                FROM cbs GROUP BY w1),
-         rs AS (SELECT w2, COUNT(*) AS n1r FROM cbs GROUP BY w2),
-         nt AS (SELECT COUNT(*) AS nt FROM cb),
-         lp AS (
-           SELECT inst.doc_id,
-             ROUND(ln((CAST(cb.cb AS DOUBLE) - 0.75e0) / ls.cu
-               + (0.75e0 * ls.n1l / ls.cu)
-                 * (CAST(rs.n1r AS DOUBLE) / nt.nt)), 9) AS logp
-           FROM inst JOIN cb USING (bg)
-             JOIN ls ON ls.w1 = inst.w1
-             JOIN rs ON rs.w2 = inst.w2 CROSS JOIN nt)
-         SELECT doc_id, COUNT(*) AS n_bigrams,
-           ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-             list_sort(list(logp))), (a, b) -> a + b) / COUNT(*), 6) AS kn_logp
-         FROM lp GROUP BY doc_id""",
-    // per-language head/middle/tail thresholds as the minimal descending-
-    // cumulative crossings of ceil(n/3)/ceil(2n/3) over the (lang, score)
-    // value histogram — ties closed into the better bucket
-    "qt28_ccnet_buckets" -> (lmScoreCte +
+         r AS (SELECT h % 64 AS bucket,
+                 CASE WHEN h // 64 = 0 THEN 55
+                   ELSE 55 - length(ltrim(bin(h // 64), '0')) END AS rank
+               FROM h),
+         regs AS (SELECT bucket, MAX(rank) AS register FROM r GROUP BY bucket)
+         SELECT CAST(b.bucket AS INT) AS bucket,
+           CAST(COALESCE(regs.register, 0) AS INT) AS register
+         FROM (SELECT unnest(range(0, 64)) AS bucket) b
+         LEFT JOIN regs USING (bucket)""")),
+    // Gopher repetition battery: md5 segmentation, dup segment stats,
+    // top/dup n-gram char fractions, and the A1 pass flag, all replayed
+    Query("qt29_gopher_repetition", TextAnalysis.gopherRepetition,
+      Some(gopherRepOracleSql(Seq(2, 3, 4), 5 to 10,
+        Seq("dup_line_frac" -> 0.30, "dup_line_char_frac" -> 0.20,
+          "dup_para_frac" -> 0.30, "dup_para_char_frac" -> 0.20,
+          "top2_char_frac" -> 0.20, "top3_char_frac" -> 0.18,
+          "top4_char_frac" -> 0.16, "dup5_char_frac" -> 0.15,
+          "dup6_char_frac" -> 0.14, "dup7_char_frac" -> 0.13,
+          "dup8_char_frac" -> 0.12, "dup9_char_frac" -> 0.11,
+          "dup10_char_frac" -> 0.10)))),
+    // ---- URL-level curation ----
+    // the within-host rank window here REPLAYS the top_k_rank aggregate
+    // (q19's oracle discipline: window form == heap-aggregate form)
+    Query("qu1_domain_cap", UrlCuration.domainCap(_, _), Some(urlOracleCte +
       """,
-         d AS (
-           SELECT lmsc.doc_id, documents.lang, lmsc.avg_logp
-           FROM lmsc JOIN documents USING (doc_id)),
-         hist AS (
-           SELECT lang, avg_logp, COUNT(*) AS cnt FROM d GROUP BY 1, 2),
-         c AS (
-           SELECT lang, avg_logp, cnt,
-             SUM(cnt) OVER (PARTITION BY lang ORDER BY avg_logp DESC
-               ROWS UNBOUNDED PRECEDING) AS cum
-           FROM hist),
-         n AS (SELECT lang, SUM(cnt) AS n FROM hist GROUP BY 1),
-         th AS (
-           SELECT c.lang,
-             MAX(CASE WHEN cum >= (n.n + 2) // 3 THEN avg_logp END) AS t1,
-             MAX(CASE WHEN cum >= (2 * n.n + 2) // 3 THEN avg_logp END) AS t2
-           FROM c JOIN n USING (lang) GROUP BY c.lang)
-         SELECT d.doc_id, d.lang, d.avg_logp,
-           CASE WHEN d.avg_logp >= th.t1 THEN 'head'
-                WHEN d.avg_logp >= th.t2 THEN 'middle'
-                ELSE 'tail' END AS bucket
-         FROM d JOIN th USING (lang)"""),
-    // histogram-based exact quantiles over the deterministic hash sample:
-    // integer rank math ((n-1)*p div 100 + 1, lower quantile) replays exactly
-    "qt17_quantile_hist" ->
-      """WITH s AS (
-           SELECT lang, n_chars FROM documents
-           WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#quant'), 1, 15) AS BIGINT) % 1000 < 250),
-         h AS (SELECT lang, n_chars, COUNT(*) AS cnt FROM s GROUP BY 1, 2),
-         c AS (
-           SELECT lang, n_chars, cnt,
-             SUM(cnt) OVER (PARTITION BY lang ORDER BY n_chars
-               ROWS UNBOUNDED PRECEDING) AS cum
-           FROM h),
-         t AS (SELECT lang, CAST(SUM(cnt) AS BIGINT) AS n_sampled FROM h GROUP BY 1),
-         tot AS (SELECT lang, COUNT(*) AS n_total FROM documents GROUP BY 1)
-         SELECT c.lang, tot.n_total, t.n_sampled,
-           MIN(CASE WHEN cum >= ((n_sampled - 1) * 25) // 100 + 1 THEN n_chars END) AS p25,
-           MIN(CASE WHEN cum >= ((n_sampled - 1) * 50) // 100 + 1 THEN n_chars END) AS p50,
-           MIN(CASE WHEN cum >= ((n_sampled - 1) * 75) // 100 + 1 THEN n_chars END) AS p75,
-           MIN(CASE WHEN cum >= ((n_sampled - 1) * 90) // 100 + 1 THEN n_chars END) AS p90
-         FROM c JOIN t USING (lang) JOIN tot USING (lang)
-         GROUP BY c.lang, tot.n_total, t.n_sampled""",
-    // sequence packing: the oracle runs ONE global running-sum window over
-    // the canonical doc_id order; the Spark side runs the two-phase sharded
-    // prefix sum — equality of the two IS the correctness claim
-    "qt18_pack_bins" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, n_tokens,
-             SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-           FROM t)
-         SELECT doc_id, n_tokens,
-           CAST(cum - n_tokens AS BIGINT) AS start_offset,
-           CAST((cum - n_tokens) // 2048 AS BIGINT) AS bin_id
-         FROM c""",
-    // stratified sample: the oracle runs the SINGLE-window per-lang top-k;
-    // the Spark side runs the salted two-phase form — equality of the two IS
-    // the correctness claim (any global top-k row is top-k in its bucket)
-    "qt15_stratified_sample" ->
-      """SELECT lang, doc_id, h, rnk, n_chars FROM (
-           SELECT lang, doc_id, n_chars,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#strat'), 1, 15) AS BIGINT) AS h,
-             ROW_NUMBER() OVER (PARTITION BY lang
-               ORDER BY CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#strat'), 1, 15) AS BIGINT),
-                 doc_id) AS rnk
-           FROM documents)
-         WHERE rnk <= 25""",
-    // int8 quantization: f64-widened element math + round-half-away agree
-    // across engines; outputs are integers plus the exact max|x| scale
-    "qs4_int8_quant" ->
-      """WITH e AS (
-           SELECT vec_id, embedding,
-             list_max([abs(CAST(v AS DOUBLE)) FOR v IN embedding]) AS max_abs
-           FROM embeddings),
-         q AS (
-           SELECT vec_id, max_abs, len(embedding) AS n_dim,
-             [CASE WHEN max_abs = 0 THEN 0
-               ELSE CAST(round(CAST(embedding[i] AS DOUBLE)*127/max_abs) AS BIGINT)
-               END FOR i IN range(1, len(embedding)+1)] AS qv
-           FROM e)
-         SELECT vec_id, CAST(n_dim AS INT) AS n_dim, max_abs,
-           CAST(list_sum(qv) AS BIGINT) AS q_sum,
-           CAST(list_sum([abs(v) FOR v IN qv]) AS BIGINT) AS q_l1,
-           CAST(list_sum([qv[i]*i FOR i IN range(1, len(qv)+1)]) AS BIGINT) AS q_checksum
-         FROM q""",
-    // int8-code ANN: normalized global-scale SQ8 codes (in-order f64 norm
-    // fold, single-IEEE-op scaling) and pure-integer dot scores — the whole
-    // approximate result hash-matches, not just an epsilon bound
-    "qs5_ann_int8" ->
-      """WITH e AS (
-           SELECT vec_id, embedding,
-             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               [CAST(v AS DOUBLE) * CAST(v AS DOUBLE) FOR v IN embedding]),
-               (a, b) -> a + b) AS n2
-           FROM embeddings),
-         q AS (
-           SELECT vec_id,
-             CASE WHEN n2 = 0 THEN [CAST(0 AS BIGINT) FOR v IN embedding]
-               ELSE [CAST(round(CAST(embedding[i] AS DOUBLE) * 127 / sqrt(n2)) AS BIGINT)
-                 FOR i IN range(1, len(embedding)+1)] END AS qv
-           FROM e),
-         s AS (
-           SELECT que.vec_id AS query_id, doc.vec_id AS neighbor_id,
-             CAST(list_sum([que.qv[i] * doc.qv[i]
-               FOR i IN range(1, len(doc.qv)+1)]) AS BIGINT) AS qdot
-           FROM q que JOIN q doc
-             ON que.vec_id < 5 AND doc.vec_id <> que.vec_id)
-         SELECT query_id, neighbor_id, rnk, qdot FROM (
-           SELECT query_id, neighbor_id, qdot,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY qdot DESC, neighbor_id ASC) AS rnk
-           FROM s) WHERE rnk <= 10""",
-    // qs11: qs5's SQ8 chain with the metadata predicate applied to the
-    // CORPUS side before scoring (queries unfiltered) — exact integer
-    // ranking, so the whole filtered result hash-matches
-    "qs11_filtered_ann" ->
-      """WITH e AS (
-           SELECT vec_id, embedding,
-             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               [CAST(v AS DOUBLE) * CAST(v AS DOUBLE) FOR v IN embedding]),
-               (a, b) -> a + b) AS n2
-           FROM embeddings),
-         q AS (
-           SELECT vec_id,
-             CASE WHEN n2 = 0 THEN [CAST(0 AS BIGINT) FOR v IN embedding]
-               ELSE [CAST(round(CAST(embedding[i] AS DOUBLE) * 127 / sqrt(n2)) AS BIGINT)
-                 FOR i IN range(1, len(embedding)+1)] END AS qv
-           FROM e),
+         d AS (SELECT doc_id, n_chars,
+             regexp_extract(lower(raw_url), '://([^/?#]*)', 1) AS domain FROM u),
+         r AS (SELECT doc_id, domain,
+             ROW_NUMBER() OVER (PARTITION BY domain
+               ORDER BY n_chars DESC, doc_id ASC) AS rn,
+             COUNT(*) OVER (PARTITION BY domain) AS nd FROM d)
+         SELECT doc_id, domain, CAST(nd AS BIGINT) AS domain_docs,
+           CAST(CASE WHEN rn <= 8 THEN rn ELSE 0 END AS INT) AS domain_rank,
+           CAST(domain LIKE '%.spam.example' AS INTEGER) AS blocked,
+           CAST(rn <= 8 AND NOT (domain LIKE '%.spam.example') AS INTEGER) AS kept
+         FROM r""")),
+    // canonicalization replayed step by step (RE2 flavor; 'g' where Spark's
+    // always-global regexp_replace can fire more than once)
+    Query("qu2_url_dedup", UrlCuration.urlDedup, Some(urlOracleCte + urlCanonCte +
+      """
+         SELECT doc_id, raw_url, canon_url,
+           MIN(doc_id) OVER (PARTITION BY canon_url) AS keeper_id,
+           CAST(doc_id <> MIN(doc_id) OVER (PARTITION BY canon_url) AS INTEGER) AS is_dup
+         FROM cz""")),
+    // keeper key replayed arithmetically: shiftleft(epoch,20)+doc_id ==
+    // epoch*1048576+doc_id; shiftright == //; both engines stay in int64
+    Query("qu3_snapshot_dedup", UrlCuration.snapshotDedup, Some(urlOracleCte + urlCanonCte +
+      """,
+         w AS (SELECT doc_id, canon_url,
+             CAST(1704067200 AS BIGINT) + (doc_id % 97) * 86400
+               + (doc_id % 13) * 3600 AS warc_epoch
+           FROM cz),
+         kk AS (SELECT canon_url, MAX(warc_epoch * 1048576 + doc_id) AS kk
+           FROM w GROUP BY canon_url)
+         SELECT w.doc_id, w.canon_url, CAST(w.warc_epoch AS BIGINT) AS warc_epoch,
+           CAST(kk.kk % 1048576 AS BIGINT) AS keeper_id,
+           CAST(kk.kk // 1048576 AS BIGINT) AS keeper_epoch,
+           CAST(w.doc_id <> kk.kk % 1048576 AS INTEGER) AS is_stale
+         FROM w JOIN kk USING (canon_url)""")),
+    // qu4: the planted raw URL replayed, then every feature as a Java∩RE2
+    // regex or plain length math — no canonicalization (classifiers see the
+    // frontier's raw form); types CAST to match Spark (length diffs INT,
+    // n_params/url_len BIGINT)
+    Query("qu4_url_features", UrlCuration.urlFeatures, Some(urlOracleCte +
+      """,
          f AS (
-           SELECT q.vec_id, q.qv FROM q JOIN documents d ON q.vec_id = d.doc_id
-           WHERE d.lang = 'en'),
-         s AS (
-           SELECT que.vec_id AS query_id, doc.vec_id AS neighbor_id,
-             CAST(list_sum([que.qv[i] * doc.qv[i]
-               FOR i IN range(1, len(doc.qv)+1)]) AS BIGINT) AS qdot
-           FROM q que JOIN f doc
-             ON que.vec_id < 5 AND doc.vec_id <> que.vec_id)
-         SELECT query_id, neighbor_id, rnk, qdot FROM (
-           SELECT query_id, neighbor_id, qdot,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY qdot DESC, neighbor_id ASC) AS rnk
-           FROM s) WHERE rnk <= 10""",
-    // radius search: the same engine-parity cosine as qs1, but an
-    // unranked >= tau predicate on the unrounded score (map-only op)
-    "qs12_range_search" ->
-      """SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-           ROUND(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-             CAST(e.embedding AS DOUBLE[])), 6) AS cosine
-         FROM embeddings q, embeddings e
-         WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id
-           AND list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-             CAST(e.embedding AS DOUBLE[])) >= CAST(0.25 AS DOUBLE)""",
-    "qs1_ann_brute" ->
-      """SELECT query_id, neighbor_id, rnk, cosine FROM (
-           SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                 CAST(e.embedding AS DOUBLE[])) DESC, e.vec_id ASC) AS rnk,
-             ROUND(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-               CAST(e.embedding AS DOUBLE[])), 6) AS cosine
-           FROM embeddings q, embeddings e
-           WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id)
-         WHERE rnk <= 10""",
-    // qt42: aggregate-of-sums ratios — exact int64 sums per source (CAST
-    // out of HUGEINT), one pinned IEEE division per ratio, round 6
-    // qt43: the waterfilling replayed step for step — capacity order with
-    // the source tie-break, the prefix-fits predicate, the equal-share
-    // suffix with its remainder distributed to the lowest uncapped ranks.
-    // Window sums come back HUGEINT in DuckDB, so every emitted number is
-    // CAST to BIGINT (the qt31 pitfall).
-    "qt43_token_budget" ->
-      """WITH t AS (
-           SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-               AS tokens
-           FROM documents GROUP BY 1),
-         c AS (
-           SELECT source, n_docs, tokens,
-             1 + CAST('0x' || substr(md5(source), 1, 15) AS BIGINT) % 4
-               AS max_epochs,
-             tokens * (1 + CAST('0x' || substr(md5(source), 1, 15) AS BIGINT)
-               % 4) AS capacity
-           FROM t),
-         r AS (
-           SELECT c.*,
-             CAST(ROW_NUMBER() OVER (ORDER BY capacity, source) AS BIGINT) AS i,
-             CAST(SUM(capacity) OVER (ORDER BY capacity, source) AS BIGINT)
-               AS cum,
-             CAST(COUNT(*) OVER () AS BIGINT) AS k,
-             CAST(SUM(capacity) OVER () AS BIGINT) AS total_cap
-           FROM c),
-         r1 AS (SELECT r.*, total_cap * 55 // 100 AS budget FROM r),
-         r2 AS (
-           SELECT r1.*,
-             CASE WHEN capacity * (k - i + 1) <= budget - (cum - capacity)
-               THEN 1 ELSE 0 END AS fits
-           FROM r1),
-         pp AS (
-           SELECT COALESCE(MIN(CASE WHEN fits = 0 THEN i END) - 1, MAX(i))
-             AS p
-           FROM r2),
-         cp AS (
-           SELECT COALESCE(CAST(MAX(CASE WHEN r2.i <= pp.p THEN r2.cum END)
-             AS BIGINT), 0) AS cum_p
-           FROM r2, pp),
-         fin AS (
-           SELECT r2.*, pp.p, cp.cum_p,
-             CASE WHEN k > p THEN (budget - cum_p) // (k - p)
-               ELSE CAST(0 AS BIGINT) END AS share,
-             CASE WHEN k > p THEN (budget - cum_p) % (k - p)
-               ELSE CAST(0 AS BIGINT) END AS rem
-           FROM r2, pp, cp),
-         al AS (
-           SELECT source, n_docs, tokens, max_epochs, capacity,
-             CASE WHEN i <= p THEN capacity
-               ELSE share + CASE WHEN i - p <= rem THEN 1 ELSE 0 END END
-               AS alloc_tokens
-           FROM fin)
-         SELECT source, n_docs, tokens,
-           CAST(max_epochs AS BIGINT) AS max_epochs,
-           CAST(capacity AS BIGINT) AS capacity,
-           CAST(alloc_tokens AS BIGINT) AS alloc_tokens,
-           CAST(alloc_tokens * 1000 // tokens AS BIGINT) AS epochs_milli
-         FROM al""",
+           SELECT doc_id, raw_url,
+             lower(regexp_extract(raw_url, '^[A-Za-z]+://([^/?#]+)', 1)) AS host,
+             regexp_extract(raw_url, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1) AS path_s,
+             regexp_extract(raw_url, '\?([^#]*)', 1) AS query_s
+           FROM u)
+         SELECT doc_id, host,
+           CAST(length(host) - length(replace(host, '.', '')) AS INTEGER)
+             AS subdomain_depth,
+           CASE WHEN host LIKE '%.spam.example' THEN 1 ELSE 0 END AS is_spam_tld,
+           CAST(len(regexp_extract_all(host, '[0-9]')) AS INTEGER) AS host_digits,
+           CAST(len(regexp_extract_all(path_s, '/')) AS INTEGER) AS path_depth,
+           CASE WHEN query_s = '' THEN CAST(0 AS BIGINT)
+                ELSE CAST(len(regexp_extract_all(query_s, '&')) + 1 AS BIGINT)
+           END AS n_params,
+           CAST(len(regexp_extract_all(query_s, '(^|&)(utm_[A-Za-z]+|ref)='))
+             AS INTEGER) AS n_tracking_params,
+           CAST(length(raw_url) AS BIGINT) AS url_len
+         FROM f""")),
+    // qu5: per-host frontier budget over the deduped canonical URLs —
+    // all integer math (ceil division as (a + S - 1) // S)
+    Query("qu5_frontier_schedule", UrlCuration.frontierSchedule(_, _),
+      Some(urlOracleCte + urlCanonCte +
+      """,
+         cu AS (SELECT DISTINCT canon_url FROM cz),
+         hh AS (
+           SELECT regexp_extract(canon_url, '^[a-z]+://([^/?#]+)', 1) AS host,
+             CAST(COUNT(*) AS BIGINT) AS n_urls
+           FROM cu GROUP BY 1),
+         tt AS (SELECT CAST(SUM(n_urls) AS BIGINT) AS total_urls,
+             CAST(MAX(n_urls) * 1000 AS BIGINT) AS max_serial_ms
+           FROM hh)
+         SELECT hh.host, hh.n_urls, tt.total_urls,
+           hh.n_urls * 1000 AS serial_ms,
+           (tt.total_urls * 1000 + 63) // 64 AS fleet_floor_ms,
+           hh.n_urls * 1000 // tt.total_urls AS share_milli,
+           CASE WHEN hh.n_urls * 1000 > (tt.total_urls * 1000 + 63) // 64
+             THEN 'politeness' ELSE 'capacity' END AS binding,
+           GREATEST(tt.max_serial_ms, (tt.total_urls * 1000 + 63) // 64)
+             AS makespan_ms
+         FROM hh CROSS JOIN tt""")),
+    // ---- composed per-document admission verdict + release manifest ----
     // Composed admission verdict: qd1 families + qt20-subset quality +
     // qt8 gram contamination + qt43 water-fill + qt7 hash-rate admission,
     // all replayed in one CTE chain; reason CASE mirrors the gate order
-    "qp1_curation_verdict" -> (curationChain + """
+    Query("qp1_curation_verdict", Curation.curationVerdict(_, _), Some(curationChain + """
          SELECT gp.doc_id, gp.source, gp.lang, gp.tokens, gp.n_dups,
            ROUND(CAST(1 AS DOUBLE) / gp.n_dups, 6) AS weight,
            CASE WHEN is_eval THEN 'eval_holdout'
@@ -3939,11 +2586,11 @@ object SparkEntry {
                 ELSE 'kept' END AS drop_reason,
            CAST(CASE WHEN pass AND CAST('0x' || substr(md5(CAST(gp.doc_id AS VARCHAR) || '#curation'), 1, 15) AS BIGINT) % 1000 < rr.rate_milli
              THEN 1 ELSE 0 END AS INT) AS kept
-         FROM gp LEFT JOIN rr USING (source)"""),
+         FROM gp LEFT JOIN rr USING (source)""")),
     // Release manifest over the kept set: qt32's salted shard hash, exact
     // integer micro-weights ((2e6 + n) DIV 2n = round(1e6 / n)), and the
     // order-independent affine content fingerprint mod 2^61-1
-    "qp2_release_manifest" -> (curationChain + """,
+    Query("qp2_release_manifest", Curation.releaseManifest(_, _), Some(curationChain + """,
          kk AS (
            SELECT gp.doc_id, gp.source, gp.tokens, gp.n_dups
            FROM gp LEFT JOIN rr USING (source)
@@ -3961,10 +2608,10 @@ object SparkEntry {
            MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
            CAST(SUM(w_micro) AS BIGINT) AS w_micro_sum,
            CAST(SUM(fp) % 2305843009213693951 AS BIGINT) AS content_fp
-         FROM m GROUP BY 1"""),
+         FROM m GROUP BY 1""")),
     // Corpus health report: every value an exact BIGINT (counts, or
     // integer MILLI rates); contamination via qp1's 4-gram CTE fragments
-    "qp3_health_report" ->
+    Query("qp3_health_report", Curation.healthReport(_, _), Some(
       """WITH w AS (
            SELECT doc_id, lang, source, text,
              string_split_regex(trim(text), '\s+') AS words
@@ -4024,120 +2671,783 @@ object SparkEntry {
            CAST(COUNT(*) AS BIGINT) * 1000 // (SELECT n_docs FROM s)
            FROM b2 GROUP BY lang
          UNION ALL SELECT 'contaminated_milli',
-           nc.v * 1000 // (s.n_docs - s.ne) FROM nc, s""",
-    // Source-overlap matrix: distinct (source, 3-gram) sets, shingle-keyed
-    // pair intersections, complete S x S skeleton with explicit zeros
-    "qt47_source_overlap" ->
+           nc.v * 1000 // (s.n_docs - s.ne) FROM nc, s""")),
+    // ---- link-graph centrality ----
+    Query("qg1_host_pagerank", LinkGraph.hostPagerank(_, _), Some(pagerankOracleSql(5))),
+    // reachability recomputed with a recursive CTE (min reachable label) —
+    // independent of the pointer-jumping CC implementation (qd6 discipline)
+    Query("qg2_host_components", LinkGraph.hostComponents(_, _), Some(
+      """WITH RECURSIVE hosts AS (
+           SELECT DISTINCT doc_id % 64 AS ch FROM documents),
+         e0 AS (
+           SELECT ch AS a,
+             CASE WHEN ch IN (8, 19, 44, 63) THEN ch ELSE ch + 1 END AS b
+           FROM hosts),
+         edges AS (
+           SELECT a AS src, b AS dst FROM e0
+           UNION SELECT b, a FROM e0),
+         reach(hid, r) AS (
+           SELECT src, src FROM edges
+           UNION
+           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.hid),
+         comp AS (
+           SELECT hid AS host_id, MIN(r) AS component_id FROM reach GROUP BY hid),
+         sizes AS (
+           SELECT component_id, COUNT(*) AS component_size
+           FROM comp GROUP BY component_id)
+         SELECT comp.host_id, comp.component_id,
+           CAST(sizes.component_size AS BIGINT) AS component_size,
+           comp.host_id = comp.component_id AS is_root
+         FROM comp JOIN sizes USING (component_id)""")),
+    Query("qg3_host_hyperball", LinkGraph.hostHyperball(_, _), Some(hyperballOracleSql(4))),
+    // harmonic centrality: the qg3 register chain + per-round HLL estimates
+    // (exact int64 register sums, pinned f64 constants, 9-digit rounds) +
+    // the ascending-radius harmonic fold — hash-matched end to end
+    Query("qg4_host_harmonic", LinkGraph.hostHarmonic(_, _), Some(harmonicOracleSql(4))),
+    // HyperANF neighborhood function + interpolated effective diameter:
+    // the same register chain, per-round global sums folded in sorted
+    // order (the qt16 pinned-f64 discipline), one pinned division for the
+    // q-crossing interpolation — NF, fractions, and diameter hash-match
+    Query("qg10_neighborhood", LinkGraph.hostNeighborhood(_, _),
+      Some(neighborhoodOracleSql(4, 0.9))),
+    // triangles: the planted edge set, the deg*100+id orientation, the
+    // wedge join and its closure — all integer math, replayed verbatim;
+    // the coefficient is one pinned division rounded to 6
+    Query("qg5_host_triangles", LinkGraph.hostTriangles, Some(
+      """WITH hosts AS (SELECT DISTINCT doc_id % 64 AS h FROM documents),
+         raw AS (
+           SELECT h AS a, (h + 1) % 64 AS b FROM hosts
+           UNION ALL SELECT h, (h + 2) % 64 FROM hosts
+           UNION ALL SELECT h, (h + 4) % 64 FROM hosts WHERE h % 8 = 0),
+         und AS (
+           SELECT DISTINCT LEAST(a, b) AS a, GREATEST(a, b) AS b FROM raw),
+         deg AS (
+           SELECT n, COUNT(*) AS d FROM (
+             SELECT a AS n FROM und UNION ALL SELECT b FROM und)
+           GROUP BY n),
+         ord AS (
+           SELECT CASE WHEN da.d * 100 + e.a < db.d * 100 + e.b
+                       THEN e.a ELSE e.b END AS u,
+             CASE WHEN da.d * 100 + e.a < db.d * 100 + e.b
+                  THEN e.b ELSE e.a END AS v,
+             GREATEST(da.d * 100 + e.a, db.d * 100 + e.b) AS kv
+           FROM und e
+             JOIN deg da ON da.n = e.a JOIN deg db ON db.n = e.b),
+         tri AS (
+           SELECT e1.u AS h0, e1.v AS h1, e2.v AS h2
+           FROM ord e1 JOIN ord e2 ON e1.u = e2.u AND e1.kv < e2.kv
+             JOIN ord e3 ON e3.u = e1.v AND e3.v = e2.v),
+         cnt AS (
+           SELECT n, COUNT(*) AS c FROM (
+             SELECT unnest([h0, h1, h2]) AS n FROM tri)
+           GROUP BY n)
+         SELECT deg.n AS host_id, CAST(deg.d AS BIGINT) AS degree,
+           CAST(COALESCE(cnt.c, 0) AS BIGINT) AS triangles,
+           ROUND(CASE WHEN deg.d >= 2
+             THEN 2.0 * COALESCE(cnt.c, 0) / (deg.d * (deg.d - 1))
+             ELSE 0.0 END, 6) AS clustering_coeff
+         FROM deg LEFT JOIN cnt ON cnt.n = deg.n""")),
+    // k-core: the peel waves unrolled (idempotent past the fixpoint, so a
+    // fixed unroll length replays the convergence-based Spark loop exactly;
+    // the planted path needs ~15 waves, 18 gives margin)
+    Query("qg7_host_kcore", LinkGraph.hostKcore(_, _), Some(kcoreOracleSql(2, 18))),
+    Query("qg8_host_hits", LinkGraph.hostHits(_, _), Some(hitsOracleSql(4))),
+    // qg9: the qg1 planted graph, exact int64 count/sum aggregates (CAST
+    // out of HUGEINT), one pinned IEEE division per metric, NULL guards on
+    // both engines for the zero-variance / all-self-loop edge cases
+    Query("qg9_host_mixing", LinkGraph.hostMixing, Some(
+      """WITH e0 AS (
+           SELECT DISTINCT doc_id % 32 AS src,
+             ((doc_id % 32) * 5 + 1 + doc_id % 3) % 32 AS dst
+           FROM documents),
+         nodes AS (SELECT DISTINCT src AS v FROM e0),
+         e AS (SELECT src, dst FROM e0 WHERE dst IN (SELECT v FROM nodes)),
+         ns AS (SELECT src, dst FROM e WHERE src <> dst),
+         eb AS (
+           SELECT DISTINCT src, dst FROM (
+             SELECT src, dst FROM ns UNION ALL SELECT dst, src FROM ns)),
+         dg AS (SELECT src AS v, CAST(COUNT(*) AS BIGINT) AS d FROM eb GROUP BY 1),
+         wd AS (
+           SELECT a.d AS dx, b.d AS dy
+           FROM eb JOIN dg a ON eb.src = a.v JOIN dg b ON eb.dst = b.v),
+         sm AS (
+           SELECT CAST(COUNT(*) AS BIGINT) AS m, CAST(SUM(dx) AS BIGINT) AS sx,
+             CAST(SUM(dx*dy) AS BIGINT) AS sxy, CAST(SUM(dx*dx) AS BIGINT) AS sxx
+           FROM wd),
+         cn AS (
+           SELECT
+             (SELECT CAST(COUNT(*) AS BIGINT) FROM nodes) AS n_hosts,
+             (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_edges,
+             (SELECT CAST(COUNT(*) AS BIGINT) FROM e WHERE src = dst) AS n_self_loops,
+             (SELECT CAST(COUNT(*) AS BIGINT) FROM ns a
+              WHERE EXISTS (SELECT 1 FROM ns b
+                            WHERE b.src = a.dst AND b.dst = a.src)) AS n_reciprocal)
+         SELECT n_hosts, n_edges, n_self_loops, n_reciprocal,
+           CASE WHEN n_edges - n_self_loops <> 0 THEN
+             round(CAST(n_reciprocal AS DOUBLE)
+               / CAST(n_edges - n_self_loops AS DOUBLE), 6) END AS reciprocity,
+           CASE WHEN (m*sxx - sx*sx) <> 0 THEN
+             round(CAST(m*sxy - sx*sx AS DOUBLE)
+               / CAST(m*sxx - sx*sx AS DOUBLE), 6) END AS assortativity
+         FROM cn, sm""")),
+    // label propagation: k unrolled synchronous rounds of the pinned
+    // frequency-then-min vote; block convergence is the spec's claim
+    Query("qg6_host_communities", LinkGraph.hostCommunities(_, _), Some(lpaOracleSql(8))),
+    // personalized PageRank: the qg1 integer fixed-point chain with the
+    // teleport restricted to seeds {1,9,17} — unrolled, bit-for-bit
+    Query("qg11_seed_pagerank", LinkGraph.hostSeedPagerank(_, _), Some(seedPagerankOracleSql(5))),
+    // SCC bow-tie: ground-truth mutual reachability via a recursive CTE,
+    // fully independent of the Spark side's FW-BW coloring (qg2 style);
+    // scc_id = min mutual-reach partner, roles from the same closure
+    Query("qg12_host_scc", LinkGraph.hostScc(_, _), Some(
+      """WITH RECURSIVE e AS (
+           SELECT DISTINCT
+             [0,1,2,3,4,5,6,7,8,9,10,11,12,13,14,15,
+              15,20,21,22,23,23,24,25,26,15,28,29,30,33,35,34]
+               [1 + doc_id % 32] AS src,
+             [1,2,3,4,5,6,7,8,9,10,11,12,13,14,15,8,
+              20,21,22,23,20,24,25,26,27,24,29,28,30,32,34,31]
+               [1 + doc_id % 32] AS dst
+           FROM documents),
+         n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+         reach(a, b) AS (
+           SELECT src, dst FROM e
+           UNION
+           SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
+         mutual AS (
+           SELECT r1.a AS v, r1.b AS u
+           FROM reach r1 JOIN reach r2 ON r1.a = r2.b AND r1.b = r2.a),
+         scc AS (
+           SELECT CAST(n.node AS BIGINT) AS host_id,
+             CAST(LEAST(n.node, COALESCE(MIN(m.u), n.node)) AS BIGINT)
+               AS scc_id
+           FROM n LEFT JOIN mutual m ON m.v = n.node
+           GROUP BY n.node),
+         sizes AS (
+           SELECT scc_id, CAST(COUNT(*) AS BIGINT) AS scc_size
+           FROM scc GROUP BY 1),
+         big AS (
+           SELECT scc_id AS core_scc FROM sizes
+           ORDER BY scc_size DESC, scc_id ASC LIMIT 1),
+         core AS (
+           SELECT host_id FROM scc JOIN big ON scc.scc_id = big.core_scc),
+         tc AS (
+           SELECT DISTINCT r.a AS host_id
+           FROM reach r JOIN core c ON r.b = c.host_id),
+         fc AS (
+           SELECT DISTINCT r.b AS host_id
+           FROM reach r JOIN core c ON r.a = c.host_id)
+         SELECT s.host_id, s.scc_id, z.scc_size,
+           CASE WHEN s.scc_id = big.core_scc THEN 'core'
+                WHEN tc.host_id IS NOT NULL THEN 'in'
+                WHEN fc.host_id IS NOT NULL THEN 'out'
+                ELSE 'other' END AS role
+         FROM scc s JOIN sizes z USING (scc_id) CROSS JOIN big
+         LEFT JOIN tc ON s.host_id = tc.host_id
+         LEFT JOIN fc ON s.host_id = fc.host_id""")),
+    // Morton/z-order layout: the 32-term bit interleave, radix file split,
+    // and per-file min/max envelopes — all integer math, replayed exactly
+    Query("q20_zorder_layout", Relational.q20ZorderLayout(_, _), Some(zorderOracleSql(5))),
+    // ---- similarity search ----
+    Query("qs1_ann_brute", Similarity.annBruteForce(_, _), Some(annCosineOracle)),
+    Query("qs2_ann_lsh", Similarity.annLsh(_, _), Some(annCosineOracle)),
+    // MIPS: brute-force inner-product ranking; dot_ff's left-to-right f64
+    // fold == list_inner_product on the CAST DOUBLE[] arrays
+    Query("qs9_mips", Similarity.mipsTopK(_, _), Some(
+      """SELECT query_id, neighbor_id, rnk, inner_product FROM (
+           SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+             ROW_NUMBER() OVER (PARTITION BY q.vec_id
+               ORDER BY list_inner_product(CAST(q.embedding AS DOUBLE[]),
+                 CAST(e.embedding AS DOUBLE[])) DESC, e.vec_id ASC) AS rnk,
+             ROUND(list_inner_product(CAST(q.embedding AS DOUBLE[]),
+               CAST(e.embedding AS DOUBLE[])), 6) AS inner_product
+           FROM embeddings q, embeddings e
+           WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id)
+         WHERE rnk <= 10""")),
+    // recall@k harness: the ENTIRE evaluation of the PQ approximation is
+    // itself oracled — the approx side nests qs6's full replay (training,
+    // assignment, ADC, ranking) as a CTE; the exact side recomputes integer
+    // L2 on the same fixed-point vectors; recall = |approx ∩ exact| / k
+    Query("qs10_recall_eval", Similarity.annRecallEval(_, _), Some(
+      s"""WITH approx AS (${pqOracleSql(4, 8, 2, 4096, 5, 10)}),
+         fx AS (
+           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
+                           FOR i IN range(1, len(embedding)+1)] AS qv
+           FROM embeddings),
+         ex AS (
+           SELECT query_id, neighbor_id FROM (
+             SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+               ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
+                 list_sum([(a.qv[i]-b.qv[i])*(a.qv[i]-b.qv[i])
+                           FOR i IN range(1, len(a.qv)+1)]) ASC,
+                 b.vec_id ASC) AS rnk
+             FROM fx a JOIN fx b ON a.vec_id < 5 AND b.vec_id <> a.vec_id)
+           WHERE rnk <= 10),
+         hits AS (
+           SELECT a.query_id, CAST(COUNT(*) AS BIGINT) AS n_hits
+           FROM approx a JOIN ex ON ex.query_id = a.query_id
+             AND ex.neighbor_id = a.neighbor_id
+           GROUP BY a.query_id),
+         qids AS (SELECT DISTINCT query_id FROM approx)
+         SELECT qids.query_id,
+           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
+           ROUND(COALESCE(h.n_hits, 0) / 10.0, 6) AS recall_at_k
+         FROM qids LEFT JOIN hits h USING (query_id)""")),
+    // qs11: qs5's SQ8 chain with the metadata predicate applied to the
+    // CORPUS side before scoring (queries unfiltered) — exact integer
+    // ranking, so the whole filtered result hash-matches
+    Query("qs11_filtered_ann", Similarity.filteredAnn(_, _), Some(
+      """WITH e AS (
+           SELECT vec_id, embedding,
+             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+               [CAST(v AS DOUBLE) * CAST(v AS DOUBLE) FOR v IN embedding]),
+               (a, b) -> a + b) AS n2
+           FROM embeddings),
+         q AS (
+           SELECT vec_id,
+             CASE WHEN n2 = 0 THEN [CAST(0 AS BIGINT) FOR v IN embedding]
+               ELSE [CAST(round(CAST(embedding[i] AS DOUBLE) * 127 / sqrt(n2)) AS BIGINT)
+                 FOR i IN range(1, len(embedding)+1)] END AS qv
+           FROM e),
+         f AS (
+           SELECT q.vec_id, q.qv FROM q JOIN documents d ON q.vec_id = d.doc_id
+           WHERE d.lang = 'en'),
+         s AS (
+           SELECT que.vec_id AS query_id, doc.vec_id AS neighbor_id,
+             CAST(list_sum([que.qv[i] * doc.qv[i]
+               FOR i IN range(1, len(doc.qv)+1)]) AS BIGINT) AS qdot
+           FROM q que JOIN f doc
+             ON que.vec_id < 5 AND doc.vec_id <> que.vec_id)
+         SELECT query_id, neighbor_id, rnk, qdot FROM (
+           SELECT query_id, neighbor_id, qdot,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY qdot DESC, neighbor_id ASC) AS rnk
+           FROM s) WHERE rnk <= 10""")),
+    // radius search: the same engine-parity cosine as qs1, but an
+    // unranked >= tau predicate on the unrounded score (map-only op)
+    Query("qs12_range_search", Similarity.rangeSearch(_, _), Some(
+      """SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+           ROUND(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+             CAST(e.embedding AS DOUBLE[])), 6) AS cosine
+         FROM embeddings q, embeddings e
+         WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id
+           AND list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+             CAST(e.embedding AS DOUBLE[])) >= CAST(0.25 AS DOUBLE)""")),
+    // honestly approximate: IVF coarse quantization cannot guarantee exact
+    // top-k on the synthetic corpus (near-uniform random vectors, the worst
+    // case for coarse quantization) without probing every cell, so qs3 stays
+    // spec-verified instead of carrying a brute-force oracle it can't match.
+    // Measured recall at nprobe=12/16 cells: 0.98 / 0.94 / 1.00 at
+    // sf0.001/0.01/0.1; OpsSpec floors it at 0.9 and separately asserts
+    // EXACT brute-force parity at nprobe=k
+    Query("qs3_ann_ivf", Similarity.annIvf(_, _, nprobe = 12), None),
+    // ---- text analysis (oracle-checked) ----
+    Query("qt1_token_count", TextAnalysis.tokenCounts, Some(
+      """SELECT doc_id,
+         len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
+         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpeish_tokens,
+         length(text) AS n_chars
+         FROM documents""")),
+    Query("qt2_quality", TextAnalysis.qualityScores, Some(
+      """SELECT doc_id, n_chars,
+         ROUND(length(text) / len(string_split_regex(trim(text), '\s+')), 4) AS mean_word_len,
+         ROUND(len(regexp_extract_all(text, '[\.,;:!\?]')) / CAST(length(text) AS DOUBLE), 6) AS punct_ratio,
+         ROUND(len(regexp_extract_all(text, '[0-9]')) / CAST(length(text) AS DOUBLE), 6) AS digit_ratio,
+         ROUND(len(regexp_extract_all(text, '\b(the|a|and|of|to|in|is|for|on|with)\b'))
+           / CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE), 6) AS stopword_ratio,
+         ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
+           * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]')) / CAST(length(text) AS DOUBLE)), 6) AS quality_score
+         FROM documents""")),
+    Query("qt3_langid", TextAnalysis.langId, Some(
+      """WITH h AS (
+           SELECT doc_id, lang AS labeled_lang,
+             len(regexp_extract_all(lower(text), '\b(the|and|of|is|was|with)\b')) AS en_hits,
+             len(regexp_extract_all(lower(text), '\b(le|la|les|et|est|une)\b')) AS fr_hits,
+             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|mit)\b')) AS de_hits,
+             len(regexp_extract_all(lower(text), '\b(el|los|las|y|es|una)\b')) AS es_hits
+           FROM documents)
+         SELECT doc_id, labeled_lang,
+           CASE WHEN GREATEST(en_hits, fr_hits, de_hits, es_hits) = 0 THEN 'und'
+                WHEN en_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'en'
+                WHEN fr_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'fr'
+                WHEN de_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'de'
+                ELSE 'es' END AS detected_lang,
+           en_hits, fr_hits, de_hits, es_hits,
+           CAST(CASE WHEN (CASE WHEN GREATEST(en_hits, fr_hits, de_hits, es_hits) = 0 THEN 'und'
+                WHEN en_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'en'
+                WHEN fr_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'fr'
+                WHEN de_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'de'
+                ELSE 'es' END) = labeled_lang THEN 1 ELSE 0 END AS INT) AS lang_agree
+         FROM h""")),
+    // md5 half only: oracle-checkable; the simhash half is qd3's (spec +
+    // golden verified — FNV-1a isn't portably expressible in the oracle)
+    Query("qt4_fingerprint",
+      (s, d) => TextAnalysis.fingerprints(s, d).select(col("doc_id"), col("md5_fp")),
+      Some(
+      """SELECT doc_id,
+         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS md5_fp
+         FROM documents""")),
+    Query("qt5_bigram_freq", TextAnalysis.bigramFreq(_, _), Some(
       """WITH w AS (
-           SELECT source,
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         b AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS bigrams
+           FROM w),
+         e AS (SELECT unnest(bigrams) AS bigram FROM b)
+         SELECT bigram, COUNT(*) AS n_docs FROM e
+         GROUP BY bigram HAVING COUNT(*) >= 10""")),
+    // Count-Min Sketch cells replayed exactly: same md5-affine lane hashes
+    // as qd2, every (d, w) cell of the 4x64 grid incl. zeros
+    Query("qt6_cms_bigrams", TextAnalysis.cmsBigrams(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         b AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         e AS (SELECT unnest(sh) AS item FROM b),
+         h AS (
+           SELECT CAST('0x' || substr(md5(item),1,15) AS BIGINT) AS a,
+                  CAST('0x' || substr(md5(item),16,15) AS BIGINT) AS bb
+           FROM e),
+         cells AS (
+           SELECT d.d, CAST(((a + d.d * bb) % 2305843009213693951) % 64 AS INT) AS w,
+                  COUNT(*) AS n
+           FROM h CROSS JOIN (SELECT unnest(range(0, 4)) AS d) d
+           GROUP BY 1, 2),
+         grid AS (
+           SELECT CAST(dd.d AS INT) AS d, CAST(ww.w AS INT) AS w
+           FROM (SELECT unnest(range(0, 4)) AS d) dd
+           CROSS JOIN (SELECT unnest(range(0, 64)) AS w) ww)
+         SELECT grid.d, grid.w, COALESCE(cells.n, 0) AS n
+         FROM grid LEFT JOIN cells ON grid.d = cells.d AND grid.w = cells.w""")),
+    Query("qt7_hash_sample", TextAnalysis.hashSample(_, _), Some(
+      """SELECT doc_id, lang, n_chars FROM documents
+         WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#graft'), 1, 15) AS BIGINT) % 1000 < 100""")),
+    Query("qt8_contamination", TextAnalysis.contamination(_, _), Some(contaminationOracle)),
+    Query("qt9_tfidf", TextAnalysis.tfidfTopTerms(_, _), Some(
+      """WITH wds AS (
+           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+           FROM documents),
+         tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM wds GROUP BY 1, 2),
+         dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
+         nn AS (SELECT COUNT(*) AS n FROM documents),
+         s AS (
+           SELECT doc_id, term, tf * ln(n / df) AS score,
+             ROW_NUMBER() OVER (PARTITION BY doc_id
+               ORDER BY tf * ln(n / df) DESC, term ASC) AS rnk
+           FROM tf JOIN dfreq USING (term) CROSS JOIN nn)
+         SELECT doc_id, term, ROUND(score, 6) AS tfidf, rnk
+         FROM s WHERE rnk <= 3""")),
+    // Gopher-style repetition filters: non-distinct bigram slot counts, ties
+    // on the top bigram resolve lexicographically in both engines
+    Query("qt10_repetition", TextAnalysis.repetitionSignals, Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         b AS (
+           SELECT doc_id, words,
+             CASE WHEN len(words) >= 2 THEN
+               [list_aggregate(words[i:i+1], 'string_agg', ' ')
+                FOR i IN range(1, len(words))]
+             ELSE [] END AS bg
+           FROM w),
+         c AS (
+           SELECT doc_id, bigram, COUNT(*) AS cnt
+           FROM (SELECT doc_id, unnest(bg) AS bigram FROM b) GROUP BY 1, 2),
+         m AS (
+           SELECT doc_id, MAX(cnt) AS top_count,
+             CAST(SUM(cnt) AS BIGINT) AS n_bigrams
+           FROM c GROUP BY 1),
+         tb AS (
+           SELECT c.doc_id, MIN(c.bigram) AS top_bigram
+           FROM c JOIN m ON c.doc_id = m.doc_id AND c.cnt = m.top_count
+           GROUP BY 1),
+         wm AS (
+           SELECT doc_id, CAST(len(words) AS BIGINT) AS n_words,
+             ROUND(1 - len(list_distinct(words)) / CAST(len(words) AS DOUBLE), 6)
+               AS dup_word_frac
+           FROM w)
+         SELECT wm.doc_id, wm.n_words, wm.dup_word_frac, tb.top_bigram,
+           m.top_count, ROUND(m.top_count / CAST(m.n_bigrams AS DOUBLE), 6)
+             AS top_bigram_frac
+         FROM wm JOIN m ON wm.doc_id = m.doc_id
+         JOIN tb ON wm.doc_id = tb.doc_id""")),
+    // rare-gram novelty: integer counts + one division, exactly replayable
+    Query("qt11_novelty", TextAnalysis.noveltyScores(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
              string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
            FROM documents),
          sh AS (
-           SELECT source, list_distinct(list_filter(
-             [list_aggregate(words[i:i+2], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-2, 1)+1)], x -> x <> '')) AS sh
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
            FROM w),
-         ss AS (SELECT DISTINCT source, unnest(sh) AS g FROM sh),
-         sizes AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM ss GROUP BY 1),
-         inter AS (
-           SELECT a.source AS src_a, b.source AS src_b,
-             CAST(COUNT(*) AS BIGINT) AS n_inter
-           FROM ss a JOIN ss b ON a.g = b.g AND a.source < b.source
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT a.source AS src_a, a.n AS n_a, b.source AS src_b, b.n AS n_b
-           FROM sizes a JOIN sizes b ON a.source < b.source)
-         SELECT src_a, src_b, n_a, n_b,
-           COALESCE(n_inter, 0) AS n_inter,
-           ROUND(CAST(COALESCE(n_inter, 0) AS DOUBLE)
-             / CAST(n_a + n_b - COALESCE(n_inter, 0) AS DOUBLE), 6) AS jaccard,
-           ROUND(CAST(COALESCE(n_inter, 0) AS DOUBLE) / CAST(n_a AS DOUBLE), 6)
-             AS containment_a,
-           ROUND(CAST(COALESCE(n_inter, 0) AS DOUBLE) / CAST(n_b AS DOUBLE), 6)
-             AS containment_b
-         FROM pairs LEFT JOIN inter USING (src_a, src_b)""",
-    // Blocklist scan: per-phrase overlapping-occurrence counts replayed
-    // with a position comprehension (range end < start => empty list, so
-    // docs shorter than a phrase contribute zero); rate/flag in integer
-    // math. Spark runs the same semantics in one Aho-Corasick pass.
-    "qt48_blocklist" ->
-      """WITH p AS (
-           SELECT unnest(['slow scan', 'hash join', 'a a', 'an', 'merge'])
-             AS ph),
-         t AS (
-           SELECT doc_id, lower(text) AS lt,
-             CAST(length(text) AS BIGINT) AS n
-           FROM documents),
-         h AS (
-           SELECT t.doc_id, p.ph,
-             CAST(len([i FOR i IN range(1, t.n - length(p.ph) + 2)
-               IF substr(t.lt, i, length(p.ph)) = p.ph]) AS BIGINT) AS c
-           FROM t CROSS JOIN p),
-         a AS (
-           SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_hits,
-             CAST(SUM(CASE WHEN c > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_phrases
-           FROM h GROUP BY 1)
-         SELECT t.doc_id, a.n_hits, a.n_phrases,
-           a.n_hits * 10000 // GREATEST(t.n, 1) AS hits_per_10k,
-           CAST(CASE WHEN a.n_hits * 10000 // GREATEST(t.n, 1) >= 150
-             THEN 1 ELSE 0 END AS INT) AS flagged
-         FROM t JOIN a USING (doc_id)""",
-    // Zipf head: count aggregate, ORDER/LIMIT head, rank window on the
-    // 32-row head, pinned ln/ln exponent estimates
-    "qt46_zipf_curve" ->
+         e AS (SELECT doc_id, unnest(sh) AS g FROM sh),
+         d AS (SELECT g, COUNT(*) AS df FROM e GROUP BY 1)
+         SELECT doc_id, COUNT(*) AS n_grams,
+           CAST(SUM(CASE WHEN df < 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare,
+           MIN(df) AS min_df, MAX(df) AS max_df,
+           ROUND(SUM(CASE WHEN df < 3 THEN 1 ELSE 0 END)
+             / CAST(COUNT(*) AS DOUBLE), 6) AS rare_frac
+         FROM e JOIN d USING (g) GROUP BY doc_id""")),
+    // KMV sketch content replayed exactly: the k smallest distinct 60-bit
+    // md5-half hashes of the bigram vocabulary, ascending
+    Query("qt12_kmv_distinct", TextAnalysis.kmvDistinct(_, _), Some(
       """WITH w AS (
-           SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
            FROM documents),
-         c AS (SELECT term, COUNT(*) AS cnt FROM w GROUP BY 1),
-         s AS (SELECT MAX(cnt) AS c1, CAST(SUM(cnt) AS BIGINT) AS tot FROM c),
-         h AS (
-           SELECT term, cnt,
-             ROW_NUMBER() OVER (ORDER BY cnt DESC, term ASC) AS rank
-           FROM c ORDER BY cnt DESC, term ASC LIMIT 32)
-         SELECT CAST(rank AS INT) AS rank, term, cnt,
-           ROUND(CAST(cnt AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS freq_share,
-           CASE WHEN rank >= 2 THEN
-             ROUND((ln(CAST(c1 AS DOUBLE)) - ln(CAST(cnt AS DOUBLE)))
-               / ln(CAST(rank AS DOUBLE)), 6) END AS zipf_exp
-         FROM h CROSS JOIN s""",
-    // Heaps'-law vocabulary growth: first-bucket min-aggregate per term,
-    // running sums over the B-row spine, ln/ln ratio pinned and rounded
-    "qt45_heaps_curve" ->
+         sh AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         e AS (SELECT unnest(sh) AS g FROM sh),
+         h AS (SELECT DISTINCT CAST('0x' || substr(md5(g),1,15) AS BIGINT) AS h FROM e),
+         topk AS (SELECT h FROM h ORDER BY h LIMIT 256)
+         SELECT CAST(ROW_NUMBER() OVER (ORDER BY h) AS INT) AS rank, h FROM topk""")),
+    // identical to qt8's oracle: the bloom prefilter has no false negatives
+    // and the exact verify join removes false positives, so the result is
+    // bit-for-bit the same as the unfiltered contamination pass
+    Query("qt13_bloom_contamination", TextAnalysis.bloomContamination(_, _),
+      Some(contaminationOracle)),
+    // boilerplate strip: integer keep predicate (df*100 <= N*pct) and an
+    // ORDER BY-pos string_agg replaying the order-preserving reconstruction
+    Query("qt14_df_prune", TextAnalysis.dfPrune(_, _), Some(
       """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
            FROM documents),
-         mi AS (SELECT MAX(doc_id) AS max_id FROM documents),
-         tk AS (
-           SELECT term, CAST(doc_id * 10 // (max_id + 1) AS INT) AS b
-           FROM (SELECT doc_id, unnest(words) AS term FROM w) CROSS JOIN mi),
-         fb AS (
-           SELECT fb AS b, COUNT(*) AS new_types FROM (
-             SELECT term, MIN(b) AS fb FROM tk GROUP BY term) GROUP BY 1),
-         tc AS (SELECT b, COUNT(*) AS toks FROM tk GROUP BY 1),
-         spine AS (SELECT unnest(range(0, 10)) AS b),
-         j AS (
-           SELECT CAST(spine.b AS INT) AS b,
-             CAST(COALESCE(tc.toks, 0) AS BIGINT) AS toks,
-             CAST(COALESCE(fb.new_types, 0) AS BIGINT) AS new_types
-           FROM spine LEFT JOIN tc ON tc.b = spine.b
-             LEFT JOIN fb ON fb.b = spine.b),
+         pw AS (
+           SELECT doc_id, unnest(words) AS word,
+             unnest(range(1, len(words)+1)) AS pos
+           FROM w),
+         d AS (SELECT word, COUNT(DISTINCT doc_id) AS df FROM pw GROUP BY word),
+         n AS (SELECT COUNT(*) AS n FROM documents)
+         SELECT doc_id,
+           CAST(SUM(CASE WHEN d.df*100 <= n.n*78 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+           CAST(SUM(CASE WHEN d.df*100 <= n.n*78 THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
+           COALESCE(string_agg(CASE WHEN d.df*100 <= n.n*78 THEN word END,
+             ' ' ORDER BY pos), '') AS pruned_text
+         FROM pw JOIN d USING (word) CROSS JOIN n
+         GROUP BY doc_id""")),
+    // stratified sample: the oracle runs the SINGLE-window per-lang top-k;
+    // the Spark side runs the salted two-phase form — equality of the two IS
+    // the correctness claim (any global top-k row is top-k in its bucket)
+    Query("qt15_stratified_sample", TextAnalysis.stratifiedSample(_, _), Some(
+      """SELECT lang, doc_id, h, rnk, n_chars FROM (
+           SELECT lang, doc_id, n_chars,
+             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#strat'), 1, 15) AS BIGINT) AS h,
+             ROW_NUMBER() OVER (PARTITION BY lang
+               ORDER BY CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#strat'), 1, 15) AS BIGINT),
+                 doc_id) AS rnk
+           FROM documents)
+         WHERE rnk <= 25""")),
+    // bigram-LM score: integer counts -> exact rational -> ln rounded to 9
+    // digits -> SORTED in-order f64 fold — order-pinned float aggregation
+    Query("qt16_lm_score", TextAnalysis.lmScore, Some(lmScoreCte +
+      """
+         SELECT doc_id, n_bigrams, avg_logp FROM lmsc""")),
+    // histogram-based exact quantiles over the deterministic hash sample:
+    // integer rank math ((n-1)*p div 100 + 1, lower quantile) replays exactly
+    Query("qt17_quantile_hist", TextAnalysis.quantileHist(_, _), Some(
+      """WITH s AS (
+           SELECT lang, n_chars FROM documents
+           WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#quant'), 1, 15) AS BIGINT) % 1000 < 250),
+         h AS (SELECT lang, n_chars, COUNT(*) AS cnt FROM s GROUP BY 1, 2),
          c AS (
-           SELECT b, new_types,
-             CAST(SUM(toks) OVER (ORDER BY b) AS BIGINT) AS cum_tokens,
-             CAST(SUM(new_types) OVER (ORDER BY b) AS BIGINT) AS cum_vocab
-           FROM j)
-         SELECT b AS bucket, new_types, cum_tokens, cum_vocab,
-           CASE WHEN cum_tokens > 1 AND cum_vocab > 0
-             THEN ROUND(ln(CAST(cum_vocab AS DOUBLE))
-               / ln(CAST(cum_tokens AS DOUBLE)), 6) END AS heaps_ratio
-         FROM c""",
+           SELECT lang, n_chars, cnt,
+             SUM(cnt) OVER (PARTITION BY lang ORDER BY n_chars
+               ROWS UNBOUNDED PRECEDING) AS cum
+           FROM h),
+         t AS (SELECT lang, CAST(SUM(cnt) AS BIGINT) AS n_sampled FROM h GROUP BY 1),
+         tot AS (SELECT lang, COUNT(*) AS n_total FROM documents GROUP BY 1)
+         SELECT c.lang, tot.n_total, t.n_sampled,
+           MIN(CASE WHEN cum >= ((n_sampled - 1) * 25) // 100 + 1 THEN n_chars END) AS p25,
+           MIN(CASE WHEN cum >= ((n_sampled - 1) * 50) // 100 + 1 THEN n_chars END) AS p50,
+           MIN(CASE WHEN cum >= ((n_sampled - 1) * 75) // 100 + 1 THEN n_chars END) AS p75,
+           MIN(CASE WHEN cum >= ((n_sampled - 1) * 90) // 100 + 1 THEN n_chars END) AS p90
+         FROM c JOIN t USING (lang) JOIN tot USING (lang)
+         GROUP BY c.lang, tot.n_total, t.n_sampled""")),
+    // interpolated Kneser-Ney bigram LM: every quantity from one bigram
+    // count table, the probability in the identical pinned f64 tree
+    // (doubles forced via 0.75e0 / CASTs), logs order-pinned like qt16
+    Query("qt30_kn_lm_score", TextAnalysis.knLmScore, Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         bi AS (
+           SELECT doc_id, unnest(
+             [words[i] || ' ' || words[i+1]
+              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS bg
+           FROM w),
+         inst AS (
+           SELECT doc_id, bg, string_split(bg, ' ')[1] AS w1,
+             string_split(bg, ' ')[2] AS w2
+           FROM bi),
+         cb AS (SELECT bg, COUNT(*) AS cb FROM bi GROUP BY bg),
+         cbs AS (
+           SELECT bg, cb, string_split(bg, ' ')[1] AS w1,
+             string_split(bg, ' ')[2] AS w2
+           FROM cb),
+         ls AS (SELECT w1, CAST(SUM(cb) AS BIGINT) AS cu, COUNT(*) AS n1l
+                FROM cbs GROUP BY w1),
+         rs AS (SELECT w2, COUNT(*) AS n1r FROM cbs GROUP BY w2),
+         nt AS (SELECT COUNT(*) AS nt FROM cb),
+         lp AS (
+           SELECT inst.doc_id,
+             ROUND(ln((CAST(cb.cb AS DOUBLE) - 0.75e0) / ls.cu
+               + (0.75e0 * ls.n1l / ls.cu)
+                 * (CAST(rs.n1r AS DOUBLE) / nt.nt)), 9) AS logp
+           FROM inst JOIN cb USING (bg)
+             JOIN ls ON ls.w1 = inst.w1
+             JOIN rs ON rs.w2 = inst.w2 CROSS JOIN nt)
+         SELECT doc_id, COUNT(*) AS n_bigrams,
+           ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+             list_sort(list(logp))), (a, b) -> a + b) / COUNT(*), 6) AS kn_logp
+         FROM lp GROUP BY doc_id""")),
+    // char entropy: code-point frequency table, per-term -(c/n)*ln(c/n)
+    // rounded to 9, sorted in-order f64 fold (the qt16 discipline), final
+    // fractions rounded to 6 — hash-matches the native one-pass expression
+    Query("qt31_char_entropy", TextAnalysis.charEntropyProfile, Some(
+      """WITH c AS (
+           SELECT doc_id,
+             [substr(text, i, 1) FOR i IN range(1, length(text) + 1)] AS cs
+           FROM documents),
+         f AS (
+           SELECT doc_id, ch, COUNT(*) AS c
+           FROM (SELECT doc_id, unnest(cs) AS ch FROM c) GROUP BY 1, 2),
+         n AS (
+           SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
+             CAST(COUNT(*) AS BIGINT) AS nd, MAX(c) AS mx
+           FROM f GROUP BY 1),
+         t AS (
+           SELECT f.doc_id,
+             ROUND(-(CAST(f.c AS DOUBLE) / n.n)
+               * ln(CAST(f.c AS DOUBLE) / n.n), 9) AS term
+           FROM f JOIN n USING (doc_id)),
+         e AS (
+           SELECT doc_id,
+             ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+               list_sort(list(term))), (a, b) -> a + b), 6) AS ent
+           FROM t GROUP BY doc_id)
+         SELECT n.doc_id, n.n AS n_chars, n.nd AS n_distinct,
+           ROUND(CAST(n.mx AS DOUBLE) / n.n, 6) AS max_char_frac,
+           e.ent AS entropy_nats
+         FROM n JOIN e USING (doc_id)""")),
+    // shard manifest: md5-lane shard assignment + per-shard counts and an
+    // order-independent mod-2^61-1 fingerprint sum (HUGEINT == DECIMAL)
+    Query("qt32_shard_manifest", TextAnalysis.shardManifest(_, _), Some(
+      """WITH d AS (
+           SELECT
+             CAST('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)),
+               1, 15) AS BIGINT) % 16 AS shard_id,
+             len(string_split_regex(trim(text), '\s+')) AS toks,
+             length(text) AS chars,
+             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
+               || CAST(length(text) AS VARCHAR)), 1, 15) AS BIGINT)
+               % 2305843009213693951 AS fp
+           FROM documents)
+         SELECT shard_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(toks) AS BIGINT) AS token_sum,
+           CAST(SUM(chars) AS BIGINT) AS char_sum,
+           CAST(SUM(CAST(fp AS HUGEINT)) % 2305843009213693951 AS BIGINT)
+             AS content_fp
+         FROM d GROUP BY shard_id""")),
+    // sliding-window chunking: starts 0,48,96,... < n_tokens; chunk text
+    // fingerprinted by the portable 60-bit md5 lane (list slice == Spark
+    // slice, both clamp at the tail)
+    Query("qt33_chunk_windows", TextAnalysis.chunkWindows(_, _), Some(chunkCte + """
+         SELECT doc_id, chunk_id, start_tok, n_toks, chunk_fp FROM ch""")),
+    // PMI collocations: occurrence-count bigram/unigram tables, one ln of
+    // the exact integer rational with pinned f64 association, round 9
+    Query("qt35_pmi", TextAnalysis.pmiCollocations(_, _), Some(
+      """WITH w AS (
+           SELECT string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+           FROM documents),
+         uni AS (SELECT unnest(w) AS word FROM w),
+         cu AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS c FROM uni GROUP BY word),
+         nw AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM uni),
+         bg AS (
+           SELECT [w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))] AS bs
+           FROM w WHERE len(w) >= 2),
+         bigr AS (SELECT unnest(bs) AS bigram FROM bg),
+         cb AS (
+           SELECT bigram, CAST(COUNT(*) AS BIGINT) AS c_ab
+           FROM bigr GROUP BY bigram HAVING COUNT(*) >= 5),
+         nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM bigr)
+         SELECT cb.bigram, cb.c_ab, ca.c AS c_a, cbb.c AS c_b,
+           ROUND(ln(CAST(cb.c_ab AS DOUBLE) * nw.n * nw.n /
+             (CAST(ca.c AS DOUBLE) * cbb.c * nb.n)), 9) AS pmi
+         FROM cb
+         JOIN cu ca ON ca.word = string_split(cb.bigram, ' ')[1]
+         JOIN cu cbb ON cbb.word = string_split(cb.bigram, ' ')[2]
+         CROSS JOIN nw CROSS JOIN nb
+         ORDER BY pmi DESC, cb.bigram ASC
+         LIMIT 50""")),
+    // qt39: the shard token distributions, bucket spine, smoothing and the
+    // per-bucket JSD term replayed with the PINNED parenthesization
+    // (TextAnalysis.jsdDrift) — p/q/m are single IEEE divisions of
+    // exactly-converted int64s, one ln per operand, round 9
+    Query("qt39_jsd_drift", TextAnalysis.jsdDrift(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id % 2 AS half,
+             unnest(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS w
+           FROM documents),
+         wf AS (SELECT half, w FROM w WHERE w <> ''),
+         c AS (
+           SELECT half, CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) % 256 AS bucket,
+             CAST(COUNT(*) AS BIGINT) AS c
+           FROM wf GROUP BY 1, 2),
+         sp AS (SELECT unnest(range(256)) AS bucket),
+         n AS (SELECT
+           CAST(SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+           CAST(SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
+           FROM wf),
+         j AS (
+           SELECT sp.bucket,
+             COALESCE(a.c, 0) AS cnt_a, COALESCE(b.c, 0) AS cnt_b
+           FROM sp
+           LEFT JOIN (SELECT bucket, c FROM c WHERE half = 0) a ON sp.bucket = a.bucket
+           LEFT JOIN (SELECT bucket, c FROM c WHERE half = 1) b ON sp.bucket = b.bucket),
+         t AS (
+           SELECT bucket, cnt_a, cnt_b,
+             CAST(cnt_a + 1 AS DOUBLE) / CAST(n.n_a + 256 AS DOUBLE) AS p,
+             CAST(cnt_b + 1 AS DOUBLE) / CAST(n.n_b + 256 AS DOUBLE) AS q
+           FROM j, n)
+        SELECT bucket, cnt_a, cnt_b,
+          round((p * ln(p / ((p + q) / 2.0)) + q * ln(q / ((p + q) / 2.0))) * 0.5, 9) AS jsd_term
+        FROM t""")),
+    // qt40: integer counts via len(regexp_extract_all) (no regexp_count in
+    // DuckDB 1.0), formulas on CAST-to-DOUBLE constants (decimal literals
+    // would otherwise compute in DECIMAL), pinned parenthesization, round 6
+    Query("qt40_readability", TextAnalysis.readability, Some(
+      """WITH c AS (
+           SELECT doc_id,
+             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_words,
+             GREATEST(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT), 1) AS n_sentences,
+             CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS n_syllables
+           FROM documents),
+         r AS (
+           SELECT doc_id, n_words, n_sentences, n_syllables,
+             CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE) AS wps_raw,
+             CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE) AS spw_raw
+           FROM c)
+         SELECT doc_id, n_words, n_sentences, n_syllables,
+           round(wps_raw, 6) AS wps,
+           round(spw_raw, 6) AS spw,
+           round(CAST(206.835 AS DOUBLE) - CAST(1.015 AS DOUBLE) * wps_raw
+             - CAST(84.6 AS DOUBLE) * spw_raw, 6) AS flesch,
+           round(CAST(0.39 AS DOUBLE) * wps_raw + CAST(11.8 AS DOUBLE) * spw_raw
+             - CAST(15.59 AS DOUBLE), 6) AS fk_grade
+         FROM r""")),
+    // qt41: qd7's sigs + band predicate run ASYMMETRICALLY train x eval
+    // (the qt8 doc_id % 29 eval slice), exact-Jaccard verify at 0.2; cap
+    // warn-only like qd7 (buckets far under 4096 at the suite SFs)
+    Query("qt41_near_contamination", TextAnalysis.nearContamination(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         sigs AS (
+           SELECT doc_id, sh,
+             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
+                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
+               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
+           FROM sh WHERE len(sh) > 0),
+         tr AS (SELECT * FROM sigs WHERE doc_id % 29 <> 0),
+         ev AS (SELECT * FROM sigs WHERE doc_id % 29 = 0)
+         SELECT doc_id, eval_id, ROUND(j, 6) AS jaccard FROM (
+           SELECT t.doc_id, e.doc_id AS eval_id,
+             len(list_intersect(t.sh, e.sh))
+               / len(list_distinct(list_concat(t.sh, e.sh))) AS j
+           FROM tr t JOIN ev e ON (
+             (t.sig[1] = e.sig[1] AND t.sig[2] = e.sig[2]) OR
+             (t.sig[3] = e.sig[3] AND t.sig[4] = e.sig[4]) OR
+             (t.sig[5] = e.sig[5] AND t.sig[6] = e.sig[6]) OR
+             (t.sig[7] = e.sig[7] AND t.sig[8] = e.sig[8])))
+         WHERE j >= 0.2""")),
+    // qt43: the waterfilling replayed step for step — capacity order with
+    // the source tie-break, the prefix-fits predicate, the equal-share
+    // suffix with its remainder distributed to the lowest uncapped ranks.
+    // Window sums come back HUGEINT in DuckDB, so every emitted number is
+    // CAST to BIGINT (the qt31 pitfall).
+    Query("qt43_token_budget", TextAnalysis.tokenBudget, Some(
+      """WITH t AS (
+           SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
+               AS tokens
+           FROM documents GROUP BY 1),
+         c AS (
+           SELECT source, n_docs, tokens,
+             1 + CAST('0x' || substr(md5(source), 1, 15) AS BIGINT) % 4
+               AS max_epochs,
+             tokens * (1 + CAST('0x' || substr(md5(source), 1, 15) AS BIGINT)
+               % 4) AS capacity
+           FROM t),
+         r AS (
+           SELECT c.*,
+             CAST(ROW_NUMBER() OVER (ORDER BY capacity, source) AS BIGINT) AS i,
+             CAST(SUM(capacity) OVER (ORDER BY capacity, source) AS BIGINT)
+               AS cum,
+             CAST(COUNT(*) OVER () AS BIGINT) AS k,
+             CAST(SUM(capacity) OVER () AS BIGINT) AS total_cap
+           FROM c),
+         r1 AS (SELECT r.*, total_cap * 55 // 100 AS budget FROM r),
+         r2 AS (
+           SELECT r1.*,
+             CASE WHEN capacity * (k - i + 1) <= budget - (cum - capacity)
+               THEN 1 ELSE 0 END AS fits
+           FROM r1),
+         pp AS (
+           SELECT COALESCE(MIN(CASE WHEN fits = 0 THEN i END) - 1, MAX(i))
+             AS p
+           FROM r2),
+         cp AS (
+           SELECT COALESCE(CAST(MAX(CASE WHEN r2.i <= pp.p THEN r2.cum END)
+             AS BIGINT), 0) AS cum_p
+           FROM r2, pp),
+         fin AS (
+           SELECT r2.*, pp.p, cp.cum_p,
+             CASE WHEN k > p THEN (budget - cum_p) // (k - p)
+               ELSE CAST(0 AS BIGINT) END AS share,
+             CASE WHEN k > p THEN (budget - cum_p) % (k - p)
+               ELSE CAST(0 AS BIGINT) END AS rem
+           FROM r2, pp, cp),
+         al AS (
+           SELECT source, n_docs, tokens, max_epochs, capacity,
+             CASE WHEN i <= p THEN capacity
+               ELSE share + CASE WHEN i - p <= rem THEN 1 ELSE 0 END END
+               AS alloc_tokens
+           FROM fin)
+         SELECT source, n_docs, tokens,
+           CAST(max_epochs AS BIGINT) AS max_epochs,
+           CAST(capacity AS BIGINT) AS capacity,
+           CAST(alloc_tokens AS BIGINT) AS alloc_tokens,
+           CAST(alloc_tokens * 1000 // tokens AS BIGINT) AS epochs_milli
+         FROM al""")),
     // BM25 retrieval (Lucene +1-idf variant): the per-term score in the
     // identical pinned f64 tree (every int CAST out, constants as double
     // CASTs), per-(query,doc) sum as the qt16 sorted left fold, and the
     // WINDOW-form ranking the Spark side's bounded top_k_rank aggregate
     // must equal (the q19 equivalence discipline)
-    "qt44_bm25" ->
+    Query("qt44_bm25", TextAnalysis.bm25Retrieval(_, _), Some(
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
            FROM documents),
@@ -4182,8 +3492,140 @@ object SparkEntry {
            FROM sc)
          SELECT query_id, doc_id, ROUND(score, 6) AS score,
            CAST(rnk AS INT) AS rnk
-         FROM r WHERE rnk <= 5""",
-    "qt42_source_profile" ->
+         FROM r WHERE rnk <= 5""")),
+    // Heaps'-law vocabulary growth: first-bucket min-aggregate per term,
+    // running sums over the B-row spine, ln/ln ratio pinned and rounded
+    Query("qt45_heaps_curve", TextAnalysis.heapsCurve(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
+           FROM documents),
+         mi AS (SELECT MAX(doc_id) AS max_id FROM documents),
+         tk AS (
+           SELECT term, CAST(doc_id * 10 // (max_id + 1) AS INT) AS b
+           FROM (SELECT doc_id, unnest(words) AS term FROM w) CROSS JOIN mi),
+         fb AS (
+           SELECT fb AS b, COUNT(*) AS new_types FROM (
+             SELECT term, MIN(b) AS fb FROM tk GROUP BY term) GROUP BY 1),
+         tc AS (SELECT b, COUNT(*) AS toks FROM tk GROUP BY 1),
+         spine AS (SELECT unnest(range(0, 10)) AS b),
+         j AS (
+           SELECT CAST(spine.b AS INT) AS b,
+             CAST(COALESCE(tc.toks, 0) AS BIGINT) AS toks,
+             CAST(COALESCE(fb.new_types, 0) AS BIGINT) AS new_types
+           FROM spine LEFT JOIN tc ON tc.b = spine.b
+             LEFT JOIN fb ON fb.b = spine.b),
+         c AS (
+           SELECT b, new_types,
+             CAST(SUM(toks) OVER (ORDER BY b) AS BIGINT) AS cum_tokens,
+             CAST(SUM(new_types) OVER (ORDER BY b) AS BIGINT) AS cum_vocab
+           FROM j)
+         SELECT b AS bucket, new_types, cum_tokens, cum_vocab,
+           CASE WHEN cum_tokens > 1 AND cum_vocab > 0
+             THEN ROUND(ln(CAST(cum_vocab AS DOUBLE))
+               / ln(CAST(cum_tokens AS DOUBLE)), 6) END AS heaps_ratio
+         FROM c""")),
+    // Zipf head: count aggregate, ORDER/LIMIT head, rank window on the
+    // 32-row head, pinned ln/ln exponent estimates
+    Query("qt46_zipf_curve", TextAnalysis.zipfCurve(_, _), Some(
+      """WITH w AS (
+           SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+           FROM documents),
+         c AS (SELECT term, COUNT(*) AS cnt FROM w GROUP BY 1),
+         s AS (SELECT MAX(cnt) AS c1, CAST(SUM(cnt) AS BIGINT) AS tot FROM c),
+         h AS (
+           SELECT term, cnt,
+             ROW_NUMBER() OVER (ORDER BY cnt DESC, term ASC) AS rank
+           FROM c ORDER BY cnt DESC, term ASC LIMIT 32)
+         SELECT CAST(rank AS INT) AS rank, term, cnt,
+           ROUND(CAST(cnt AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS freq_share,
+           CASE WHEN rank >= 2 THEN
+             ROUND((ln(CAST(c1 AS DOUBLE)) - ln(CAST(cnt AS DOUBLE)))
+               / ln(CAST(rank AS DOUBLE)), 6) END AS zipf_exp
+         FROM h CROSS JOIN s""")),
+    // Source-overlap matrix: distinct (source, 3-gram) sets, shingle-keyed
+    // pair intersections, complete S x S skeleton with explicit zeros
+    Query("qt47_source_overlap", TextAnalysis.sourceOverlap(_, _), Some(
+      """WITH w AS (
+           SELECT source,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         sh AS (
+           SELECT source, list_distinct(list_filter(
+             [list_aggregate(words[i:i+2], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-2, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         ss AS (SELECT DISTINCT source, unnest(sh) AS g FROM sh),
+         sizes AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM ss GROUP BY 1),
+         inter AS (
+           SELECT a.source AS src_a, b.source AS src_b,
+             CAST(COUNT(*) AS BIGINT) AS n_inter
+           FROM ss a JOIN ss b ON a.g = b.g AND a.source < b.source
+           GROUP BY 1, 2),
+         pairs AS (
+           SELECT a.source AS src_a, a.n AS n_a, b.source AS src_b, b.n AS n_b
+           FROM sizes a JOIN sizes b ON a.source < b.source)
+         SELECT src_a, src_b, n_a, n_b,
+           COALESCE(n_inter, 0) AS n_inter,
+           ROUND(CAST(COALESCE(n_inter, 0) AS DOUBLE)
+             / CAST(n_a + n_b - COALESCE(n_inter, 0) AS DOUBLE), 6) AS jaccard,
+           ROUND(CAST(COALESCE(n_inter, 0) AS DOUBLE) / CAST(n_a AS DOUBLE), 6)
+             AS containment_a,
+           ROUND(CAST(COALESCE(n_inter, 0) AS DOUBLE) / CAST(n_b AS DOUBLE), 6)
+             AS containment_b
+         FROM pairs LEFT JOIN inter USING (src_a, src_b)""")),
+    // Blocklist scan: per-phrase overlapping-occurrence counts replayed
+    // with a position comprehension (range end < start => empty list, so
+    // docs shorter than a phrase contribute zero); rate/flag in integer
+    // math. Spark runs the same semantics in one Aho-Corasick pass.
+    Query("qt48_blocklist", TextAnalysis.blocklistScan(_, _), Some(
+      """WITH p AS (
+           SELECT unnest(['slow scan', 'hash join', 'a a', 'an', 'merge'])
+             AS ph),
+         t AS (
+           SELECT doc_id, lower(text) AS lt,
+             CAST(length(text) AS BIGINT) AS n
+           FROM documents),
+         h AS (
+           SELECT t.doc_id, p.ph,
+             CAST(len([i FOR i IN range(1, t.n - length(p.ph) + 2)
+               IF substr(t.lt, i, length(p.ph)) = p.ph]) AS BIGINT) AS c
+           FROM t CROSS JOIN p),
+         a AS (
+           SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_hits,
+             CAST(SUM(CASE WHEN c > 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_phrases
+           FROM h GROUP BY 1)
+         SELECT t.doc_id, a.n_hits, a.n_phrases,
+           a.n_hits * 10000 // GREATEST(t.n, 1) AS hits_per_10k,
+           CAST(CASE WHEN a.n_hits * 10000 // GREATEST(t.n, 1) >= 150
+             THEN 1 ELSE 0 END AS INT) AS flagged
+         FROM t JOIN a USING (doc_id)""")),
+    Query("qt49_fertility", TextAnalysis.tokenizerFertility(_, _), Some(fertilityOracleSql(8))),
+    // Heavy hitters: the CMS runtime filter is exact-output-preserving
+    // (over-count-only => no false negatives; false positives die on the
+    // exact count filter), so the oracle is the PLAIN exact HAVING query
+    // over the same bigram stream — the qt13 shared-oracle argument
+    Query("qt50_heavy_hitters", TextAnalysis.heavyHitters(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         b AS (
+           SELECT doc_id, list_distinct(list_filter(
+             [list_aggregate(words[i:i+1], 'string_agg', ' ')
+              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
+           FROM w),
+         e AS (SELECT unnest(sh) AS item FROM b),
+         t AS (SELECT GREATEST(CAST(COUNT(*) AS BIGINT) // 1000, 1) AS th
+               FROM e)
+         SELECT item, CAST(COUNT(*) AS BIGINT) AS cnt
+         FROM e GROUP BY item
+         HAVING COUNT(*) >= (SELECT th FROM t)""")),
+    Query("qt51_sketched_overlap", TextAnalysis.sketchedOverlap(_, _),
+      Some(sketchedOverlapOracleSql(256))),
+    // qt42: aggregate-of-sums ratios — exact int64 sums per source (CAST
+    // out of HUGEINT), one pinned IEEE division per ratio, round 6
+    Query("qt42_source_profile", TextAnalysis.sourceProfile, Some(
       """WITH c AS (
            SELECT source,
              CAST(length(text) AS BIGINT) AS c,
@@ -4203,54 +3645,368 @@ object SparkEntry {
            round(CAST(n_punct AS DOUBLE) / CAST(n_chars AS DOUBLE), 6) AS punct_ratio,
            round(CAST(n_digits AS DOUBLE) / CAST(n_chars AS DOUBLE), 6) AS digit_ratio,
            round(CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE), 6) AS stopword_ratio
-         FROM g""",
-    "qt1_token_count" ->
-      """SELECT doc_id,
-         len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
-         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpeish_tokens,
-         length(text) AS n_chars
-         FROM documents""",
-    "qt2_quality" ->
-      """SELECT doc_id, n_chars,
-         ROUND(length(text) / len(string_split_regex(trim(text), '\s+')), 4) AS mean_word_len,
-         ROUND(len(regexp_extract_all(text, '[\.,;:!\?]')) / CAST(length(text) AS DOUBLE), 6) AS punct_ratio,
-         ROUND(len(regexp_extract_all(text, '[0-9]')) / CAST(length(text) AS DOUBLE), 6) AS digit_ratio,
-         ROUND(len(regexp_extract_all(text, '\b(the|a|and|of|to|in|is|for|on|with)\b'))
-           / CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE), 6) AS stopword_ratio,
-         ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
-           * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]')) / CAST(length(text) AS DOUBLE)), 6) AS quality_score
-         FROM documents""",
-    "qt3_langid" ->
-      """WITH h AS (
-           SELECT doc_id, lang AS labeled_lang,
-             len(regexp_extract_all(lower(text), '\b(the|and|of|is|was|with)\b')) AS en_hits,
-             len(regexp_extract_all(lower(text), '\b(le|la|les|et|est|une)\b')) AS fr_hits,
-             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|mit)\b')) AS de_hits,
-             len(regexp_extract_all(lower(text), '\b(el|los|las|y|es|una)\b')) AS es_hits
+         FROM g""")),
+    // KMV set-operation estimates across the doc_id-parity shards, with
+    // exact ground truth riding along (the qs10 harness pattern)
+    Query("qt36_kmv_setops", TextAnalysis.kmvSetOps(_, _), Some(kmvSetOpsOracleSql(256))),
+    // script profile: every bucket replayed from unicode(ch) BETWEEN tests
+    // (ranges documented at GraftImpl.scriptProfile), dominant = the same
+    // fixed-priority first-maximal CASE, confidence the same single
+    // rounded f64 division
+    Query("qt37_script_profile", TextAnalysis.scriptProfile, Some(
+      """WITH c AS (
+           SELECT doc_id, lang,
+             [unicode(substr(text, i, 1)) FOR i IN range(1, length(text) + 1)] AS cps
+           FROM documents),
+         e AS (SELECT doc_id, lang, unnest(cps) AS cp FROM c),
+         b AS (
+           SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_cp,
+             CAST(SUM(CASE WHEN (cp BETWEEN 65 AND 90) OR (cp BETWEEN 97 AND 122)
+               OR (cp BETWEEN 192 AND 591) THEN 1 ELSE 0 END) AS BIGINT) AS latin,
+             CAST(SUM(CASE WHEN cp BETWEEN 1024 AND 1279 THEN 1 ELSE 0 END) AS BIGINT) AS cyrillic,
+             CAST(SUM(CASE WHEN cp BETWEEN 880 AND 1023 THEN 1 ELSE 0 END) AS BIGINT) AS greek,
+             CAST(SUM(CASE WHEN cp BETWEEN 1536 AND 1791 THEN 1 ELSE 0 END) AS BIGINT) AS arabic,
+             CAST(SUM(CASE WHEN cp BETWEEN 1424 AND 1535 THEN 1 ELSE 0 END) AS BIGINT) AS hebrew,
+             CAST(SUM(CASE WHEN (cp BETWEEN 19968 AND 40959) OR (cp BETWEEN 13312 AND 19903)
+               OR (cp BETWEEN 12352 AND 12543) THEN 1 ELSE 0 END) AS BIGINT) AS cjk,
+             CAST(SUM(CASE WHEN cp BETWEEN 44032 AND 55215 THEN 1 ELSE 0 END) AS BIGINT) AS hangul,
+             CAST(SUM(CASE WHEN cp BETWEEN 48 AND 57 THEN 1 ELSE 0 END) AS BIGINT) AS digit,
+             CAST(SUM(CASE WHEN cp = 32 OR cp BETWEEN 9 AND 13 THEN 1 ELSE 0 END) AS BIGINT) AS space
+           FROM e GROUP BY 1, 2)
+         SELECT doc_id, lang, n_cp, latin, cyrillic, greek, arabic, hebrew,
+           cjk, hangul, digit, space,
+           n_cp - latin - cyrillic - greek - arabic - hebrew - cjk - hangul
+             - digit - space AS other,
+           latin + cyrillic + greek + arabic + hebrew + cjk + hangul AS letter_cp,
+           CASE
+             WHEN latin + cyrillic + greek + arabic + hebrew + cjk + hangul = 0 THEN 'none'
+             WHEN latin >= GREATEST(cyrillic, greek, arabic, hebrew, cjk, hangul) THEN 'latin'
+             WHEN cyrillic >= GREATEST(greek, arabic, hebrew, cjk, hangul) THEN 'cyrillic'
+             WHEN greek >= GREATEST(arabic, hebrew, cjk, hangul) THEN 'greek'
+             WHEN arabic >= GREATEST(hebrew, cjk, hangul) THEN 'arabic'
+             WHEN hebrew >= GREATEST(cjk, hangul) THEN 'hebrew'
+             WHEN cjk >= hangul THEN 'cjk'
+             ELSE 'hangul' END AS dominant_script,
+           CASE
+             WHEN latin + cyrillic + greek + arabic + hebrew + cjk + hangul = 0 THEN 0.0
+             ELSE ROUND(
+               CAST(GREATEST(latin, cyrillic, greek, arabic, hebrew, cjk, hangul) AS DOUBLE)
+               / (latin + cyrillic + greek + arabic + hebrew + cjk + hangul), 6) END
+             AS script_frac
+         FROM b""")),
+    // decontamination rewrite: qd14's span replay pointed at the eval-gram
+    // set — islands chain at gap <= 4, spans >= 6 tokens, rebuild included
+    Query("qt38_decontam_rewrite", TextAnalysis.decontaminationRewrite(_, _), Some(
+      """WITH base AS (
+           SELECT doc_id, string_split(text, ' ') AS w,
+             len(string_split(text, ' ')) AS n
+           FROM documents),
+         g AS (
+           SELECT doc_id, i AS pos,
+             CAST('0x' || substr(md5(array_to_string(w[(i+1):(i+4)], ' ')),
+               1, 15) AS BIGINT) AS gh
+           FROM (SELECT doc_id, w,
+                   unnest(generate_series(0, CAST(n - 4 AS INT))) AS i
+                 FROM base WHERE n >= 4)),
+         ev AS (SELECT DISTINCT gh FROM g WHERE doc_id % 29 = 0),
+         h AS (
+           SELECT doc_id, pos FROM g JOIN ev USING (gh)
+           WHERE doc_id % 29 <> 0),
+         br AS (
+           SELECT doc_id, pos,
+             CASE WHEN pos - lag(pos) OVER
+                 (PARTITION BY doc_id ORDER BY pos) <= 4
+               THEN 0 ELSE 1 END AS brk
+           FROM h),
+         isl AS (
+           SELECT doc_id, pos,
+             SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
+           FROM br),
+         sp AS (
+           SELECT doc_id, MIN(pos) AS s, MAX(pos) + 4 AS e
+           FROM isl GROUP BY doc_id, grp
+           HAVING MAX(pos) + 4 - MIN(pos) >= 6),
+         agg AS (
+           SELECT doc_id, COUNT(*) AS n_spans, SUM(e - s) AS removed
+           FROM sp GROUP BY doc_id),
+         rem AS (
+           SELECT doc_id,
+             unnest(generate_series(CAST(s AS INT), CAST(e - 1 AS INT))) AS idx
+           FROM sp),
+         tok AS (
+           SELECT doc_id, i - 1 AS idx, w[i] AS tok
+           FROM (SELECT doc_id, w,
+                   unnest(generate_series(1, CAST(n AS INT))) AS i
+                 FROM base WHERE doc_id % 29 <> 0)),
+         kept AS (
+           SELECT t.doc_id, t.idx, t.tok
+           FROM tok t LEFT JOIN rem r
+             ON t.doc_id = r.doc_id AND t.idx = r.idx
+           WHERE r.idx IS NULL),
+         rebuilt AS (
+           SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS clean_text
+           FROM kept GROUP BY doc_id)
+         SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
+           CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans,
+           CAST(COALESCE(a.removed, 0) AS BIGINT) AS removed_tokens,
+           COALESCE(r.clean_text, '') AS clean_text
+         FROM base b
+         LEFT JOIN agg a USING (doc_id)
+         LEFT JOIN rebuilt r USING (doc_id)
+         WHERE b.doc_id % 29 <> 0""")),
+    // Efraimidis-Spirakis A-ES: u from the md5 lane, key = ln(u)/w with the
+    // qt16 round-to-9 discipline on both sides of the division; global
+    // top-50 by key with doc_id tie-break
+    Query("qt34_weighted_sample", TextAnalysis.weightedSample(_, _), Some(
+      """WITH d AS (
+           SELECT doc_id,
+             CAST(1 + n_chars % 64 AS BIGINT) AS weight,
+             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':wsamp'),
+               1, 15) AS BIGINT) AS h
            FROM documents)
-         SELECT doc_id, labeled_lang,
-           CASE WHEN GREATEST(en_hits, fr_hits, de_hits, es_hits) = 0 THEN 'und'
-                WHEN en_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'en'
-                WHEN fr_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'fr'
-                WHEN de_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'de'
-                ELSE 'es' END AS detected_lang,
-           en_hits, fr_hits, de_hits, es_hits,
-           CAST(CASE WHEN (CASE WHEN GREATEST(en_hits, fr_hits, de_hits, es_hits) = 0 THEN 'und'
-                WHEN en_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'en'
-                WHEN fr_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'fr'
-                WHEN de_hits = GREATEST(en_hits, fr_hits, de_hits, es_hits) THEN 'de'
-                ELSE 'es' END) = labeled_lang THEN 1 ELSE 0 END AS INT) AS lang_agree
-         FROM h""",
+         SELECT doc_id, weight,
+           ROUND(ROUND(ln((CAST(h AS DOUBLE) + 1.0)
+             / 1152921504606846976.0), 9) / weight, 9) AS es_key
+         FROM d
+         ORDER BY es_key DESC, doc_id ASC
+         LIMIT 50""")),
+    // per-language head/middle/tail thresholds as the minimal descending-
+    // cumulative crossings of ceil(n/3)/ceil(2n/3) over the (lang, score)
+    // value histogram — ties closed into the better bucket
+    Query("qt28_ccnet_buckets", TextAnalysis.ccnetBuckets, Some(lmScoreCte +
+      """,
+         d AS (
+           SELECT lmsc.doc_id, documents.lang, lmsc.avg_logp
+           FROM lmsc JOIN documents USING (doc_id)),
+         hist AS (
+           SELECT lang, avg_logp, COUNT(*) AS cnt FROM d GROUP BY 1, 2),
+         c AS (
+           SELECT lang, avg_logp, cnt,
+             SUM(cnt) OVER (PARTITION BY lang ORDER BY avg_logp DESC
+               ROWS UNBOUNDED PRECEDING) AS cum
+           FROM hist),
+         n AS (SELECT lang, SUM(cnt) AS n FROM hist GROUP BY 1),
+         th AS (
+           SELECT c.lang,
+             MAX(CASE WHEN cum >= (n.n + 2) // 3 THEN avg_logp END) AS t1,
+             MAX(CASE WHEN cum >= (2 * n.n + 2) // 3 THEN avg_logp END) AS t2
+           FROM c JOIN n USING (lang) GROUP BY c.lang)
+         SELECT d.doc_id, d.lang, d.avg_logp,
+           CASE WHEN d.avg_logp >= th.t1 THEN 'head'
+                WHEN d.avg_logp >= th.t2 THEN 'middle'
+                ELSE 'tail' END AS bucket
+         FROM d JOIN th USING (lang)""")),
+    // sequence packing: the oracle runs ONE global running-sum window over
+    // the canonical doc_id order; the Spark side runs the two-phase sharded
+    // prefix sum — equality of the two IS the correctness claim
+    Query("qt18_pack_bins", TextAnalysis.packBins(_, _), Some(
+      """WITH t AS (
+           SELECT doc_id,
+             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (
+           SELECT doc_id, n_tokens,
+             SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
+           FROM t)
+         SELECT doc_id, n_tokens,
+           CAST(cum - n_tokens AS BIGINT) AS start_offset,
+           CAST((cum - n_tokens) // 2048 AS BIGINT) AS bin_id
+         FROM c""")),
+    Query("qt19_bpe_merges", TextAnalysis.bpeMerges(_, _), Some(bpeOracleSql(8))),
+    // int8 quantization: f64-widened element math + round-half-away agree
+    // across engines; outputs are integers plus the exact max|x| scale
+    Query("qs4_int8_quant", Similarity.int8QuantStats, Some(
+      """WITH e AS (
+           SELECT vec_id, embedding,
+             list_max([abs(CAST(v AS DOUBLE)) FOR v IN embedding]) AS max_abs
+           FROM embeddings),
+         q AS (
+           SELECT vec_id, max_abs, len(embedding) AS n_dim,
+             [CASE WHEN max_abs = 0 THEN 0
+               ELSE CAST(round(CAST(embedding[i] AS DOUBLE)*127/max_abs) AS BIGINT)
+               END FOR i IN range(1, len(embedding)+1)] AS qv
+           FROM e)
+         SELECT vec_id, CAST(n_dim AS INT) AS n_dim, max_abs,
+           CAST(list_sum(qv) AS BIGINT) AS q_sum,
+           CAST(list_sum([abs(v) FOR v IN qv]) AS BIGINT) AS q_l1,
+           CAST(list_sum([qv[i]*i FOR i IN range(1, len(qv)+1)]) AS BIGINT) AS q_checksum
+         FROM q""")),
+    // int8-code ANN: normalized global-scale SQ8 codes (in-order f64 norm
+    // fold, single-IEEE-op scaling) and pure-integer dot scores — the whole
+    // approximate result hash-matches, not just an epsilon bound
+    Query("qs5_ann_int8", Similarity.annInt8(_, _), Some(
+      """WITH e AS (
+           SELECT vec_id, embedding,
+             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+               [CAST(v AS DOUBLE) * CAST(v AS DOUBLE) FOR v IN embedding]),
+               (a, b) -> a + b) AS n2
+           FROM embeddings),
+         q AS (
+           SELECT vec_id,
+             CASE WHEN n2 = 0 THEN [CAST(0 AS BIGINT) FOR v IN embedding]
+               ELSE [CAST(round(CAST(embedding[i] AS DOUBLE) * 127 / sqrt(n2)) AS BIGINT)
+                 FOR i IN range(1, len(embedding)+1)] END AS qv
+           FROM e),
+         s AS (
+           SELECT que.vec_id AS query_id, doc.vec_id AS neighbor_id,
+             CAST(list_sum([que.qv[i] * doc.qv[i]
+               FOR i IN range(1, len(doc.qv)+1)]) AS BIGINT) AS qdot
+           FROM q que JOIN q doc
+             ON que.vec_id < 5 AND doc.vec_id <> que.vec_id)
+         SELECT query_id, neighbor_id, rnk, qdot FROM (
+           SELECT query_id, neighbor_id, qdot,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY qdot DESC, neighbor_id ASC) AS rnk
+           FROM s) WHERE rnk <= 10""")),
+    // PQ/ADC ANN: codebook training, encoding, asymmetric distances, and
+    // ranking all in exact int64 fixed-point — the whole approximate result
+    // hash-matches (defaults of Similarity.annPq: m=4, ks=8, rounds=2,
+    // sampleCap=4096, nQueries=5, k=10)
+    Query("qs6_ann_pq", Similarity.annPq(_, _), Some(pqOracleSql(4, 8, 2, 4096, 5, 10))),
+    // IVF-PQ: coarse training, cells, residuals, PQ training, encoding,
+    // probes, ADC, and ranking all exact int64 — the whole two-level
+    // approximate result hash-matches (defaults of Similarity.annIvfPq:
+    // kc=8, nprobe=4, m=4, ks=8, rounds=2, sampleCap=4096, 5 queries, k=10)
+    Query("qs7_ann_ivfpq", Similarity.annIvfPq(_, _),
+      Some(ivfpqOracleSql(8, 4, 4, 8, 2, 4096, 5, 10))),
+    // the two-stage production query: the full IVF-PQ chain at shortlist
+    // width 100, then exact-cosine re-rank (list_cosine_similarity ==
+    // cosine_ff, the qs1-proven equivalence) — training to final ranking
+    // replayed end to end
+    Query("qs8_ann_rerank", Similarity.annRerank(_, _), Some(
+      (ivfpqCteSql(8, 4, 4, 8, 2, 4096, 5, 100, "shortl") +
+        """,
+         qvv AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
+         sc AS (
+           SELECT s.query_id, s.neighbor_id,
+             list_cosine_similarity(CAST(qvv.embedding AS DOUBLE[]),
+               CAST(nv.embedding AS DOUBLE[])) AS cos
+           FROM shortl s
+           JOIN qvv ON qvv.vec_id = s.query_id
+           JOIN embeddings nv ON nv.vec_id = s.neighbor_id)
+         SELECT query_id, neighbor_id, rnk, cosine FROM (
+           SELECT query_id, neighbor_id,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY cos DESC, neighbor_id ASC) AS rnk,
+             ROUND(cos, 6) AS cosine
+           FROM sc) WHERE rnk <= 10"""))),
+    Query("qt20_gopher_rules", TextAnalysis.gopherRules, Some(
+      """SELECT doc_id, word_count, mean_word_len, symbol_word_ratio,
+           bullet_line_ratio, ellipsis_line_ratio, alpha_word_ratio,
+           stop_distinct,
+           CAST(word_count BETWEEN 50 AND 100000
+             AND mean_word_len BETWEEN 3 AND 10
+             AND symbol_word_ratio <= 0.1
+             AND bullet_line_ratio < 0.9
+             AND ellipsis_line_ratio < 0.3
+             AND alpha_word_ratio >= 0.8
+             AND stop_distinct >= 2 AS INTEGER) AS passes_gopher
+         FROM (
+           SELECT doc_id,
+             CAST(len(words) AS BIGINT) AS word_count,
+             round(CAST(list_sum([length(w) FOR w IN words]) AS DOUBLE) / len(words), 4) AS mean_word_len,
+             round(len(regexp_extract_all(text, '#|\.\.\.|…')) / CAST(len(words) AS DOUBLE), 6) AS symbol_word_ratio,
+             round(len([l FOR l IN lines IF regexp_matches(l, '^\s*[-*•]')]) / CAST(len(lines) AS DOUBLE), 6) AS bullet_line_ratio,
+             round(len([l FOR l IN lines IF regexp_matches(l, '(\.\.\.|…)\s*$')]) / CAST(len(lines) AS DOUBLE), 6) AS ellipsis_line_ratio,
+             round(len([w FOR w IN words IF regexp_matches(w, '[A-Za-z]')]) / CAST(len(words) AS DOUBLE), 6) AS alpha_word_ratio,
+             CAST(regexp_matches(lower(text), '\bthe\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\bbe\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\bto\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\bof\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\band\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\bthat\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\bhave\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\bwith\b') AS BIGINT) AS stop_distinct
+           FROM (
+             SELECT doc_id, text,
+               string_split_regex(trim(text), '\s+') AS words,
+               string_split(text, chr(10)) AS lines
+             FROM documents))""")),
+    Query("qt21_dsir_weights", TextAnalysis.dsirWeights(_, _), Some(
+      """WITH w AS (
+           SELECT doc_id, lang,
+             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+           FROM documents),
+         f AS (
+           SELECT doc_id, lang, unnest(
+             ['u:' || x FOR x IN words] ||
+             ['b:' || words[i] || ' ' || words[i+1]
+              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS f
+           FROM w),
+         fb AS (
+           SELECT doc_id, lang,
+             CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 1024 AS bucket
+           FROM f),
+         cnt AS (
+           SELECT bucket, COUNT(*) AS n_raw,
+             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
+           FROM fb GROUP BY bucket),
+         tot AS (
+           SELECT COUNT(*) AS t_raw,
+             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_tgt
+           FROM fb),
+         spine AS (SELECT unnest(range(0, 1024)) AS bucket),
+         lam AS (
+           SELECT spine.bucket,
+             ROUND(ln((COALESCE(n_tgt, 0) + 1.0) / (t_tgt + 1024.0)) -
+                   ln((COALESCE(n_raw, 0) + 1.0) / (t_raw + 1024.0)), 9) AS lam
+           FROM spine LEFT JOIN cnt ON spine.bucket = cnt.bucket CROSS JOIN tot)
+         SELECT doc_id, COUNT(*) AS n_feats,
+           ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_sort(list(lam))),
+             (a, b) -> a + b), 6) AS log_weight
+         FROM fb JOIN lam USING (bucket)
+         GROUP BY doc_id""")),
+    Query("qt22_pii_redact", TextAnalysis.piiRedact, Some(
+      """WITH d AS (
+           SELECT doc_id,
+             text ||
+             CASE WHEN doc_id % 2 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR)
+               || '@ex' || CAST(doc_id % 7 AS VARCHAR) || '.com' ELSE '' END ||
+             CASE WHEN doc_id % 3 = 0 THEN ' call 555-'
+               || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-'
+               || lpad(CAST((doc_id * 3) % 10000 AS VARCHAR), 4, '0') ELSE '' END ||
+             CASE WHEN doc_id % 5 = 0 THEN ' from ' || CAST(doc_id % 256 AS VARCHAR)
+               || '.' || CAST((doc_id * 3) % 256 AS VARCHAR)
+               || '.' || CAST((doc_id * 5) % 256 AS VARCHAR)
+               || '.' || CAST((doc_id * 7) % 256 AS VARCHAR) ELSE '' END AS dirty
+           FROM documents)
+         SELECT doc_id,
+           CAST(len(regexp_extract_all(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+           CAST(len(regexp_extract_all(dirty, '\b\d{3}-\d{3}-\d{4}\b')) AS BIGINT) AS n_phones,
+           CAST(len(regexp_extract_all(dirty, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
+           regexp_replace(regexp_replace(regexp_replace(dirty,
+             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+             '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g'),
+             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS redacted,
+           CAST(len(regexp_extract_all(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
+             + CAST(len(regexp_extract_all(dirty, '\b\d{3}-\d{3}-\d{4}\b')) AS BIGINT)
+             + CAST(len(regexp_extract_all(dirty, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS pii_total
+         FROM d""")),
+    Query("qt23_bpe_encode", TextAnalysis.bpeEncode(_, _), Some(bpeEncodeOracleSql(8))),
+    // ---- embedding-space clustering / semantic dedup ----
+    Query("qc1_kmeans", Clustering.kmeansAssign(_, _), Some(kmeansOracleSql(8, 4))),
+    Query("qc2_semdedup", Clustering.semDedup(_, _), Some(semdedupOracleSql(8, 4, 2025L))),
+    Query("qc3_prototype_prune", Clustering.prototypePrune(_, _),
+      Some(prototypePruneOracleSql(8, 4))),
+    Query("qc4_kmeans_parallel", Clustering.kmeansParallel(_, _),
+      Some(kmeansParOracleSql(8, 16, 3))),
+    // k-center greedy coreset: the k-1 farthest-point picks unrolled, then
+    // the final assignment — exact int64 L2, every pick replayed
+    Query("qc5_kcenter_coreset", Clustering.kcenterCoreset(_, _), Some(kcenterOracleSql(8))),
+    Query("qc6_cluster_quality", Clustering.clusterQuality(_, _),
+      Some(clusterQualityOracleSql(8, 4))),
+    Query("qc7_silhouette", Clustering.silhouette(_, _), Some(silhouetteOracleSql(8, 4))),
+    // ---- multimodal plumbing ----
     // qm oracles REPLAY the generator's real-header payload construction
     // (PNG sig+IHDR / JPEG SOI+APP0+SOF0 prefixes with doc_id-derived
     // dimensions) byte for byte; the Spark side PARSES those bytes back, so
     // the hash match is a differential test of the header decoder
-    "qm1_binary_meta" ->
+    Query("qm1_binary_meta", Multimodal.mediaMetaSql, Some(
       s"""WITH p AS ($MediaPayloadSql)
          SELECT doc_id, octet_length(payload) AS n_bytes,
          substr(hex(payload), 1, 8) AS magic_hex
-         FROM p""",
-    "qm2_decode_meta" ->
+         FROM p""")),
+    Query("qm2_decode_meta", (s, d) => Multimodal.decodeMeta(s, d).toDF(), Some(
       s"""WITH p AS ($MediaPayloadSql),
          m AS (
            SELECT doc_id, octet_length(payload) AS n_bytes,
@@ -4274,13 +4030,45 @@ object SparkEntry {
            CAST(CASE WHEN doc_id % 6 IN (0,1,3,4) THEN 1
                 ELSE 1 + (text_bytes % 30) END AS INT) AS n_frames,
            floor(sqrt(CAST(byte_sum AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS feature_norm
-         FROM s""",
+         FROM s""")),
+    Query("qm3_frame_sample", Multimodal.sampleFrames, Some(
+      """WITH f AS (
+           SELECT doc_id,
+             CAST(CASE WHEN doc_id % 6 IN (0,1,3,4) THEN 1
+               ELSE 1 + (octet_length(encode(text)) % 30) END AS INT) AS n_frames
+           FROM documents)
+         SELECT doc_id, n_frames, frame_idx,
+           CAST(doc_id AS VARCHAR) || '#' || CAST(frame_idx AS VARCHAR) AS frame_key
+         FROM (SELECT doc_id, n_frames,
+                 unnest(range(0, CAST(n_frames AS BIGINT), 10)) AS frame_idx
+               FROM f)""")),
+    // the reference's letterbox preprocessing math over the decoded meta
+    Query("qm4_letterbox", Multimodal.letterboxSpecs(_, _), Some(
+      """WITH m AS (
+           SELECT doc_id, octet_length(encode(text)) AS n_bytes FROM documents),
+         dims AS (
+           SELECT doc_id,
+             CAST(CASE WHEN doc_id % 6 IN (0,1,3,4) THEN 100 + doc_id % 1800
+               ELSE 64 + (n_bytes % 512) END AS INT) AS width,
+             CAST(CASE WHEN doc_id % 6 IN (0,1,3,4) THEN 80 + (doc_id * 7) % 1000
+               ELSE 64 + ((n_bytes // 7) % 512) END AS INT) AS height
+           FROM m),
+         s AS (
+           SELECT doc_id, width, height,
+             LEAST(1024.0 / width, 1024.0 / height) AS r,
+             CAST(round(width * LEAST(1024.0 / width, 1024.0 / height)) AS INT) AS new_w,
+             CAST(round(height * LEAST(1024.0 / width, 1024.0 / height)) AS INT) AS new_h
+           FROM dims)
+         SELECT doc_id, width, height, round(r, 6) AS scale, new_w, new_h,
+           CAST(1024 - new_w AS INT) AS pad_x, CAST(1024 - new_h AS INT) AS pad_y,
+           round(144.0 / 255.0, 6) AS pad_fill
+         FROM s""")),
     // audio: the oracle recomputes the doc_id-derived WAV parameters from
     // the generator formula; the Spark side PARSES the RIFF/WAVE bytes back,
     // so the hash match is a differential test of the chunk-scan parser
     // (n_bytes = 12 RIFF + 24 fmt + 8 data header + text, +14 for the odd
     // rows' padded LIST filler chunk)
-    "qm5_audio_meta" ->
+    Query("qm5_audio_meta", (s, d) => Multimodal.audioMeta(s, d).toDF(), Some(
       """WITH d AS (
            SELECT doc_id, octet_length(encode(text)) AS tb,
              CAST(1 + doc_id % 2 AS INT) AS channels,
@@ -4293,13 +4081,13 @@ object SparkEntry {
            CAST(tb // (channels * 2) AS BIGINT) AS n_samples,
            CAST((tb // (channels * 2)) * 1000 // sample_rate AS BIGINT)
              AS duration_ms
-         FROM d""",
+         FROM d""")),
     // video: the oracle recomputes the doc_id-derived MP4 parameters from
     // the generator formula; the Spark side walks the real ISO-BMFF boxes
     // (ftyp brand, moov/mvhd timescale+duration, trak/tkhd 16.16 dims), so
     // the hash match is a differential test of the box parser
     // (n_bytes = 16 ftyp + 216 moov + 8 mdat header + text)
-    "qm6_video_meta" ->
+    Query("qm6_video_meta", (s, d) => Multimodal.videoMeta(s, d).toDF(), Some(
       """WITH d AS (
            SELECT doc_id, octet_length(encode(text)) AS tb FROM documents)
          SELECT doc_id,
@@ -4311,7 +4099,7 @@ object SparkEntry {
            CAST(240 + (doc_id % 9) * 16 AS INT) AS height,
            CAST((tb * 40 * 1000) // (1000 * (1 + doc_id % 3)) AS BIGINT)
              AS duration_ms
-         FROM d""",
+         FROM d""")),
     // real pixel decode: the oracle recomputes every pixel from the qm7
     // closed form (doc_id, x, y) — arithmetic only, no codec — while the
     // Spark side round-trips real zlib'd PNG bytes (encode -> chunk-walk +
@@ -4322,7 +4110,7 @@ object SparkEntry {
     // codec — integer floor binning to the 9x8 grid, a full block spine
     // (empty blocks coalesce to 0 — a width-8 image leaves column 8
     // empty), exact cross-multiplied mean compares, halves as uint32
-    "qm8_image_dhash" ->
+    Query("qm8_image_dhash", Multimodal.imageDhash, Some(
       """WITH d AS (
            SELECT doc_id, 8 + doc_id % 17 AS w, 8 + (doc_id * 3) % 13 AS h
            FROM documents),
@@ -4362,13 +4150,141 @@ object SparkEntry {
              THEN bit * (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT)
              AS fp_lo,
            '' AS error
-         FROM bits GROUP BY 1, 2, 3""",
+         FROM bits GROUP BY 1, 2, 3""")),
+    // qm9: the near-dup JOIN replayed with neither codec nor blocking —
+    // fingerprints recomputed per (doc, variant) from the closed form
+    // (variant 1 clamps LEAST(r+8, 255): the saturation that makes the
+    // re-export a NEAR dup), then ALL pairs brute-forced at Hamming <= 8.
+    // Matching the blocked Spark result proves the Manku 2-of-10-block
+    // bucket join lossless at the threshold on every run (qd17's claim,
+    // multimodal leg). Hamming = per-half bit_count(xor) — no signed
+    // 64-bit packing on either engine.
+    Query("qm9_image_neardup", Multimodal.imageNearDupPairs(_, _), Some(
+      """WITH d AS (
+           SELECT doc_id, 8 + doc_id % 17 AS w, 8 + (doc_id * 3) % 13 AS h
+           FROM documents),
+         imgs AS (
+           SELECT d.doc_id, d.w, d.h, d.doc_id * 2 + vv.var AS img_id, vv.var
+           FROM d, (SELECT unnest([0, 1]) AS var) vv),
+         px AS (SELECT img_id, doc_id, var, w, h,
+                  unnest(range(0, w * h)) AS p FROM imgs),
+         vals AS (
+           SELECT img_id,
+             ((p % w) * 9) // w AS cx, ((p // w) * 8) // h AS ry,
+             CASE WHEN var = 1
+               THEN LEAST((7 * doc_id + 13 * (p % w) + 31 * (p // w)) % 256 + 8, 255)
+               ELSE (7 * doc_id + 13 * (p % w) + 31 * (p // w)) % 256 END
+               + (11 * doc_id + 17 * (p % w) + 5 * (p // w)) % 256
+               + (3 * doc_id + 29 * (p % w) + 23 * (p // w)) % 256 AS gray
+           FROM px),
+         bsum AS (
+           SELECT img_id, ry, cx, CAST(SUM(gray) AS BIGINT) AS s,
+             CAST(COUNT(*) AS BIGINT) AS c
+           FROM vals GROUP BY 1, 2, 3),
+         spine AS (
+           SELECT imgs.img_id, rr.ry, cc.cx
+           FROM imgs, (SELECT unnest(range(0, 8)) AS ry) rr,
+                (SELECT unnest(range(0, 9)) AS cx) cc),
+         g AS (
+           SELECT spine.img_id, spine.ry, spine.cx,
+             COALESCE(bsum.s, 0) AS s, COALESCE(bsum.c, 0) AS c
+           FROM spine LEFT JOIN bsum
+             ON spine.img_id = bsum.img_id AND spine.ry = bsum.ry
+               AND spine.cx = bsum.cx),
+         bits AS (
+           SELECT a.img_id, a.ry * 8 + a.cx AS i,
+             CASE WHEN b.s * a.c > a.s * b.c THEN 1 ELSE 0 END AS bit
+           FROM g a JOIN g b
+             ON a.img_id = b.img_id AND a.ry = b.ry AND b.cx = a.cx + 1
+           WHERE a.cx <= 7),
+         fp AS (
+           SELECT img_id,
+             CAST(SUM(CASE WHEN i >= 32
+               THEN bit * (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT)
+               AS hi,
+             CAST(SUM(CASE WHEN i < 32
+               THEN bit * (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS lo
+           FROM bits GROUP BY 1)
+         SELECT a.img_id AS img_a, b.img_id AS img_b,
+           a.img_id // 2 AS doc_a, b.img_id // 2 AS doc_b,
+           CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
+             AS BIGINT) AS hamming
+         FROM fp a JOIN fp b ON a.img_id < b.img_id
+         WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 8""")),
+    // qm10: the audio frame features recomputed from the sample closed
+    // form with NO parser — integer frame binning i*9//n, exact int64
+    // energies, cross-multiplied fingerprint bits, lag-join zero
+    // crossings. Parity covers the WAV write -> chunk scan -> LE PCM
+    // decode path end to end (the qm7 discipline, audio leg).
+    Query("qm10_audio_fingerprint", Multimodal.audioFingerprint, Some(
+      """WITH d AS (
+           SELECT doc_id, 256 + doc_id % 257 AS n FROM documents),
+         sm AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM d),
+         s AS (
+           SELECT doc_id, n, i,
+             (137 * doc_id + 4099 * i) % 65536 - 32768 AS v
+           FROM sm),
+         fr AS (
+           SELECT doc_id, (i * 9) // n AS f,
+             CAST(SUM(v * v) AS BIGINT) AS e, CAST(COUNT(*) AS BIGINT) AS c
+           FROM s GROUP BY 1, 2),
+         spine AS (
+           SELECT d.doc_id, ff.f
+           FROM d, (SELECT unnest(range(0, 9)) AS f) ff),
+         g AS (
+           SELECT spine.doc_id, spine.f,
+             COALESCE(fr.e, 0) AS e, COALESCE(fr.c, 0) AS c
+           FROM spine LEFT JOIN fr
+             ON spine.doc_id = fr.doc_id AND spine.f = fr.f),
+         bits AS (
+           SELECT a.doc_id, a.f AS i,
+             CASE WHEN b.e * a.c > a.e * b.c THEN 1 ELSE 0 END AS bit
+           FROM g a JOIN g b ON a.doc_id = b.doc_id AND b.f = a.f + 1
+           WHERE a.f <= 7),
+         fp AS (
+           SELECT doc_id,
+             CAST(SUM(bit * (CAST(1 AS BIGINT) << i)) AS BIGINT) AS fp
+           FROM bits GROUP BY 1),
+         zc AS (
+           SELECT a.doc_id,
+             CAST(SUM(CASE WHEN (a.v < 0) <> (b.v < 0) THEN 1 ELSE 0 END)
+               AS BIGINT) AS z
+           FROM s a JOIN s b ON a.doc_id = b.doc_id AND b.i = a.i - 1
+           GROUP BY 1),
+         tot AS (
+           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS ns,
+             CAST(SUM(v * v) AS BIGINT) AS energy
+           FROM s GROUP BY 1)
+         SELECT d.doc_id, tot.ns AS n_samples, zc.z AS zero_crossings,
+           tot.energy AS energy, fp.fp AS fp, '' AS error
+         FROM d JOIN tot ON tot.doc_id = d.doc_id
+           JOIN zc ON zc.doc_id = d.doc_id
+           JOIN fp ON fp.doc_id = d.doc_id""")),
+    Query("qm7_png_pixels", Multimodal.pngPixelStats, Some(
+      """WITH d AS (
+           SELECT doc_id, 8 + doc_id % 17 AS w, 8 + (doc_id * 3) % 13 AS h
+           FROM documents),
+         px AS (SELECT doc_id, w, h, unnest(range(0, w * h)) AS p FROM d),
+         v AS (
+           SELECT doc_id, w, h, p,
+             (7 * doc_id + 13 * (p % w) + 31 * (p // w)) % 256 AS r,
+             (11 * doc_id + 17 * (p % w) + 5 * (p // w)) % 256 AS g,
+             (3 * doc_id + 29 * (p % w) + 23 * (p // w)) % 256 AS b
+           FROM px)
+         SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(COUNT(*) AS BIGINT) AS n_px,
+           CAST(SUM(r) AS BIGINT) AS sum_r,
+           CAST(SUM(g) AS BIGINT) AS sum_g,
+           CAST(SUM(b) AS BIGINT) AS sum_b,
+           CAST(SUM((r * 65536 + g * 256 + b) * (p + 1)) AS BIGINT) AS pix_fp,
+           '' AS error
+         FROM v GROUP BY 1, 2, 3""")),
     // qm11: scene cuts — the qm8 dHash bit replay extended with a frame
     // dimension (pid = doc_id*1009 + content run index), consecutive
     // frames lag-joined, distance = per-half bit_count(xor); the oracle
     // recomputes every bit from the pixel closed form with NO codec, so
     // the hash gate covers the per-frame encode->decode->dHash round trip
-    "qm11_scene_cuts" ->
+    Query("qm11_scene_cuts", Multimodal.sceneCuts(_, _), Some(
       """WITH d AS (
            SELECT doc_id, 8 + doc_id % 17 AS w, 8 + (doc_id * 3) % 13 AS h,
              3 + doc_id % 4 AS nf
@@ -4421,172 +4337,20 @@ object SparkEntry {
              AS BIGINT) AS dist,
            (bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))) >= 16
              AS is_cut
-         FROM fp a JOIN fp b ON a.doc_id = b.doc_id AND b.f = a.f - 1""",
-    // qm10: the audio frame features recomputed from the sample closed
-    // form with NO parser — integer frame binning i*9//n, exact int64
-    // energies, cross-multiplied fingerprint bits, lag-join zero
-    // crossings. Parity covers the WAV write -> chunk scan -> LE PCM
-    // decode path end to end (the qm7 discipline, audio leg).
-    "qm10_audio_fingerprint" ->
-      """WITH d AS (
-           SELECT doc_id, 256 + doc_id % 257 AS n FROM documents),
-         sm AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM d),
-         s AS (
-           SELECT doc_id, n, i,
-             (137 * doc_id + 4099 * i) % 65536 - 32768 AS v
-           FROM sm),
-         fr AS (
-           SELECT doc_id, (i * 9) // n AS f,
-             CAST(SUM(v * v) AS BIGINT) AS e, CAST(COUNT(*) AS BIGINT) AS c
-           FROM s GROUP BY 1, 2),
-         spine AS (
-           SELECT d.doc_id, ff.f
-           FROM d, (SELECT unnest(range(0, 9)) AS f) ff),
-         g AS (
-           SELECT spine.doc_id, spine.f,
-             COALESCE(fr.e, 0) AS e, COALESCE(fr.c, 0) AS c
-           FROM spine LEFT JOIN fr
-             ON spine.doc_id = fr.doc_id AND spine.f = fr.f),
-         bits AS (
-           SELECT a.doc_id, a.f AS i,
-             CASE WHEN b.e * a.c > a.e * b.c THEN 1 ELSE 0 END AS bit
-           FROM g a JOIN g b ON a.doc_id = b.doc_id AND b.f = a.f + 1
-           WHERE a.f <= 7),
-         fp AS (
-           SELECT doc_id,
-             CAST(SUM(bit * (CAST(1 AS BIGINT) << i)) AS BIGINT) AS fp
-           FROM bits GROUP BY 1),
-         zc AS (
-           SELECT a.doc_id,
-             CAST(SUM(CASE WHEN (a.v < 0) <> (b.v < 0) THEN 1 ELSE 0 END)
-               AS BIGINT) AS z
-           FROM s a JOIN s b ON a.doc_id = b.doc_id AND b.i = a.i - 1
-           GROUP BY 1),
-         tot AS (
-           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS ns,
-             CAST(SUM(v * v) AS BIGINT) AS energy
-           FROM s GROUP BY 1)
-         SELECT d.doc_id, tot.ns AS n_samples, zc.z AS zero_crossings,
-           tot.energy AS energy, fp.fp AS fp, '' AS error
-         FROM d JOIN tot ON tot.doc_id = d.doc_id
-           JOIN zc ON zc.doc_id = d.doc_id
-           JOIN fp ON fp.doc_id = d.doc_id""",
-    // qm9: the near-dup JOIN replayed with neither codec nor blocking —
-    // fingerprints recomputed per (doc, variant) from the closed form
-    // (variant 1 clamps LEAST(r+8, 255): the saturation that makes the
-    // re-export a NEAR dup), then ALL pairs brute-forced at Hamming <= 8.
-    // Matching the blocked Spark result proves the Manku 2-of-10-block
-    // bucket join lossless at the threshold on every run (qd17's claim,
-    // multimodal leg). Hamming = per-half bit_count(xor) — no signed
-    // 64-bit packing on either engine.
-    "qm9_image_neardup" ->
-      """WITH d AS (
-           SELECT doc_id, 8 + doc_id % 17 AS w, 8 + (doc_id * 3) % 13 AS h
-           FROM documents),
-         imgs AS (
-           SELECT d.doc_id, d.w, d.h, d.doc_id * 2 + vv.var AS img_id, vv.var
-           FROM d, (SELECT unnest([0, 1]) AS var) vv),
-         px AS (SELECT img_id, doc_id, var, w, h,
-                  unnest(range(0, w * h)) AS p FROM imgs),
-         vals AS (
-           SELECT img_id,
-             ((p % w) * 9) // w AS cx, ((p // w) * 8) // h AS ry,
-             CASE WHEN var = 1
-               THEN LEAST((7 * doc_id + 13 * (p % w) + 31 * (p // w)) % 256 + 8, 255)
-               ELSE (7 * doc_id + 13 * (p % w) + 31 * (p // w)) % 256 END
-               + (11 * doc_id + 17 * (p % w) + 5 * (p // w)) % 256
-               + (3 * doc_id + 29 * (p % w) + 23 * (p // w)) % 256 AS gray
-           FROM px),
-         bsum AS (
-           SELECT img_id, ry, cx, CAST(SUM(gray) AS BIGINT) AS s,
-             CAST(COUNT(*) AS BIGINT) AS c
-           FROM vals GROUP BY 1, 2, 3),
-         spine AS (
-           SELECT imgs.img_id, rr.ry, cc.cx
-           FROM imgs, (SELECT unnest(range(0, 8)) AS ry) rr,
-                (SELECT unnest(range(0, 9)) AS cx) cc),
-         g AS (
-           SELECT spine.img_id, spine.ry, spine.cx,
-             COALESCE(bsum.s, 0) AS s, COALESCE(bsum.c, 0) AS c
-           FROM spine LEFT JOIN bsum
-             ON spine.img_id = bsum.img_id AND spine.ry = bsum.ry
-               AND spine.cx = bsum.cx),
-         bits AS (
-           SELECT a.img_id, a.ry * 8 + a.cx AS i,
-             CASE WHEN b.s * a.c > a.s * b.c THEN 1 ELSE 0 END AS bit
-           FROM g a JOIN g b
-             ON a.img_id = b.img_id AND a.ry = b.ry AND b.cx = a.cx + 1
-           WHERE a.cx <= 7),
-         fp AS (
-           SELECT img_id,
-             CAST(SUM(CASE WHEN i >= 32
-               THEN bit * (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT)
-               AS hi,
-             CAST(SUM(CASE WHEN i < 32
-               THEN bit * (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS lo
-           FROM bits GROUP BY 1)
-         SELECT a.img_id AS img_a, b.img_id AS img_b,
-           a.img_id // 2 AS doc_a, b.img_id // 2 AS doc_b,
-           CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
-             AS BIGINT) AS hamming
-         FROM fp a JOIN fp b ON a.img_id < b.img_id
-         WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 8""",
-    "qm7_png_pixels" ->
-      """WITH d AS (
-           SELECT doc_id, 8 + doc_id % 17 AS w, 8 + (doc_id * 3) % 13 AS h
-           FROM documents),
-         px AS (SELECT doc_id, w, h, unnest(range(0, w * h)) AS p FROM d),
-         v AS (
-           SELECT doc_id, w, h, p,
-             (7 * doc_id + 13 * (p % w) + 31 * (p // w)) % 256 AS r,
-             (11 * doc_id + 17 * (p % w) + 5 * (p // w)) % 256 AS g,
-             (3 * doc_id + 29 * (p % w) + 23 * (p // w)) % 256 AS b
-           FROM px)
-         SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(COUNT(*) AS BIGINT) AS n_px,
-           CAST(SUM(r) AS BIGINT) AS sum_r,
-           CAST(SUM(g) AS BIGINT) AS sum_g,
-           CAST(SUM(b) AS BIGINT) AS sum_b,
-           CAST(SUM((r * 65536 + g * 256 + b) * (p + 1)) AS BIGINT) AS pix_fp,
-           '' AS error
-         FROM v GROUP BY 1, 2, 3""",
-    "qm3_frame_sample" ->
-      """WITH f AS (
-           SELECT doc_id,
-             CAST(CASE WHEN doc_id % 6 IN (0,1,3,4) THEN 1
-               ELSE 1 + (octet_length(encode(text)) % 30) END AS INT) AS n_frames
-           FROM documents)
-         SELECT doc_id, n_frames, frame_idx,
-           CAST(doc_id AS VARCHAR) || '#' || CAST(frame_idx AS VARCHAR) AS frame_key
-         FROM (SELECT doc_id, n_frames,
-                 unnest(range(0, CAST(n_frames AS BIGINT), 10)) AS frame_idx
-               FROM f)""",
-    // the reference's letterbox preprocessing math over the decoded meta
-    "qm4_letterbox" ->
-      """WITH m AS (
-           SELECT doc_id, octet_length(encode(text)) AS n_bytes FROM documents),
-         dims AS (
-           SELECT doc_id,
-             CAST(CASE WHEN doc_id % 6 IN (0,1,3,4) THEN 100 + doc_id % 1800
-               ELSE 64 + (n_bytes % 512) END AS INT) AS width,
-             CAST(CASE WHEN doc_id % 6 IN (0,1,3,4) THEN 80 + (doc_id * 7) % 1000
-               ELSE 64 + ((n_bytes // 7) % 512) END AS INT) AS height
-           FROM m),
-         s AS (
-           SELECT doc_id, width, height,
-             LEAST(1024.0 / width, 1024.0 / height) AS r,
-             CAST(round(width * LEAST(1024.0 / width, 1024.0 / height)) AS INT) AS new_w,
-             CAST(round(height * LEAST(1024.0 / width, 1024.0 / height)) AS INT) AS new_h
-           FROM dims)
-         SELECT doc_id, width, height, round(r, 6) AS scale, new_w, new_h,
-           CAST(1024 - new_w AS INT) AS pad_x, CAST(1024 - new_h AS INT) AS pad_y,
-           round(144.0 / 255.0, 6) AS pad_fill
-         FROM s""",
+         FROM fp a JOIN fp b ON a.doc_id = b.doc_id AND b.f = a.f - 1""")),
+    // ---- extraction engine (goldens are the oracle; rows-only here) ----
+    Query("qx1_extract_text", (s, _) =>
+      extractedCorpus(s).select(col("url"), col("extracted_text"), col("n_blocks")), None),
+    // S7 debug-overlay sink as spec rows (draw_blocks geometry; golden-pinned
+    // upstream, no DuckDB-expressible oracle for a generated corpus)
+    Query("qx3_overlay_specs", (s, _) => ExtractJob.overlaySpecs(extractedCorpus(s)), None),
+    // the overlay/crop geometry EXPRESSIONS under the DuckDB gate (qx3's
+    // blocks_json inputs are golden-pinned; this closes the chain)
     // overlay/crop geometry replay: trunc() makes DuckDB's REAL->INT cast
     // truncate toward zero like Spark's (DuckDB CAST alone rounds); the
     // quarter-fraction synthetic coordinates are exact in f32/f64 so every
     // cast lands on the same integer in both engines
-    "qx4_overlay_math" ->
+    Query("qx4_overlay_math", ExtractJob.overlayMathTable, Some(
       """WITH b AS (
            SELECT doc_id,
              CAST(doc_id % 700 - 25 + 0.25 AS REAL) AS x0,
@@ -4608,34 +4372,15 @@ object SparkEntry {
            CAST(GREATEST(floor(y0 - 5), 0) AS INT) AS crop_y,
            LEAST(CAST(trunc(GREATEST(x1 - x0, 1)) AS INT) + 10, 612) AS crop_width,
            LEAST(CAST(trunc(GREATEST(y1 - y0, 1)) AS INT) + 10, 792) AS crop_height
-         FROM b""",
-    "qt4_fingerprint" ->
-      """SELECT doc_id,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS md5_fp
-         FROM documents""",
-    // MIPS: brute-force inner-product ranking; dot_ff's left-to-right f64
-    // fold == list_inner_product on the CAST DOUBLE[] arrays
-    "qs9_mips" ->
-      """SELECT query_id, neighbor_id, rnk, inner_product FROM (
-           SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY q.vec_id
-               ORDER BY list_inner_product(CAST(q.embedding AS DOUBLE[]),
-                 CAST(e.embedding AS DOUBLE[])) DESC, e.vec_id ASC) AS rnk,
-             ROUND(list_inner_product(CAST(q.embedding AS DOUBLE[]),
-               CAST(e.embedding AS DOUBLE[])), 6) AS inner_product
-           FROM embeddings q, embeddings e
-           WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id)
-         WHERE rnk <= 10""",
-    "qs2_ann_lsh" ->
-      """SELECT query_id, neighbor_id, rnk, cosine FROM (
-           SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                 CAST(e.embedding AS DOUBLE[])) DESC, e.vec_id ASC) AS rnk,
-             ROUND(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-               CAST(e.embedding AS DOUBLE[])), 6) AS cosine
-           FROM embeddings q, embeddings e
-           WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id)
-         WHERE rnk <= 10"""
+         FROM b""")),
+    Query("qx2_extract_stats", (s, _) =>
+      extractedCorpus(s)
+        .withColumn("family", element_at(split(col("url"), "/"), 4))
+        .groupBy(col("family"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_blocks")).as("n_blocks"),
+          sum(col("need_ocr_pages")).as("ocr_pages"),
+          sum(when(col("parse_status") === "ok", 1).otherwise(0)).as("ok_docs")),
+      None)
   )
 }

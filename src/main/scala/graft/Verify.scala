@@ -1,11 +1,31 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1, naming
+  * them, when any query failed; every other dump and oracle_sql.json are
+  * still written. */
 object Verify {
+
+  /** The entries a SPARK_GRAFT_ONLY value selects: all of them when unset.
+    * A name outside the registry is rejected, so a typo cannot dump nothing
+    * and pass. */
+  private[graft] def select(only: Option[String]): Vector[SparkEntry.Query] =
+    only.fold(SparkEntry.registry) { spec =>
+      val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- SparkEntry.queries.keySet
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY='$spec' selects no query")
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names unknown queries: " +
+        unknown.toSeq.sorted.mkString(", "))
+      SparkEntry.registry.filter(q => names(q.name))
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev loop: SPARK_GRAFT_ONLY=qs3_ann_ivf,qd2_minhash_sigs re-dumps a
+    // subset (the driver leaves it unset -> all queries)
+    val selected = select(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -15,17 +35,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev loop: SPARK_GRAFT_ONLY=qs3_ann_ivf,qd2_minhash_sigs re-dumps a
-    // subset (the driver leaves it unset -> all queries)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed = selected.flatMap { q =>
+      try {
+        q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
+        None
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        Some(q.name)
       }
     }
     // Cap-parity status differs by query family: qd4/qd6/qd8's oracles
@@ -47,7 +64,7 @@ object Verify {
           s"[verify] note: $oversizeNgram ngram blocks over the cap at " +
             s"$sfDir — qd4/qd6/qd8 oracles replay the cap, parity holds; " +
             "coverage of those blocks is skipped on BOTH sides")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[verify] oversize diagnostics failed: ${e.getMessage}")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -66,5 +83,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${selected.size} " +
+        s"queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

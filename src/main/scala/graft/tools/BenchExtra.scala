@@ -1,9 +1,10 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.SparkEntry
 
 /** Optimization-round measurement harness (guide §1.4): times a SUBSET of
-  * SparkEntry.queries with the same methodology as the frozen Bench.scala
+  * SparkEntry.registry with the same methodology as the frozen Bench.scala
   * (same session config, same noop sink, same sort order), plus per-query
   * /proc/stat steal telemetry so a noisy window can't masquerade as a
   * regression or a win. Optionally dumps .explain("formatted") per query.
@@ -45,12 +46,27 @@ object BenchExtra {
       }
     }
 
+  /** The registry entries whose names start with one of `prefixes` (all
+    * when None), sorted by name like Bench; a prefix that matches no entry
+    * fails, named, instead of timing nothing.
+    */
+  private[graft] def select(prefixes: Option[Set[String]]): Vector[SparkEntry.Query] = {
+    val all = SparkEntry.registry.sortBy(_.name)
+    prefixes.fold(all) { ps =>
+      val unmatched = ps.filterNot(p => all.exists(_.name.startsWith(p)))
+      require(unmatched.isEmpty,
+        s"no query name starts with: ${unmatched.toSeq.sorted.mkString(", ")}")
+      all.filter(q => ps.exists(q.name.startsWith))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = if (args.length > 0) args(0).toInt else 1
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").map(_.trim).toSet) else None
+    val qs = select(only)
     val explainDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "before")
 
@@ -82,9 +98,6 @@ object BenchExtra {
     spark.read.parquet(s"$sfDir/region.parquet").count()
     spark.range(1000).write.format("noop").mode("overwrite").save()
 
-    val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-
     // Stall watchdog (guide §7.3): if a query's rep exceeds 8 s, print the
     // main thread's stack every 4 s so a driver-side stall (planning,
     // codegen, a blocking await) is attributable. Daemon thread; no effect
@@ -108,7 +121,7 @@ object BenchExtra {
     val out = new StringBuilder
     out.append("{")
     var first = true
-    qs.foreach { case (name, fn) =>
+    qs.foreach { case SparkEntry.Query(name, fn, _) =>
       spark.sparkContext.setJobDescription(name)
       val times = (1 to reps).map { _ =>
         val st0 = stolenCpuSeconds()

@@ -19,8 +19,8 @@ object QueryProbe {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val doExplain = args.length > 3 && args(3) == "explain"
-    val fn = SparkEntry.queries.getOrElse(name,
-      sys.error(s"unknown query $name; have: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+    val fn = SparkEntry.registry.find(_.name == name).map(_.run).getOrElse(
+      sys.error(s"unknown query $name; have: ${SparkEntry.registry.map(_.name).sorted.mkString(", ")}"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -4,18 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Driver-contract invariants that a typo would otherwise surface only in
-  * the (slow, external) correctness gate: every oracle belongs to a real
-  * query, and the no-oracle set is exactly the four documented exceptions.
+  * the (slow, external) correctness gate: registry names are unique, and
+  * the no-oracle set is exactly the four documented exceptions.
   */
 class ContractSpec extends AnyFunSuite {
 
-  test("every oracleSql key names a queries() entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without a query: $orphans")
+  test("registry names are unique") {
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (name, qs) if qs.length > 1 => name }
+    assert(dups.isEmpty, s"registered more than once: $dups")
   }
 
   test("the no-oracle set is exactly the documented four") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    val noOracle = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name).toSet
     assert(noOracle == Set("qs3_ann_ivf",
       "qx1_extract_text", "qx2_extract_stats", "qx3_overlay_specs"),
       s"undocumented no-oracle queries: $noOracle")
@@ -39,7 +40,7 @@ class ContractSpec extends AnyFunSuite {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     val fromJoin = "(?i)(?:FROM|JOIN)\\s+([a-z_][a-z0-9_]*)".r
-    for ((name, sql) <- SparkEntry.oracleSql) {
+    for (SparkEntry.Query(name, _, Some(sql)) <- SparkEntry.registry) {
       // collect base-relation identifiers; CTE names defined in the SQL
       // itself are legal too
       // CTE heads: `name AS (`, the recursive `name(col, ...) AS (` form,

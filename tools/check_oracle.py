@@ -3,6 +3,7 @@
 DuckDB over the sfDir parquet tables and compare against the Spark result
 parquet dumped by graft.Verify. Comparison: sort columns by name, sort rows,
 compare canonicalized values (floats to 9 significant digits).
+Exits 1 when any query fails or when no query was compared at all.
 Usage: check_oracle.py <sfDir> <verifyOutDir>
 """
 import glob, json, math, os, sys
@@ -33,12 +34,13 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_ok = n_bad = 0
+    n_ok = n_bad = n_skip = 0
     for name, sql in sorted(oracle.items()):
         # under SPARK_GRAFT_ONLY only a subset is dumped: skip the (often
         # slow) oracle entirely when there is no Spark result to compare
         if not glob.glob(f"{out_dir}/{name}/*.parquet"):
             print(f"SKIP {name}: no Spark dump in {out_dir}")
+            n_skip += 1
             continue
         try:
             duck = con.execute(sql)
@@ -99,7 +101,10 @@ def main(sf_dir, out_dir):
         else:
             print(f"OK   {name}: {len(sr)} rows")
             n_ok += 1
-    print(f"\n{n_ok} ok, {n_bad} failed")
+    print(f"\n{n_ok} ok, {n_bad} failed, {n_skip} skipped")
+    if n_ok + n_bad == 0:
+        print(f"no query compared: {out_dir} holds no Spark dumps")
+        return 1
     return 1 if n_bad else 0
 
 if __name__ == "__main__":
